@@ -257,8 +257,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # (user_sessions retired in round 5: the driver checks at most 50
     # queries, and its lag-window shape is covered by latest_event_per_user
-    # (ranking window) + the temporal as-of/range joins; gap-sessionization
-    # itself stays pytest-covered.  Freed the slot for ingest_shard_summary
+    # (ranking window) + the temporal as-of/range joins.  Gap-sessionization
+    # itself was retired with it: the query was its only implementation, and
+    # no pytest covers it.  Freed the slot for ingest_shard_summary
     # — VERDICT r4's "no new operator without a driver row" policy applied
     # to plans/ingest.py.)
 
@@ -278,38 +279,47 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         schedule, Murmur3 band buckets, committed-state accumulation).
         Reference semantic anchor: resume/merge at
         /root/reference/src/extractor.py:46-104, here at shard granularity."""
+        import shutil
         import tempfile
 
         from ontology_pipeline_spark.plans.ingest import ParquetStateStore, ingest_shard
 
         docs = _t(spark, sf, "documents")
         part = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(2))
-        store = ParquetStateStore(tempfile.mkdtemp(prefix="ingest_state_"))
-        for i in (0, 1):
-            ingest_shard(
-                spark,
-                docs.filter(part == F.lit(i)),
-                shard_id=f"shard_{i:03d}",
-                store=store,
+        # the state store lives in a directory scoped to this call, removed
+        # before it returns (the result is pinned first); the hot-bucket cap
+        # is off (max_bucket_size=None) because the replay models none
+        root = tempfile.mkdtemp(prefix="ingest_state_")
+        try:
+            store = ParquetStateStore(root)
+            for i in (0, 1):
+                ingest_shard(
+                    spark,
+                    docs.filter(part == F.lit(i)),
+                    shard_id=f"shard_{i:03d}",
+                    store=store,
+                    max_bucket_size=None,
+                )
+            counters = ["total_docs", "exact_survivors", "intra_survivors", "new_docs"]
+            surv = (
+                spark.read.parquet(store.documents_path)
+                .join(store.committed_shards(spark), "shard_id", "left_semi")
+                .select(
+                    F.lit("survivor").alias("kind"),
+                    "shard_id",
+                    "doc_id",
+                    *[F.lit(None).cast("long").alias(c) for c in counters],
+                )
             )
-        counters = ["total_docs", "exact_survivors", "intra_survivors", "new_docs"]
-        surv = (
-            spark.read.parquet(store.documents_path)
-            .join(store.committed_shards(spark), "shard_id", "left_semi")
-            .select(
-                F.lit("survivor").alias("kind"),
+            lineage = store.read_lineage(spark).select(
+                F.lit("lineage").alias("kind"),
                 "shard_id",
-                "doc_id",
-                *[F.lit(None).cast("long").alias(c) for c in counters],
+                F.lit(None).cast("long").alias("doc_id"),
+                *counters,
             )
-        )
-        lineage = store.read_lineage(spark).select(
-            F.lit("lineage").alias("kind"),
-            "shard_id",
-            F.lit(None).cast("long").alias("doc_id"),
-            *counters,
-        )
-        return surv.unionByName(lineage)
+            return surv.unionByName(lineage).localCheckpoint(eager=True)
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
 
     q["ingest_shard_summary"] = ingest_shard_summary
 

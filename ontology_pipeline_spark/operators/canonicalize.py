@@ -13,12 +13,16 @@ Algorithm: iterative minimum-label propagation over the undirected edge set
 (the classic "hash-to-min" DataFrame CC; converges in O(component diameter)
 rounds, and co-reference components are shallow).  Scale notes:
 
-* every round is one shuffle (groupBy node); AQE handles skew from
-  high-degree head entities (`spark.sql.adaptive.skewJoin.enabled`), and a
-  deterministic salt column spreads the reduce of super-nodes;
-* `localCheckpoint` per round truncates the lineage so plans stay flat;
-* iteration is bounded (`max_iter`) with an early-exit convergence check —
-  the only driver-side values are the per-round change counter.
+* every round is one aggregate (groupBy node) plus the label joins; AQE
+  handles skew from high-degree head entities
+  (`spark.sql.adaptive.skewJoin.enabled`), and map-side partial aggregation
+  sends at most one row per node per map task to a super-node's reducer;
+* the edges are pinned once and `localCheckpoint` per round truncates the
+  lineage, so a round never re-runs the plan that produced the edges and
+  plans stay flat;
+* iteration is bounded (`max_iter`) with an early-exit convergence check
+  read off the checkpointed labels — the only driver-side value per round
+  is whether any label dropped.
 """
 
 from __future__ import annotations
@@ -32,7 +36,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 40,
-    salt_buckets: int = 8,
 ) -> DataFrame:
     """Edges (src, dst) -> (node, component) with component = min label.
 
@@ -52,12 +55,25 @@ def connected_components(
     shallow graphs (the loop exits at the fixpoint).  If the loop still
     exhausts without converging, this RAISES rather than returning
     silently-unmerged components.
+
+    The neighbor min is a plain groupBy(node).min: its map-side partial
+    aggregation already folds a super-node's incoming labels to one row per
+    map task before the shuffle, so a salted two-phase min would only add a
+    shuffle per round.  Labels never increase (each is the least of itself
+    and its candidates), so a round changed something iff some new label is
+    below its old one; that flag rides in the checkpointed labels instead
+    of a second join per round.
     """
-    pair = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    # pinned: the edges feed the node set and every round's neighbor join,
+    # and their upstream plan (e.g. an LSH self-join) must not re-run per round
+    pair = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint(
+        eager=False
+    )
     sym = (
         pair.union(pair.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
         .distinct()
+        .localCheckpoint(eager=False)
     )
     nodes = (
         pair.select(F.explode(F.array("a", "b")).alias("node"))
@@ -66,52 +82,35 @@ def connected_components(
     )
     labels = nodes.withColumn("component", F.col("node")).localCheckpoint(eager=True)
 
-    converged = False
     for _ in range(max_iter):
-        # candidate label for each node = min(label of neighbors, own label).
-        # Two-phase (salted partial min, then final min) so a super-node's
-        # reduce is spread over `salt_buckets` tasks before the final combine.
-        neigh = (
-            sym.join(labels.withColumnRenamed("node", "b"), "b")
-            .select(F.col("a").alias("node"), "component")
-            .withColumn("_salt", F.pmod(F.xxhash64("component"), F.lit(salt_buckets)))
+        # candidate label for each node = min(label of neighbors, own label)
+        cand = (
+            sym.join(labels.select(F.col("node").alias("b"), "component"), "b")
+            .groupBy(F.col("a").alias("node"))
+            .agg(F.min("component").alias("cand"))
         )
-        partial = neigh.groupBy("node", "_salt").agg(F.min("component").alias("component"))
-        cand = partial.groupBy("node").agg(F.min("component").alias("cand"))
         # pointer jumping: my label's current label (path halving)
         parent = labels.select(
             F.col("node").alias("component"), F.col("component").alias("_parent")
         )
-        new_labels = (
-            labels.join(cand, "node", "left")
+        new = F.least(
+            F.col("component"),
+            F.coalesce(F.col("cand"), F.col("component")),
+            F.coalesce(F.col("_parent"), F.col("component")),
+        )
+        labels = (
+            labels.select("node", "component")
+            .join(cand, "node", "left")
             .join(parent, "component", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("cand"), F.col("component")),
-                    F.coalesce(F.col("_parent"), F.col("component")),
-                ).alias("component"),
-            )
+            .select("node", new.alias("component"), (new < F.col("component")).alias("_chg"))
             .localCheckpoint(eager=True)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds; "
-            "raise max_iter (components deeper than 2^max_iter hops)"
-        )
-    return labels
+        if labels.filter("_chg").isEmpty():
+            return labels.drop("_chg")
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds; "
+        "raise max_iter (components deeper than 2^max_iter hops)"
+    )
 
 
 def canonical_mapping(

@@ -81,18 +81,32 @@ def band_structs(sig_col, bands: int, rows_per_band: int, band_field: str = "ban
     )
 
 
+def spread_over_slots(documents: DataFrame) -> DataFrame:
+    """Repartition to the default parallelism when there are fewer
+    partitions: small corpora often arrive as a single parquet split, and a
+    CPU-heavy projection over them (signatures) then runs as one task."""
+    par = documents.sparkSession.sparkContext.defaultParallelism
+    if documents.rdd.getNumPartitions() < par:
+        return documents.repartition(par)
+    return documents
+
+
 def exact_dedup(
     documents: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Keep one representative per exact (normalized) text: min id wins
     (deterministic).  One shuffle on the fingerprint."""
     fp = fingerprint(F.col(text_col)).alias("_fp")
+    return _min_id_per_fp(documents.select("*", fp), id_col).drop("_fp")
+
+
+def _min_id_per_fp(fingerprinted: DataFrame, id_col: str) -> DataFrame:
+    """The min-id row per `_fp` value of an already fingerprinted frame."""
     w = Window.partitionBy("_fp").orderBy(F.col(id_col))
     return (
-        documents.select("*", fp)
-        .withColumn("_rk", F.row_number().over(w))
+        fingerprinted.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") == 1)
-        .drop("_fp", "_rk")
+        .drop("_rk")
     )
 
 
@@ -175,7 +189,6 @@ def ngram_jaccard_pairs(
             "salt applies only to the blocked-pairs path; pass "
             "prefix_filter=False to use salted block splitting"
         )
-    par = documents.sparkSession.sparkContext.defaultParallelism
     sh = documents.select(
         F.col(id_col).alias("_id"),
         *[F.col(c) for c in block_cols],
@@ -185,11 +198,9 @@ def ngram_jaccard_pairs(
         *block_cols,
         _shingles_of_tokens(F.col("_t"), n).alias("_sh"),
     )
-    if sh.rdd.getNumPartitions() < par:
-        sh = sh.repartition(par)
     # lazy checkpoint: materializes on first action (not at plan construction)
     # and is then reused by every consumer of the self-join
-    sh = sh.localCheckpoint(eager=False)
+    sh = spread_over_slots(sh).localCheckpoint(eager=False)
 
     inter = F.size(F.array_intersect(F.col("a._sh"), F.col("b._sh")))
 
@@ -284,16 +295,17 @@ def ngram_jaccard_pairs(
     ).filter(F.col("jaccard") >= threshold)
 
 
-def minhash_signatures(
+def with_minhash_signature(
     documents: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 32,
     shingle_n: int = 2,
     seed: int = 42,
+    out_col: str = "signature",
 ) -> DataFrame:
-    """MinHash signature per document: for hash i, min over shingles of
-    ((a_i * xxhash64(shingle) + b_i) mod p).  All JVM expressions.
+    """`documents` plus its MinHash signature column: for hash i, min over
+    shingles of ((a_i * xxhash64(shingle) + b_i) mod p), null for a text
+    shorter than one shingle.  All JVM expressions.
 
     The shingle-hash array is staged through its own projection (so Catalyst
     keeps it a bound column — CollapseProject won't re-inline an expensive
@@ -303,21 +315,77 @@ def minhash_signatures(
     `array_min(transform(...))` per hash function) re-evaluates the whole
     tokenize->shingle->xxhash tree per hash function: ~32x the work —
     measured 173 s vs <2 s on 5k docs, single partition."""
+    cols = documents.columns
     staged = documents.select(
-        F.col(id_col).alias("doc_id"),
-        tokens(F.lower(F.col(text_col))).alias("_t"),
+        "*", tokens(F.lower(F.col(text_col))).alias("_t")
     ).select(
-        "doc_id",
+        *cols,
         F.transform(
             _shingles_of_tokens(F.col("_t"), shingle_n),
             lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE)),
         ).alias("_h"),
     )
     sig = minhash_fold(F.col("_h"), minhash_coeffs(num_hashes, seed))
-    return staged.select(
-        "doc_id",
-        F.when(F.size("_h") > 0, sig).alias("signature"),
+    return staged.select(*cols, F.when(F.size("_h") > 0, sig).alias(out_col))
+
+
+def minhash_signatures(
+    documents: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_hashes: int = 32,
+    shingle_n: int = 2,
+    seed: int = 42,
+) -> DataFrame:
+    """(doc_id, signature) per document — see :func:`with_minhash_signature`."""
+    return with_minhash_signature(
+        documents.select(F.col(id_col).alias("doc_id"), F.col(text_col)),
+        text_col,
+        num_hashes,
+        shingle_n,
+        seed,
+    ).select("doc_id", "signature")
+
+
+def _signature_table(
+    documents: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    shingle_n: int,
+    seed: int,
+    eager: bool = True,
+) -> DataFrame:
+    """Pinned (doc_id, signature) rows with a non-null signature — the input
+    of every `*_from_signatures` step.  Checkpoint FIRST, filter after: a
+    filter on the computed column would otherwise evaluate the signature
+    expression twice (Filter + Project)."""
+    return (
+        minhash_signatures(documents, text_col, id_col, num_hashes, shingle_n, seed)
+        .localCheckpoint(eager=eager)
+        .filter(F.col("signature").isNotNull())
     )
+
+
+def _band_rows(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
+    """Slim (doc_id, band, bucket) rows, one per band: no signatures, so a
+    collision join over them shuffles only ids."""
+    return sigs.select(
+        "doc_id",
+        F.explode(band_structs(F.col("signature"), bands, rows_per_band)).alias("bb"),
+    ).select("doc_id", "bb.band", "bb.bucket")
+
+
+def _est_jaccard(sig_x, sig_y, num_hashes: int):
+    """Signature-agreement fraction, rounded(6): the unbiased Jaccard
+    estimate of two MinHash signatures."""
+    agree = F.size(
+        F.filter(
+            F.zip_with(sig_x, sig_y, lambda x, y: (x == y).cast("int")),
+            lambda v: v == 1,
+        )
+    )
+    return F.round(agree / F.lit(float(num_hashes)), 6).alias("est_jaccard")
 
 
 def minhash_hot_buckets(
@@ -337,16 +405,12 @@ def minhash_hot_buckets(
     populations pair generation would skip (and how many docs they hold)
     before committing to it.  One slim shuffle; no pair join."""
     assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
     sigs = minhash_signatures(
         documents, text_col, id_col, num_hashes, shingle_n, seed
     ).filter(F.col("signature").isNotNull())
-    banded = sigs.select(
-        "doc_id",
-        F.explode(band_structs(F.col("signature"), bands, rows_per_band)).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
     return (
-        banded.groupBy("band", "bucket")
+        _band_rows(sigs, bands, num_hashes // bands)
+        .groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("min_doc_id"))
         .filter(F.col("n_docs") >= min_size)
         .orderBy(F.col("n_docs").desc(), "band", "bucket")
@@ -378,28 +442,27 @@ def minhash_lsh_pairs(
     it shares, so only docs hot in EVERY band lose edges — and a corpus
     region that degenerate is byte-duplicate territory (exact dedup's job,
     which the curation chain runs first).  None (default) disables the cap
-    (exhaustive candidates; golden replays assume this)."""
-    assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
-    # spread the CPU-heavy signature computation (small corpora often arrive
-    # as a single parquet split) and materialize it once: it feeds the band
-    # explode AND the final agreement join, and recomputing the minhash
-    # expression tree per consumer is the dominant cost otherwise
-    par = documents.sparkSession.sparkContext.defaultParallelism
-    if documents.rdd.getNumPartitions() < par:
-        documents = documents.repartition(par)
-    # checkpoint FIRST, filter after: a filter on the computed column would
-    # otherwise evaluate the signature expression twice (Filter + Project)
-    sigs = (
-        minhash_signatures(documents, text_col, id_col, num_hashes, shingle_n, seed)
-        .localCheckpoint(eager=True)
-        .filter(F.col("signature").isNotNull())
+    (exhaustive candidates; golden replays assume this).
+
+    The signatures are spread over the slots and materialized once: they
+    feed the band explode AND the final agreement join, and recomputing the
+    minhash expression tree per consumer is the dominant cost otherwise."""
+    sigs = _signature_table(
+        spread_over_slots(documents), text_col, id_col, num_hashes, shingle_n, seed
     )
-    # slim band table (no signatures) so the collision join shuffles only ids
-    banded = sigs.select(
-        "doc_id",
-        F.explode(band_structs(F.col("signature"), bands, rows_per_band)).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
+    return lsh_pairs_from_signatures(sigs, num_hashes, bands, max_bucket_size)
+
+
+def lsh_pairs_from_signatures(
+    sigs: DataFrame,
+    num_hashes: int = 32,
+    bands: int = 8,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """:func:`minhash_lsh_pairs` after the signatures: pinned (doc_id,
+    signature) rows in, (id_a, id_b, est_jaccard) out."""
+    assert num_hashes % bands == 0
+    banded = _band_rows(sigs, bands, num_hashes // bands)
     if max_bucket_size is not None:
         # one slim shuffle over (band, bucket) to find HOT buckets, then
         # anti-join them away BEFORE the quadratic join.  The hot set is
@@ -432,16 +495,8 @@ def minhash_lsh_pairs(
     sig_a = sigs.select(F.col("doc_id").alias("id_a"), F.col("signature").alias("sig_a"))
     sig_b = sigs.select(F.col("doc_id").alias("id_b"), F.col("signature").alias("sig_b"))
     cand = cand.join(sig_a, "id_a").join(sig_b, "id_b")
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    )
     return cand.select(
-        "id_a",
-        "id_b",
-        F.round(agree / F.lit(float(num_hashes)), 6).alias("est_jaccard"),
+        "id_a", "id_b", _est_jaccard(F.col("sig_a"), F.col("sig_b"), num_hashes)
     )
 
 
@@ -472,12 +527,19 @@ def exact_dedup_against(
     on the fingerprint.  At 100 TB the anti-join shuffles only fingerprints
     (32-char keys), and a fingerprint table bucketed by ``fp`` makes the
     shard-vs-history join co-located; the historical TEXT is never read."""
-    fresh = exact_dedup(new_docs, text_col, id_col)
     fp = fingerprint(F.col(text_col)).alias("_fp")
-    return (
-        fresh.select("*", fp)
-        .join(seen_fps.select(F.col("fp").alias("_fp")), "_fp", "left_anti")
-        .drop("_fp")
+    return exact_dedup_against_fingerprinted(
+        new_docs.select("*", fp), seen_fps, id_col
+    ).drop("_fp")
+
+
+def exact_dedup_against_fingerprinted(
+    fingerprinted: DataFrame, seen_fps: DataFrame, id_col: str = "doc_id"
+) -> DataFrame:
+    """:func:`exact_dedup_against` after the fingerprint: rows carrying
+    their fingerprint in `_fp` in, the same rows (still with `_fp`) out."""
+    return _min_id_per_fp(fingerprinted, id_col).join(
+        seen_fps.select(F.col("fp").alias("_fp")), "_fp", "left_anti"
     )
 
 
@@ -503,15 +565,20 @@ def minhash_index(
     DEDUPED candidate set.  At extreme scale, store the signature once in
     a separate doc_id-keyed table instead and the index shrinks by the
     band factor."""
-    assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
-    sigs = (
-        minhash_signatures(documents, text_col, id_col, num_hashes, shingle_n, seed)
-        .localCheckpoint(eager=False)
-        .filter(F.col("signature").isNotNull())
+    sigs = _signature_table(
+        documents, text_col, id_col, num_hashes, shingle_n, seed, eager=False
     )
+    return index_from_signatures(sigs, num_hashes, bands)
+
+
+def index_from_signatures(
+    sigs: DataFrame, num_hashes: int = 32, bands: int = 8
+) -> DataFrame:
+    """:func:`minhash_index` after the signatures: (doc_id, signature) rows
+    in, (band, bucket, doc_id, signature) rows out."""
+    assert num_hashes % bands == 0
     return sigs.select(
-        F.explode(band_structs(F.col("signature"), bands, rows_per_band)).alias("bb"),
+        F.explode(band_structs(F.col("signature"), bands, num_hashes // bands)).alias("bb"),
         "doc_id",
         "signature",
     ).select("bb.band", "bb.bucket", "doc_id", "signature")
@@ -557,17 +624,25 @@ def minhash_probe_near_dups(
     found through any colder band; a family hot in all 8 bands is exact-
     dup territory, handled by `exact_dedup_against` first).  None
     (default) disables the cap; golden replays assume this."""
-    assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
-    sigs = (
-        minhash_signatures(new_docs, text_col, id_col, num_hashes, shingle_n, seed)
-        .localCheckpoint(eager=True)
-        .filter(F.col("signature").isNotNull())
+    sigs = _signature_table(new_docs, text_col, id_col, num_hashes, shingle_n, seed)
+    return probe_from_signatures(
+        sigs, index, num_hashes, bands, threshold, max_bucket_size
     )
-    banded = sigs.select(
-        "doc_id",
-        F.explode(band_structs(F.col("signature"), bands, rows_per_band)).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
+
+
+def probe_from_signatures(
+    sigs: DataFrame,
+    index: DataFrame,
+    num_hashes: int = 32,
+    bands: int = 8,
+    threshold: float = 0.8,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """:func:`minhash_probe_near_dups` after the signatures: the shard's
+    pinned (doc_id, signature) rows in, (new_id, indexed_id, est_jaccard)
+    out."""
+    assert num_hashes % bands == 0
+    banded = _band_rows(sigs, bands, num_hashes // bands)
     # the unpruned index also serves the signature lookup below: a doc whose
     # band-0 bucket is hot still needs its signature when a COLDER band
     # produced the candidate
@@ -612,16 +687,10 @@ def minhash_probe_near_dups(
         sigs.select(F.col("doc_id").alias("new_id"), F.col("signature").alias("sig_new")),
         "new_id",
     )
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_new"), F.col("sig_old"), lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    )
     return cand.select(
         "new_id",
         "indexed_id",
-        F.round(agree / F.lit(float(num_hashes)), 6).alias("est_jaccard"),
+        _est_jaccard(F.col("sig_new"), F.col("sig_old"), num_hashes),
     ).filter(F.col("est_jaccard") >= threshold)
 
 
@@ -649,11 +718,25 @@ def minhash_dedup_clusters(
     O(log diameter) label-propagation rounds over the pair edges — near-dup
     components are shallow (chains of transitive near-dups), so this
     converges in a handful of one-shuffle rounds."""
+    sigs = _signature_table(
+        spread_over_slots(documents), text_col, id_col, num_hashes, shingle_n, seed
+    )
+    return clusters_from_signatures(sigs, num_hashes, bands, threshold, max_bucket_size)
+
+
+def clusters_from_signatures(
+    sigs: DataFrame,
+    num_hashes: int = 32,
+    bands: int = 8,
+    threshold: float = 0.8,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """:func:`minhash_dedup_clusters` after the signatures: pinned (doc_id,
+    signature) rows in, (doc_id, cluster_id) out."""
     from .canonicalize import connected_components
 
-    pairs = minhash_lsh_pairs(
-        documents, text_col, id_col, num_hashes, bands, shingle_n, seed,
-        max_bucket_size=max_bucket_size,
+    pairs = lsh_pairs_from_signatures(
+        sigs, num_hashes, bands, max_bucket_size
     ).filter(F.col("est_jaccard") >= threshold)
     cc = connected_components(pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")))
     return cc.select(
@@ -817,14 +900,11 @@ def embedding_lsh_pairs(
             for b in range(n_bands)
         ]
     )
-    par = embeddings.sparkSession.sparkContext.defaultParallelism
-    staged = (
+    staged = spread_over_slots(
         embeddings.filter(F.col(vec_col).isNotNull())
         .select(F.col(id_col).alias("_id"), v.alias("_v"))
         .withColumn("_nrm", norm(F.col("_v")))
     )
-    if staged.rdd.getNumPartitions() < par:
-        staged = staged.repartition(par)
     staged = staged.withColumn("_bb", band_buckets).localCheckpoint(eager=False)
 
     slim = staged.select("_id", F.explode("_bb").alias("bb")).select(

@@ -27,8 +27,13 @@ STOPWORDS: dict[str, list[str]] = {
 
 
 def tokens(text_col: Column) -> Column:
-    """Whitespace tokenization with empty-token filtering (deterministic)."""
-    return F.filter(F.split(text_col, r"\s+"), lambda t: F.length(t) > 0)
+    """Whitespace tokenization with empty-token filtering (deterministic).
+
+    Lambda-free on purpose: the analyzer gives every lambda occurrence fresh
+    variable ids, so a `filter(..., lambda)` form is never a common
+    subexpression and an expression that tokenizes the same text several
+    times (lang_id: once per language) re-splits it each time."""
+    return F.array_remove(F.split(text_col, r"\s+"), "")
 
 
 def token_count(text_col: Column) -> Column:

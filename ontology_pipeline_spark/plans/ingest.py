@@ -1,11 +1,22 @@
 """Incremental (shard-at-a-time) corpus curation — the daily-ingest analog
 of plans/curate.py, against PERSISTED dedup state instead of the full corpus.
 
-    new shard --gates (clean/structural/lang/quality)-->
+    new shard --staging pass: gates (clean/structural/lang/quality)
+                + fingerprint + MinHash signature, one pinned projection-->
       --exact_dedup_against (persisted fingerprint table)-->
       --intra-shard minhash_dedup_clusters drop-->
       --cross-shard minhash_probe_near_dups drop (persisted MinHash index)-->
       survivors -> append documents + fingerprints + index rows + lineage
+
+The staging pass runs once per shard, spread over every slot and pinned
+eagerly; every later phase reads only its slim `_fp` / `_sig` columns
+through the "after the signatures" halves of the dedup operators
+(`exact_dedup_against_fingerprinted`, `clusters_from_signatures`,
+`probe_from_signatures`, `index_from_signatures`).  The shard's text is
+therefore tokenized, fingerprinted and MinHash-signed exactly once, where
+composing the text-level operators would do each up to three times (exact
+anti-join + fingerprint write; intra-shard pairs + probe + index build).
+tests/test_ingest.py pins that the committed state equals that composition.
 
 Semantic anchor: the reference's resume/merge (`load_existing_results` +
 skip-processed at /root/reference/src/extractor.py:46-104) is exactly this
@@ -49,12 +60,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (
-    exact_dedup_against,
-    exact_fingerprints,
-    minhash_dedup_clusters,
-    minhash_index,
-    minhash_probe_near_dups,
+    clusters_from_signatures,
+    exact_dedup_against_fingerprinted,
+    index_from_signatures,
+    probe_from_signatures,
+    spread_over_slots,
+    with_minhash_signature,
 )
+from ..operators.text_analysis import fingerprint
 from .curate import gate_documents
 
 
@@ -160,7 +173,8 @@ def ingest_shard(
 
     The MinHash geometry (num_hashes, bands, shingle_n) is part of the
     persisted index's identity: a mismatch against what previous ingests
-    committed raises instead of silently probing an incompatible index."""
+    committed (or a lineage that already holds two geometries) raises
+    instead of silently probing an incompatible index."""
     if store is None:
         if state_dir is None:
             raise ValueError("ingest_shard needs state_dir or an explicit store")
@@ -168,29 +182,47 @@ def ingest_shard(
 
     lineage = store.read_lineage(spark)
     if lineage is not None:
-        first = lineage.select("num_hashes", "bands", "shingle_n").first()
-        if first is not None and (
-            (first["num_hashes"], first["bands"], first["shingle_n"])
-            != (num_hashes, bands, shingle_n)
-        ):
+        # one read answers both questions: the committed geometries (exactly
+        # one is valid) and whether this shard_id is already committed
+        committed = (
+            lineage.groupBy("num_hashes", "bands", "shingle_n")
+            .agg(F.max(F.col("shard_id") == shard_id).alias("_has_shard"))
+            .collect()
+        )
+        geometries = sorted(tuple(r[:3]) for r in committed)
+        if geometries and geometries != [(num_hashes, bands, shingle_n)]:
             raise ValueError(
                 "MinHash geometry mismatch vs persisted state: committed "
-                f"(num_hashes={first['num_hashes']}, bands={first['bands']}, "
-                f"shingle_n={first['shingle_n']}), got ({num_hashes}, {bands}, "
-                f"{shingle_n}) — rebuild the index or match the parameters"
+                f"(num_hashes, bands, shingle_n) {geometries}, got ({num_hashes}, "
+                f"{bands}, {shingle_n}) — rebuild the index or match the parameters"
             )
-        if resume and lineage.filter(F.col("shard_id") == shard_id).first() is not None:
+        if resume and any(r["_has_shard"] for r in committed):
             return {"shard_id": shard_id, "total_docs": None, "new_docs": 0}
 
     total = shard.count()
+    # the staging pass: gates, fingerprint and MinHash signature in one
+    # projection over every slot, pinned once; each later phase reads only
+    # the slim `_fp` / `_sig` columns of it
     gated = gate_documents(
-        shard,
+        spread_over_slots(shard),
         text_col,
         lang=lang,
         min_quality=min_quality,
         clean=clean,
         structural_gate=structural_gate,
     )
+    staged = with_minhash_signature(
+        gated.select("*", fingerprint(F.col(text_col)).alias("_fp")),
+        text_col,
+        num_hashes,
+        shingle_n,
+        out_col="_sig",
+    ).localCheckpoint(eager=True)
+
+    def signatures(df: DataFrame) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias("doc_id"), F.col("_sig").alias("signature")
+        ).filter(F.col("signature").isNotNull())
 
     seen_fps = store.read_fingerprints(spark)
     if seen_fps is None:
@@ -199,18 +231,15 @@ def ingest_shard(
         seen_fps = spark.createDataFrame([], "doc_id long, fp string")
     # pin: the exact-survivor frame feeds the intra-shard cluster computation,
     # its own anti-join, AND the counter (multi-consumer rule)
-    d = exact_dedup_against(gated, seen_fps, text_col, id_col).localCheckpoint(
+    d = exact_dedup_against_fingerprinted(staged, seen_fps, id_col).localCheckpoint(
         eager=False
     )
     n_exact = d.count()
 
-    clusters = minhash_dedup_clusters(
-        d,
-        text_col,
-        id_col,
+    clusters = clusters_from_signatures(
+        signatures(d),
         num_hashes=num_hashes,
         bands=bands,
-        shingle_n=shingle_n,
         threshold=dedup_threshold,
         max_bucket_size=max_bucket_size,
     )
@@ -222,31 +251,26 @@ def ingest_shard(
 
     index = store.read_index(spark)
     if index is not None:
-        cross = minhash_probe_near_dups(
-            d,
+        cross = probe_from_signatures(
+            signatures(d),
             index.drop("shard_id"),
-            text_col,
-            id_col,
             num_hashes=num_hashes,
             bands=bands,
-            shingle_n=shingle_n,
             threshold=dedup_threshold,
             max_bucket_size=max_bucket_size,
         ).select(F.col("new_id").alias(id_col)).distinct()
         d = d.join(cross, id_col, "left_anti")
 
-    # pin the final survivors: they feed the document write, the fingerprint
-    # derivation, the index build (which itself re-reads text), and the count
+    # pin the final survivors: they feed the document, fingerprint and index
+    # writes, and the count
     d = d.localCheckpoint(eager=True)
     n_survivors = d.count()
 
     stamp = F.lit(shard_id).alias("shard_id")
     store.write_shard_state(
-        d.select("*", stamp),
-        exact_fingerprints(d, text_col, id_col).select("*", stamp),
-        minhash_index(
-            d, text_col, id_col, num_hashes=num_hashes, bands=bands, shingle_n=shingle_n
-        ).select("*", stamp),
+        d.drop("_fp", "_sig").select("*", stamp),
+        d.select(F.col(id_col), F.col("_fp").alias("fp"), stamp),
+        index_from_signatures(signatures(d), num_hashes, bands).select("*", stamp),
     )
     store.append_lineage(
         spark.createDataFrame(

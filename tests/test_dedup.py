@@ -655,3 +655,33 @@ def test_minhash_probe_plan_keeps_signatures_out_of_the_collision_join(spark, tm
     assert "EqualTo(band,0)" in plan, plan
     # the collision-join / hot-set scans are signature-free
     assert slim_scans, plan
+
+
+def test_ingest_shard_job_count_pin(spark, dup_shard, tmp_path):
+    """Job-count pin for the staged ingest (BENCH/ingest.md): gates,
+    fingerprint and MinHash signature are computed once per shard, and the
+    connected-components loop pins its edges and reads convergence off the
+    checkpointed labels.  A warm ingest_shard of the `dup_shard` fixture
+    (capped, against a committed history) must not run more Spark jobs than
+    the count measured after that restructure (72; it ran 96 before it)."""
+    import shutil
+
+    from ontology_pipeline_spark.plans.ingest import ingest_shard
+
+    history, shard = dup_shard
+    base = str(tmp_path / "base")
+    ingest_shard(spark, history, base, "hist", max_bucket_size=16)
+    sc = spark.sparkContext
+    jobs = []
+    for attempt in ("warm-up", "measured"):
+        state = str(tmp_path / attempt)
+        shutil.copytree(base, state)
+        group = f"ingest-job-pin-{attempt}"
+        sc.setJobGroup(group, group)
+        try:
+            ingest_shard(spark, shard, state, "day", max_bucket_size=16)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[1] <= 72, jobs

@@ -15,7 +15,15 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from ontology_pipeline_spark.plans.curate import curate_documents
+from ontology_pipeline_spark.operators.dedup import (
+    exact_dedup_against,
+    exact_fingerprints,
+    minhash_dedup_clusters,
+    minhash_hot_buckets,
+    minhash_index,
+    minhash_probe_near_dups,
+)
+from ontology_pipeline_spark.plans.curate import curate_documents, gate_documents
 from ontology_pipeline_spark.plans.ingest import (
     ParquetStateStore,
     ingest_shard,
@@ -130,3 +138,121 @@ def test_geometry_mismatch_raises(spark, docs, tmp_path):
     ingest_shard(spark, docs.limit(50), state, "day_001", num_hashes=32, bands=8)
     with pytest.raises(ValueError, match="geometry mismatch"):
         ingest_shard(spark, docs.limit(50), state, "day_002", num_hashes=32, bands=4)
+
+
+def test_geometry_guard_checks_every_committed_row(spark, docs, tmp_path):
+    """A lineage holding two geometries raises even for a call that matches
+    its first row: the guard reads every committed geometry, not one
+    arbitrary row."""
+    state = str(tmp_path / "state")
+    ingest_shard(spark, docs.limit(50), state, "day_001", num_hashes=32, bands=8)
+    store = ParquetStateStore(state)
+    foreign = (
+        store.read_lineage(spark)
+        .withColumn("shard_id", F.lit("day_002"))
+        .withColumn("bands", F.lit(4))
+        .localCheckpoint(eager=True)
+    )
+    store.append_lineage(foreign)
+    first = store.read_lineage(spark).select("num_hashes", "bands", "shingle_n").first()
+    with pytest.raises(ValueError, match="geometry mismatch"):
+        ingest_shard(
+            spark,
+            docs.limit(50),
+            state,
+            "day_003",
+            num_hashes=first["num_hashes"],
+            bands=first["bands"],
+            shingle_n=first["shingle_n"],
+        )
+
+
+def _rows(df):
+    """Order- and column-order-insensitive content of a frame."""
+    cols = sorted(df.columns)
+    return sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in df.select(cols).collect()
+    )
+
+
+def _public_chain(spark, shard, store, cap):
+    """The curation `ingest_shard` commits, composed from the public
+    operators against the committed state in `store`."""
+    seen = store.read_fingerprints(spark)
+    if seen is None:
+        seen = spark.createDataFrame([], "doc_id long, fp string")
+    exact = exact_dedup_against(gate_documents(shard), seen).localCheckpoint(eager=True)
+    clusters = minhash_dedup_clusters(exact, max_bucket_size=cap)
+    intra = exact.join(
+        clusters.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id"),
+        "doc_id",
+        "left_anti",
+    ).localCheckpoint(eager=True)
+    survivors = intra
+    index = store.read_index(spark)
+    if index is not None:
+        cross = minhash_probe_near_dups(intra, index.drop("shard_id"), max_bucket_size=cap)
+        survivors = intra.join(
+            cross.select(F.col("new_id").alias("doc_id")), "doc_id", "left_anti"
+        )
+    survivors = survivors.localCheckpoint(eager=True)
+    return {
+        "documents": _rows(survivors),
+        "fingerprints": _rows(exact_fingerprints(survivors)),
+        "index": _rows(minhash_index(survivors)),
+        "counters": (shard.count(), exact.count(), intra.count(), survivors.count()),
+    }
+
+
+def _committed(spark, store, shard_id):
+    def part(path):
+        return spark.read.parquet(path).filter(F.col("shard_id") == shard_id).drop("shard_id")
+
+    lin = part(store.lineage_path).first()
+    return {
+        "documents": _rows(part(store.documents_path)),
+        "fingerprints": _rows(part(store.fingerprints_path)),
+        "index": _rows(part(store.index_path)),
+        "counters": (
+            lin["total_docs"], lin["exact_survivors"], lin["intra_survivors"], lin["new_docs"]
+        ),
+    }
+
+
+@pytest.mark.parametrize("cap", [16, None])
+def test_ingest_shard_equals_public_operator_chain(spark, dup_shard, tmp_path, cap):
+    """ingest_shard stages each shard once (gates, fingerprint and signature
+    in one pinned pass); its committed documents, fingerprints, index rows
+    and lineage counters must equal the chain composed from the public
+    text-level operators, for the first shard (no index yet) and for a
+    second one that exercises every drop path, with and without the
+    hot-bucket cap."""
+    history, shard = dup_shard
+    store = ParquetStateStore(str(tmp_path / "state"))
+    for shard_id, df in (("hist", history), ("day", shard)):
+        want = _public_chain(spark, df, store, cap)
+        ingest_shard(spark, df, shard_id=shard_id, store=store, max_bucket_size=cap)
+        assert _committed(spark, store, shard_id) == want, shard_id
+
+    # the second shard drops on every path
+    total, n_exact, n_intra, n_new = want["counters"]
+    assert total > n_exact > n_intra > n_new > 0
+    kept = {r[0] for r in want["fingerprints"]}  # (doc_id, fp) rows
+    ids = {r["doc_id"] for r in shard.select("doc_id").collect()}
+
+    def injected(lo):
+        return {i for i in ids if lo <= i < lo + 100_000}
+
+    # every injected doc passes the gates, so only dedup can drop it
+    gated = {r["doc_id"] for r in gate_documents(shard).select("doc_id").collect()}
+    assert {i for i in ids if i >= 100_000} <= gated
+    assert not injected(100_000) & kept  # every exact copy of history
+    assert injected(200_000) - kept  # near copies of history (probe)
+    assert injected(300_000) - kept  # near copies within the shard
+    if cap is None:
+        assert injected(400_000) - kept  # the boilerplate family collapses
+    else:
+        # the family overflows the cap in every band, so it loses its edges
+        hot = minhash_hot_buckets(gate_documents(shard), min_size=cap + 1)
+        assert hot.count() > 0 and injected(400_000) <= kept

@@ -153,13 +153,13 @@ def test_cc_null_partner_node_kept(spark):
 def test_cc_skewed_head_entity(spark):
     """SURVEY §7 hard-part 4: a head entity (star hub with thousands of
     neighbors — the 'Breast Cancer Risk' shape) plus a chain hanging off one
-    leaf.  The salted two-phase min spreads the hub's reduce; labels must
+    leaf.  Map-side partial aggregation folds the hub's reduce; labels must
     still reach the chain tail, and isolated components stay separate."""
     hub_edges = [("hub", f"leaf{i:05d}") for i in range(5000)]
     chain_edges = [("leaf00000", "c1"), ("c1", "c2"), ("c2", "c3")]
     other = [("z1", "z2")]
     edges = spark.createDataFrame(hub_edges + chain_edges + other, ["src", "dst"])
-    cc = connected_components(edges, max_iter=10, salt_buckets=8)
+    cc = connected_components(edges, max_iter=10)
     rows = {r["node"]: r["component"] for r in cc.collect()}
     assert len(rows) == 5006
     # min label of the big component is "c1"
