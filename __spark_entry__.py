@@ -957,9 +957,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         corpus, _injected = generate_misspelled_corpus(n_pages=200, seed=17)
         pages = pages_df(spark, corpus)
         cands = candidate_surfaces(pages.select("text"))
-        linked = link_entities(
-            cands, lexicon_df(spark), fuzzy=True, fuzzy_method="grams"
-        )
+        linked = link_entities(cands, lexicon_df(spark), fuzzy=True)
         pairs = linked.filter(F.col("linked_canonical").isNotNull())
         mapping = canonical_mapping(pairs)  # name -> component representative
 

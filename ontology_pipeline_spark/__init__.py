@@ -9,8 +9,9 @@ batched, vectorized stages over DataFrames:
       -> extract_text     (Arrow-batched pandas UDF; byte-identical text/url)
       -> detect_mentions  (mapInPandas over a broadcast ontology lexicon)
       -> score_relations  (pure DataFrame self-join on sentence co-occurrence)
-      -> link_entities    (broadcast exact-alias join + MinHash-LSH fallback)
-      -> canonicalize     (salted connected components over co-reference graph)
+      -> link_entities    (broadcast exact-alias join + banded char-gram
+                           MinHash fallback with exact Jaccard verification)
+      -> canonicalize     (connected components over co-reference graph)
       -> triples          (partitioned sink, resumable via lineage anti-join)
 
 Everything is pyspark.sql DataFrames; heavy text work is Arrow-batched; there

@@ -110,17 +110,6 @@ def _min_id_per_fp(fingerprinted: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def exact_dup_groups(
-    documents: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Fingerprint groups with >1 member: (fp, n_docs, min_doc_id)."""
-    return (
-        documents.groupBy(fingerprint(F.col(text_col)).alias("fp"))
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("min_doc_id"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
 def _shingles_of_tokens(toks, n: int):
     """Distinct word n-gram shingles from an (ideally already-staged) token
     array column.  The trailing n-1 window positions (short grams) are cut
@@ -368,12 +357,57 @@ def _signature_table(
 
 
 def _band_rows(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
-    """Slim (doc_id, band, bucket) rows, one per band: no signatures, so a
+    """Slim (id, band, bucket) rows, one per band: no signatures, so a
     collision join over them shuffles only ids."""
     return sigs.select(
-        "doc_id",
+        F.col("doc_id").alias("id"),
         F.explode(band_structs(F.col("signature"), bands, rows_per_band)).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
+    ).select("id", "bb.band", "bb.bucket")
+
+
+def band_collision_pairs(
+    left: DataFrame, right: DataFrame | None = None, max_bucket_size: int | None = None
+) -> DataFrame:
+    """Distinct (id_a, id_b) pairs of ids that share a (band, bucket): the
+    collision join of every banded-LSH pair operator.  Inputs are slim
+    (id, band, bucket) rows, so the join shuffles ids only; callers attach
+    their payload (signatures, vectors) to the DEDUPED pairs afterwards.
+
+    Self-join when ``right`` is None: pairs within ``left`` with id_a <
+    id_b.  Probe otherwise: id_a from ``left``, id_b from ``right``, no
+    inequality.
+
+    ``max_bucket_size``: a bucket with B members emits B^2/2 candidates, so
+    one hot bucket turns the join quadratic.  Buckets whose occupancy
+    (left + right rows when probing) exceeds the cap are dropped from both
+    sides before the join; a pair is still found through any colder band
+    it shares.  The hot set comes from one slim count, is tiny by
+    construction so it broadcasts, and is pinned because both anti-joins
+    read it.  None disables the cap (exhaustive candidates)."""
+    if max_bucket_size is not None:
+        keys = left.select("band", "bucket")
+        if right is not None:
+            keys = keys.unionByName(right.select("band", "bucket"))
+        hot = (
+            keys.groupBy("band", "bucket")
+            .count()
+            .filter(F.col("count") > max_bucket_size)
+            .select("band", "bucket")
+            .localCheckpoint(eager=False)
+        )
+        left = left.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
+        if right is not None:
+            right = right.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
+    cond = [F.col("a.band") == F.col("b.band"), F.col("a.bucket") == F.col("b.bucket")]
+    if right is None:
+        right = left
+        cond.append(F.col("a.id") < F.col("b.id"))
+    return (
+        left.alias("a")
+        .join(right.alias("b"), cond)
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+    )
 
 
 def _est_jaccard(sig_x, sig_y, num_hashes: int):
@@ -400,10 +434,11 @@ def minhash_hot_buckets(
 ) -> DataFrame:
     """Band-bucket occupancy report: (band, bucket, n_docs, sample min
     doc_id) for buckets with >= min_size members, n_docs descending.  NO
-    SILENT CAPS: run this with min_size = the cap you intend to pass to
-    `minhash_lsh_pairs`/`curate_documents` to see exactly which bucket
-    populations pair generation would skip (and how many docs they hold)
-    before committing to it.  One slim shuffle; no pair join."""
+    SILENT CAPS: a cap prunes buckets with n_docs > max_bucket_size, so run
+    this with min_size = cap + 1 (the cap you intend to pass to
+    `minhash_lsh_pairs`/`curate_documents`, plus one) to see exactly which
+    bucket populations pair generation would skip (and how many docs they
+    hold) before committing to it.  One slim shuffle; no pair join."""
     assert num_hashes % bands == 0
     sigs = minhash_signatures(
         documents, text_col, id_col, num_hashes, shingle_n, seed
@@ -411,7 +446,7 @@ def minhash_hot_buckets(
     return (
         _band_rows(sigs, bands, num_hashes // bands)
         .groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("min_doc_id"))
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("id").alias("min_doc_id"))
         .filter(F.col("n_docs") >= min_size)
         .orderBy(F.col("n_docs").desc(), "band", "bucket")
     )
@@ -462,33 +497,8 @@ def lsh_pairs_from_signatures(
     """:func:`minhash_lsh_pairs` after the signatures: pinned (doc_id,
     signature) rows in, (id_a, id_b, est_jaccard) out."""
     assert num_hashes % bands == 0
-    banded = _band_rows(sigs, bands, num_hashes // bands)
-    if max_bucket_size is not None:
-        # one slim shuffle over (band, bucket) to find HOT buckets, then
-        # anti-join them away BEFORE the quadratic join.  The hot set is
-        # tiny by construction (few buckets exceed the cap even on
-        # boilerplate corpora) so it broadcasts; the eligible set would not.
-        hot = (
-            banded.groupBy("band", "bucket")
-            .count()
-            .filter(F.col("count") > max_bucket_size)
-            .select("band", "bucket")
-        )
-        banded = banded.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
-
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            [
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.bucket") == F.col("b.bucket"),
-                F.col("a.doc_id") < F.col("b.doc_id"),
-            ],
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+    cand = band_collision_pairs(
+        _band_rows(sigs, bands, num_hashes // bands), max_bucket_size=max_bucket_size
     )
     # attach signatures after pair dedup (signature table is small relative to
     # the corpus text; broadcast when it fits)
@@ -642,45 +652,22 @@ def probe_from_signatures(
     pinned (doc_id, signature) rows in, (new_id, indexed_id, est_jaccard)
     out."""
     assert num_hashes % bands == 0
-    banded = _band_rows(sigs, bands, num_hashes // bands)
-    # the unpruned index also serves the signature lookup below: a doc whose
-    # band-0 bucket is hot still needs its signature when a COLDER band
-    # produced the candidate
-    index_full = index
-    if max_bucket_size is not None:
-        # one slim (band, bucket) count over each side, hot set broadcast
-        # (tiny by construction), both sides pruned BEFORE the join —
-        # mirrors minhash_lsh_pairs' cap
-        hot = (
-            banded.select("band", "bucket")
-            .unionByName(index.select("band", "bucket"))
-            .groupBy("band", "bucket")
-            .count()
-            .filter(F.col("count") > max_bucket_size)
-            .select("band", "bucket")
-            # pin: consumed by BOTH anti-joins — Catalyst re-evaluates the
-            # union+aggregate per consumer otherwise (multi-consumer rule)
-            .localCheckpoint(eager=False)
-        )
-        banded = banded.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
-        index = index.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
-    # slim collision join (ids only), signatures attached AFTER pair dedup —
-    # the minhash_lsh_pairs structure.  Joining the index's per-band rows
-    # WITH their signature payload shuffles |history| x bands x num_hashes
-    # longs every probe (measured ~30 s extra against a 500k-doc index);
-    # the slim join shuffles ids, and sig_old comes from the index's band-0
-    # rows (every doc appears exactly once per band) keyed by the DEDUPED
-    # candidate set, which is collision-bounded.
-    cand = (
-        banded.withColumnRenamed("doc_id", "new_id")
-        .join(
-            index.select("band", "bucket", F.col("doc_id").alias("indexed_id")),
-            ["band", "bucket"],
-        )
-        .select("new_id", "indexed_id")
-        .dropDuplicates(["new_id", "indexed_id"])
-    )
-    sig_old = index_full.filter(F.col("band") == 0).select(
+    # slim collision join (ids only), signatures attached AFTER pair dedup.
+    # Joining the index's per-band rows WITH their signature payload
+    # shuffles |history| x bands x num_hashes longs every probe (measured
+    # ~30 s extra against a 500k-doc index); the slim join shuffles ids, and
+    # sig_old comes from the index's band-0 rows (every doc appears exactly
+    # once per band) keyed by the DEDUPED candidate set, which is
+    # collision-bounded.
+    cand = band_collision_pairs(
+        _band_rows(sigs, bands, num_hashes // bands),
+        index.select(F.col("doc_id").alias("id"), "band", "bucket"),
+        max_bucket_size,
+    ).select(F.col("id_a").alias("new_id"), F.col("id_b").alias("indexed_id"))
+    # the unpruned index serves the signature lookup: a doc whose band-0
+    # bucket is hot still needs its signature when a COLDER band produced
+    # the candidate
+    sig_old = index.filter(F.col("band") == 0).select(
         F.col("doc_id").alias("indexed_id"), F.col("signature").alias("sig_old")
     )
     cand = cand.join(sig_old, "indexed_id").join(
@@ -803,9 +790,10 @@ def embedding_cosine_pairs(
     with NO natural blocking key use `embedding_lsh_pairs` below — banded
     sign-LSH candidate generation with exact-cosine verification.
     """
-    norm = lambda c: F.sqrt(F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x))
+    from .similarity import _dot, _norm
+
     # stage the per-row norm BEFORE the self-join and pin it: evaluating
-    # norm() inside the pair condition would recompute it O(pairs * dim)
+    # _norm() inside the pair condition would recompute it O(pairs * dim)
     # instead of O(rows * dim), and the self-join over the computed column
     # re-evaluates the expression tree per consumer without the pin (same
     # discipline as the staged shingles above)
@@ -813,17 +801,12 @@ def embedding_cosine_pairs(
         F.col(id_col).alias("_id"),
         F.col(vec_col).cast("array<double>").alias("_v"),
         *( [F.col(block_col)] if block_col else [] ),
-    ).withColumn("_nrm", norm(F.col("_v"))).localCheckpoint(eager=False)
+    ).withColumn("_nrm", _norm(F.col("_v"))).localCheckpoint(eager=False)
     a, b = e.alias("a"), e.alias("b")
     cond = [F.col("a._id") < F.col("b._id")]
     if block_col:
         cond.append(F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
-    dot = F.aggregate(
-        F.zip_with(F.col("a._v"), F.col("b._v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = dot / (F.col("a._nrm") * F.col("b._nrm"))
+    cos = _dot(F.col("a._v"), F.col("b._v")) / (F.col("a._nrm") * F.col("b._nrm"))
     return (
         a.join(b, cond)
         .select(
@@ -870,7 +853,7 @@ def embedding_lsh_pairs(
     job-free; without it, one limit-1 job probes the first non-null vector
     (an empty/all-null input then returns an empty pair frame instead of
     raising)."""
-    from .similarity import _bucket_expr, hyperplanes
+    from .similarity import _bucket_expr, _dot, _norm, hyperplanes
 
     if dim is None:
         probe = (
@@ -886,7 +869,6 @@ def embedding_lsh_pairs(
                 ).filter(F.lit(False))
             )
         dim = len(probe[0])
-    norm = lambda c: F.sqrt(F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x))
     v = F.col(vec_col).cast("array<double>")
     # per-band plane sets from a per-band seed offset (deterministic)
     band_buckets = F.array(
@@ -903,52 +885,23 @@ def embedding_lsh_pairs(
     staged = spread_over_slots(
         embeddings.filter(F.col(vec_col).isNotNull())
         .select(F.col(id_col).alias("_id"), v.alias("_v"))
-        .withColumn("_nrm", norm(F.col("_v")))
+        .withColumn("_nrm", _norm(F.col("_v")))
     )
     staged = staged.withColumn("_bb", band_buckets).localCheckpoint(eager=False)
 
-    slim = staged.select("_id", F.explode("_bb").alias("bb")).select(
-        "_id", "bb.band", "bb.bucket"
+    slim = staged.select(F.col("_id").alias("id"), F.explode("_bb").alias("bb")).select(
+        "id", "bb.band", "bb.bucket"
     )
-    if max_bucket_size is not None:
-        # same hot-bucket guard as minhash_lsh_pairs: near-identical vector
-        # floods (dup embeddings) make one bucket's pair join quadratic; the
-        # hot set is tiny by construction, so it broadcasts
-        hot = (
-            slim.groupBy("band", "bucket")
-            .count()
-            .filter(F.col("count") > max_bucket_size)
-            .select("band", "bucket")
-        )
-        slim = slim.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
-    a, b = slim.alias("a"), slim.alias("b")
-    cand = (
-        a.join(
-            b,
-            [
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.bucket") == F.col("b.bucket"),
-                F.col("a._id") < F.col("b._id"),
-            ],
-        )
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    # the hot-bucket cap guards against near-identical vector floods (dup
+    # embeddings), which make one bucket's pair join quadratic
+    cand = band_collision_pairs(slim, max_bucket_size=max_bucket_size)
     va = staged.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"), F.col("_nrm").alias("_na"))
     vb = staged.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"), F.col("_nrm").alias("_nb"))
-    dot = F.aggregate(
-        F.zip_with(F.col("_va"), F.col("_vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    cos = _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(dot / (F.col("_na") * F.col("_nb")), 6).alias("cosine"),
-        )
+        .select("id_a", "id_b", F.round(cos, 6).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 

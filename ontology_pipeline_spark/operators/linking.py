@@ -6,11 +6,13 @@ linker over the broadcast alias dictionary:
    reproduces the reference's exact-match canonicalization, zero shuffle on
    the big side.  This path alone must carry P/R (SURVEY.md §7 hard-part 2);
    the fuzzy tier may only add recall, never remove exact matches.
-2. **MinHash-LSH fallback** (secondary): surfaces that miss the dictionary
-   are blocked against canonical names with `pyspark.ml.feature.MinHashLSH`
-   over character-3-gram count vectors (`approxSimilarityJoin`), keeping the
-   candidate join sub-quadratic at web scale; the best (lowest-distance,
-   tie-broken deterministically) candidate within the threshold wins.
+2. **MinHash-LSH fallback** (secondary, `link_fuzzy_grams`): surfaces that
+   miss the dictionary are banded on a character-3-gram MinHash signature
+   against the broadcast lexicon, keeping the candidate join sub-quadratic
+   at web scale; candidates are verified with the exact gram Jaccard and
+   the best (lowest-distance, tie-broken deterministically) one within the
+   threshold wins.  Pure JVM expressions, so the result does not depend on
+   the partitioning.
 """
 
 from __future__ import annotations
@@ -57,69 +59,6 @@ def link_exact(surfaces: DataFrame, lexicon: DataFrame, surface_col: str = "surf
     ).drop("_alias_lc")
 
 
-def link_fuzzy(
-    unmatched: DataFrame,
-    lexicon: DataFrame,
-    surface_col: str = "surface",
-    jaccard_max_distance: float = 0.5,
-    num_hash_tables: int = 6,
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash-LSH candidate blocking of unmatched surfaces vs canonical names.
-
-    Returns (surface, linked_canonical, linked_class, jaccard_distance) for the
-    best candidate per surface.  Deterministic: fixed seed, ties broken by
-    (distance, canonical_name).
-    """
-    from pyspark.ml.feature import CountVectorizer, MinHashLSH
-
-    left = unmatched.select(F.col(surface_col).alias("surface")).distinct().withColumn(
-        "grams", _char_ngrams(F.col("surface"))
-    ).filter(F.size("grams") > 0)
-    right = (
-        lexicon.select(
-            F.col("canonical_name").alias("cand_canonical"),
-            F.col("entity_class").alias("cand_class"),
-            F.col("alias"),
-        )
-        .withColumn("grams", _char_ngrams(F.col("alias")))
-        .filter(F.size("grams") > 0)
-    )
-    if left.isEmpty():
-        return left.select(
-            F.col("surface"),
-            F.lit(None).cast("string").alias("linked_canonical"),
-            F.lit(None).cast("string").alias("linked_class"),
-            F.lit(None).cast("double").alias("jaccard_distance"),
-        )
-
-    cv = CountVectorizer(inputCol="grams", outputCol="features", binary=True)
-    model = cv.fit(right.select("grams").union(left.select("grams")))
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed)
-    right_f = model.transform(right)
-    left_f = model.transform(left)
-    lsh_model = lsh.fit(right_f)
-    joined = lsh_model.approxSimilarityJoin(
-        left_f, right_f, jaccard_max_distance, distCol="jaccard_distance"
-    )
-    # linked_class in the tie-break: a canonical present in two entity
-    # classes must resolve the class deterministically too
-    w = Window.partitionBy("surface").orderBy(
-        "jaccard_distance", "linked_canonical", "linked_class"
-    )
-    return (
-        joined.select(
-            F.col("datasetA.surface").alias("surface"),
-            F.col("datasetB.cand_canonical").alias("linked_canonical"),
-            F.col("datasetB.cand_class").alias("linked_class"),
-            F.col("jaccard_distance"),
-        )
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .drop("_rk")
-    )
-
-
 def candidate_surfaces(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Candidate entity spans for linking, from clean (boilerplate-stripped)
     text: maximal runs of capitalized tokens PLUS each individual capitalized
@@ -158,20 +97,15 @@ def link_fuzzy_grams(
     seed: int = 42,
 ) -> DataFrame:
     """Deterministic fuzzy tier: char-3-gram MinHash banding against the
-    BROADCAST lexicon, with EXACT Jaccard verification of band candidates.
-
-    Differences vs the `pyspark.ml` MinHashLSH path (`link_fuzzy`):
-    * pure JVM expressions — no CountVectorizer fit pass, no ml pipeline;
-    * bit-stable across partitionings (MinHashLSH hashes CountVectorizer
-      feature indices, whose tie order is partition-dependent);
-    * candidates are verified with the TRUE gram Jaccard, so banding only
-      affects recall, never emits a false positive past the threshold.
+    BROADCAST lexicon, with EXACT Jaccard verification of band candidates —
+    banding only affects recall, never emits a false positive past the
+    threshold.
 
     Scale shape: the banded lexicon is tiny and broadcast, so the big
     surface side joins without a shuffle; per surface the work is
-    O(bands + verified candidates).  Returns the same schema as
-    `link_fuzzy`: (surface, linked_canonical, linked_class,
-    jaccard_distance), best candidate per surface, deterministic tie-break.
+    O(bands + verified candidates).  Returns (surface, linked_canonical,
+    linked_class, jaccard_distance), best candidate per surface,
+    deterministic tie-break.
     """
     rows_per_band = num_hashes // bands
     assert num_hashes % bands == 0
@@ -250,15 +184,10 @@ def link_entities(
     surface_col: str = "surface",
     fuzzy: bool = True,
     jaccard_max_distance: float = 0.5,
-    fuzzy_method: str = "ml",
 ) -> DataFrame:
     """Full two-tier linker.  Output adds (linked_canonical, linked_class,
-    link_method) to the input rows; unlinkable rows keep nulls.
-
-    ``fuzzy_method``: "ml" (MinHashLSH over CountVectorizer features — the
-    reference-parity path) or "grams" (`link_fuzzy_grams`: pure-expression
-    banded MinHash with exact verification — deterministic across
-    partitionings; what the flagship fuzzy-canonicalization query uses)."""
+    link_method) to the input rows; unlinkable rows keep nulls.  The fuzzy
+    tier is `link_fuzzy_grams`."""
     exact = link_exact(surfaces, lexicon, surface_col).withColumn(
         "link_method", F.when(F.col("linked_canonical").isNotNull(), F.lit("exact"))
     )
@@ -275,10 +204,7 @@ def link_entities(
     )
     if misses.isEmpty():
         return exact
-    if fuzzy_method == "grams":
-        fz = link_fuzzy_grams(misses, lexicon, surface_col, jaccard_max_distance)
-    else:
-        fz = link_fuzzy(misses, lexicon, surface_col, jaccard_max_distance)
+    fz = link_fuzzy_grams(misses, lexicon, surface_col, jaccard_max_distance)
     repaired = (
         misses.join(
             fz.withColumnRenamed("surface", "_fz_surface"),

@@ -7,9 +7,11 @@ over an embeddings table.
   dot product with a broadcast query vector (JVM `aggregate`/`zip_with`
   expressions, no Python), then a top-k.  At 100 TB this is a full scan but
   zero shuffle (top-k is a tree-aggregated `orderBy ... limit`).
-* `lsh_ann` — the scale path: random-hyperplane (sign-LSH) bucketing; the
-  query probes only its own bucket(s), so the scan is pruned by the bucket
-  predicate (partition the table by bucket to make this partition pruning).
+* `with_lsh_bucket` + `lsh_probe_topk` — the scale path: random-hyperplane
+  (sign-LSH) bucketing built once; the query probes only its own bucket(s),
+  so the scan is pruned by the bucket predicate (partition the table by
+  bucket to make this partition pruning).  `ivf_index`/`ivf_assign` +
+  `ivf_probe_topk` are the data-adaptive IVF counterpart.
 """
 
 from __future__ import annotations
@@ -135,31 +137,6 @@ def lsh_probe_topk(
     return cosine_topk(cands, query_vec, k, id_col, vec_col)
 
 
-def lsh_ann_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_planes: int = 12,
-    max_hamming: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """Convenience one-shot ANN top-k: derive planes, bucket the corpus,
-    probe — fine for exploration, but it maps the WHOLE table through the
-    bucket expression per call.  At scale, build the index once
-    (`with_lsh_bucket`, written partitioned by bucket) and probe it with
-    `lsh_probe_topk`.
-
-    Approximate: recall < 1 by design; the candidate set shrinks the scan by
-    ~2^n_planes / (multi-probe count)."""
-    planes = hyperplanes(len(query_vec), n_planes, seed)
-    bucketed = with_lsh_bucket(embeddings, planes, vec_col)
-    return lsh_probe_topk(
-        bucketed, planes, query_vec, k, max_hamming, id_col, vec_col
-    )
-
-
 def ivf_index(
     embeddings: DataFrame,
     vec_col: str = "embedding",
@@ -188,7 +165,7 @@ def ivf_index(
     from pyspark.ml.functions import array_to_vector
 
     v = F.col(vec_col).cast("array<double>")
-    nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
+    nrm = _norm(v)
     unit = F.when(nrm > 0, F.transform(v, lambda x: x / nrm)).otherwise(v)
     feat = embeddings.withColumn("_fv", array_to_vector(unit))
     model = KMeans(
@@ -341,29 +318,3 @@ def ivf_probe_topk(
     cands = assigned.filter(F.col(cell_col).isin(probe))
     return cosine_topk(cands, query_vec, k, id_col, vec_col)
 
-
-def ivf_ann_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    max_iter: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    index: tuple[DataFrame, list[list[float]]] | None = None,
-) -> DataFrame:
-    """IVF ANN top-k.  Pass `index=(assigned, centers)` (from `ivf_index` or
-    `sampled_centers`+`ivf_assign`, built ONCE and persisted partitioned by
-    cell) to probe without refitting; without it this convenience wrapper
-    fits the k-means quantizer first — fine for one-off exploration, a
-    scale-killer if called per query.
-
-    Unlike sign-LSH buckets, IVF cells adapt to the data distribution, so
-    recall on clustered embeddings is high at small n_probe; recall/latency
-    trades off via n_probe (n_probe = n_centroids degenerates to exact)."""
-    if index is None:
-        index = ivf_index(embeddings, vec_col, n_centroids, max_iter, seed)
-    assigned, centers = index
-    return ivf_probe_topk(assigned, centers, query_vec, k, n_probe, id_col, vec_col)

@@ -50,7 +50,7 @@ def main() -> None:
 
     def loop():
         cands = candidate_surfaces(pages)
-        linked = link_entities(cands, lex, fuzzy=True, fuzzy_method="grams")
+        linked = link_entities(cands, lex, fuzzy=True)
         pairs = linked.filter(F.col("linked_canonical").isNotNull())
         return canonical_mapping(pairs).count()
 

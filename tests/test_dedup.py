@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from ontology_pipeline_spark.operators.dedup import (
     embedding_cosine_pairs,
     exact_dedup,
-    exact_dup_groups,
     minhash_dedup_clusters,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -32,8 +31,6 @@ def test_exact_dedup_keeps_min_id(spark):
     out = exact_dedup(_docs(spark))
     ids = {r["doc_id"] for r in out.collect()}
     assert ids == {0, 2, 3, 4}
-    groups = exact_dup_groups(_docs(spark)).collect()
-    assert len(groups) == 1 and groups[0]["n_docs"] == 2 and groups[0]["min_doc_id"] == 0
 
 
 def test_ngram_jaccard_pairs(spark):
@@ -202,6 +199,50 @@ def test_minhash_hot_buckets_reports_cap_impact(spark):
     rows = minhash_hot_buckets(docs, shingle_n=1, min_size=17).collect()
     assert len(rows) == 8  # one hot bucket per band, nothing else
     assert all(r["n_docs"] == 60 and r["min_doc_id"] == 0 for r in rows)
+
+
+def test_band_collision_pairs_self_join_probe_and_cap(spark):
+    """The one collision join behind every LSH pair operator: self-join
+    pairs are distinct across bands with id_a < id_b; probe pairs take id_a
+    from `left`; the probe cap counts combined left+right occupancy; and
+    minhash_hot_buckets(min_size=cap + 1) names exactly the buckets the
+    self-join cap prunes."""
+    from ontology_pipeline_spark.operators.dedup import (
+        band_collision_pairs,
+        minhash_hot_buckets,
+    )
+
+    slim = lambda rows: spark.createDataFrame(rows, "id long, band int, bucket int")
+    pairs = lambda df: [tuple(r) for r in df.collect()]
+
+    # 1~2 collide in two bands (one pair), 3 meets them in band 1 only
+    left = slim([(1, 0, 7), (2, 0, 7), (1, 1, 8), (2, 1, 8), (3, 1, 8), (4, 0, 9)])
+    assert sorted(pairs(band_collision_pairs(left))) == [(1, 2), (1, 3), (2, 3)]
+    right = slim([(10, 0, 7), (11, 1, 8), (12, 0, 9)])
+    assert sorted(pairs(band_collision_pairs(left, right))) == [
+        (1, 10), (1, 11), (2, 10), (2, 11), (3, 11), (4, 12)
+    ]
+
+    # 10 left + 10 right rows in one bucket: hot at cap 16 only when probing
+    hot_l = [(100 + i, 0, 5) for i in range(10)]
+    hot_r = [(200 + i, 0, 5) for i in range(10)]
+    cold_l, cold_r = slim(hot_l + [(300, 0, 6)]), slim(hot_r + [(301, 0, 6)])
+    assert pairs(band_collision_pairs(cold_l, cold_r, 16)) == [(300, 301)]
+    assert len(pairs(band_collision_pairs(cold_l, cold_r))) == 10 * 10 + 1
+    assert len(pairs(band_collision_pairs(slim(hot_l), max_bucket_size=16))) == 45
+
+    # the occupancy report and the cap agree at the boundary: a 17-member
+    # family (n_docs = cap + 1) is pruned, a 16-member one (= cap) is not
+    cap = 16
+    docs = spark.createDataFrame(
+        [(i, "identical boilerplate page body repeated") for i in range(cap + 1)]
+        + [(100 + i, "other template text about quantum spark engines") for i in range(cap)],
+        ["doc_id", "text"],
+    )
+    hot = minhash_hot_buckets(docs, shingle_n=1, min_size=cap + 1).collect()
+    assert len(hot) == 8 and all(r["n_docs"] == cap + 1 for r in hot)
+    capped = pairs(minhash_lsh_pairs(docs, shingle_n=1, max_bucket_size=cap).select("id_a", "id_b"))
+    assert sorted(capped) == [(100 + i, 100 + j) for i in range(cap) for j in range(i + 1, cap)]
 
 
 def test_embedding_lsh_hot_bucket_cap(spark):

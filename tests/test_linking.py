@@ -33,11 +33,17 @@ def test_fuzzy_fallback_links_typos(spark):
         ],
         ["surface"],
     )
-    rows = {r["surface"]: r for r in link_entities(surfaces, lex).collect()}
-    assert rows["Sleep Qualityy"]["linked_canonical"] == "Sleep Quality"
-    assert rows["Sleep Qualityy"]["link_method"] == "lsh"
-    assert rows["Heart Rate Variabilty"]["linked_canonical"] == "Heart Rate Variability"
-    assert rows["zzzzqqq"]["linked_canonical"] is None
+    links = lambda df: {
+        r["surface"]: (r["linked_canonical"], r["linked_class"], r["link_method"])
+        for r in link_entities(df, lex).collect()
+    }
+    rows = links(surfaces)
+    assert rows["Sleep Qualityy"][0] == "Sleep Quality"
+    assert rows["Sleep Qualityy"][2] == "lsh"
+    assert rows["Heart Rate Variabilty"][0] == "Heart Rate Variability"
+    assert rows["zzzzqqq"][0] is None
+    # the whole linker is partition-invariant (its only fuzzy tier is)
+    assert links(surfaces.repartition(3)) == rows
 
 
 def test_exact_never_overridden(spark):
@@ -49,8 +55,8 @@ def test_exact_never_overridden(spark):
 
 
 def test_fuzzy_grams_links_typos_and_matches_schema(spark):
-    """The deterministic grams-MinHash fuzzy tier links the same typos the
-    ml tier does, never links garbage, and is stable across partitionings."""
+    """The deterministic grams-MinHash fuzzy tier links every seeded typo,
+    never links garbage, and is stable across partitionings."""
     from ontology_pipeline_spark.operators.linking import link_fuzzy_grams
     from ontology_pipeline_spark.synth import MISSPELL_TARGETS, misspell
 
@@ -63,7 +69,7 @@ def test_fuzzy_grams_links_typos_and_matches_schema(spark):
         assert got[misspell(t)]["jaccard_distance"] <= 0.5
     assert "zzzzqqq" not in got  # garbage gets no candidate at all
     assert got["The Countermovement Jump"]["linked_canonical"] == "Countermovement Jump"
-    # partitioning invariance (the CountVectorizer-order hazard of the ml path)
+    # partitioning invariance
     got3 = {
         r["surface"]: (r["linked_canonical"], r["jaccard_distance"])
         for r in link_fuzzy_grams(surfaces.repartition(3), lex).collect()

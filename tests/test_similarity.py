@@ -6,11 +6,10 @@ import math
 
 from ontology_pipeline_spark.operators.similarity import (
     cosine_topk,
-    ivf_ann_topk,
     ivf_assign,
     ivf_index,
     ivf_probe_topk,
-    lsh_ann_topk,
+    lsh_probe_topk,
     sampled_centers,
     with_lsh_bucket,
     hyperplanes,
@@ -50,7 +49,10 @@ def test_lsh_ann_recall(spark):
     emb = _embeddings(spark)
     q = _query(spark)
     exact = {r["vec_id"]: r["cosine"] for r in cosine_topk(emb, q, k=10).collect()}
-    ann_rows = lsh_ann_topk(emb, q, k=10, n_planes=8, max_hamming=2).collect()
+    planes = hyperplanes(len(q), n_planes=8, seed=42)
+    ann_rows = lsh_probe_topk(
+        with_lsh_bucket(emb, planes), planes, q, k=10, max_hamming=2
+    ).collect()
     ann = [r["vec_id"] for r in ann_rows]
     # the query itself is always recalled (it is in its own bucket)
     assert ann[0] == 0
@@ -79,13 +81,10 @@ def test_lsh_persisted_partitioned_index_prunes(spark, tmp_path):
     `with_lsh_bucket` output WRITTEN partitioned by bucket, probed after a
     read-back — the multi-probe `isin` becomes PartitionFilters on the scan
     (asserted on the executed plan, not just substring presence), results
-    identical to the in-memory probe and to the one-shot wrapper."""
+    identical to the in-memory probe."""
     from pyspark.sql import functions as F
 
-    from ontology_pipeline_spark.operators.similarity import (
-        lsh_probe_topk,
-        probe_buckets,
-    )
+    from ontology_pipeline_spark.operators.similarity import probe_buckets
 
     emb = _embeddings(spark)
     q = _query(spark)
@@ -101,11 +100,7 @@ def test_lsh_persisted_partitioned_index_prunes(spark, tmp_path):
         (r["vec_id"], r["cosine"])
         for r in lsh_probe_topk(bucketed, planes, q, k=10, max_hamming=2).collect()
     ]
-    want_oneshot = [
-        (r["vec_id"], r["cosine"])
-        for r in lsh_ann_topk(emb, q, k=10, n_planes=8, max_hamming=2).collect()
-    ]
-    assert got == want_mem == want_oneshot and len(got) == 10
+    assert got == want_mem and len(got) == 10
 
     # partition pruning proof: the probed buckets appear as PartitionFilters
     # (pruned at planning time), and the scan touches only |probe| partitions
@@ -142,29 +137,30 @@ def test_ivf_ann_mixed_norms(spark):
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
 
     exact = [r["vec_id"] for r in cosine_topk(emb, d1, k=10).collect()]
+    assigned, centers = ivf_index(emb, n_centroids=4, seed=11)
     ann = [
         r["vec_id"]
-        for r in ivf_ann_topk(emb, d1, k=10, n_centroids=4, n_probe=1, seed=11).collect()
+        for r in ivf_probe_topk(assigned, centers, d1, k=10, n_probe=1).collect()
     ]
     assert set(exact) == set(ann)  # all top-10 are tiny-norm aligned vectors
 
 
 def test_ivf_prebuilt_index_probe(spark):
-    """VERDICT r1 #2: the probe path consumes a PREBUILT index — building
-    once (k-means fit) and probing via `index=` must equal the convenience
-    path, with no refit per query."""
+    """VERDICT r1 #2: the probe path consumes a PREBUILT index (one k-means
+    fit, no refit per query), and the seeded build is deterministic: two
+    independent same-seed `ivf_index` builds probe to the same top-k."""
     emb = _embeddings(spark)
     q = _query(spark)
-    index = ivf_index(emb, n_centroids=8, seed=42)
-    got = [
-        (r["vec_id"], r["cosine"])
-        for r in ivf_ann_topk(emb, q, k=10, n_probe=2, index=index).collect()
-    ]
-    want = [
-        (r["vec_id"], r["cosine"])
-        for r in ivf_ann_topk(emb, q, k=10, n_centroids=8, n_probe=2, seed=42).collect()
-    ]
-    assert got == want and len(got) == 10
+
+    def probed():
+        assigned, centers = ivf_index(emb, n_centroids=8, seed=42)
+        return [
+            (r["vec_id"], r["cosine"])
+            for r in ivf_probe_topk(assigned, centers, q, k=10, n_probe=2).collect()
+        ]
+
+    got = probed()
+    assert got == probed() and len(got) == 10
 
 
 def test_ivf_persisted_partitioned_index_prunes(spark, tmp_path):
@@ -231,9 +227,8 @@ def test_ivf_ann_high_recall_on_clustered_data(spark):
     q = rows[0][1]
 
     exact = [r["vec_id"] for r in cosine_topk(emb, q, k=10).collect()]
-    ann_rows = ivf_ann_topk(
-        emb, q, k=10, n_centroids=8, n_probe=2, seed=42
-    ).collect()
+    assigned, centers = ivf_index(emb, n_centroids=8, seed=42)
+    ann_rows = ivf_probe_topk(assigned, centers, q, k=10, n_probe=2).collect()
     ann = [r["vec_id"] for r in ann_rows]
     assert len(set(exact) & set(ann)) >= 9
     # pruning never alters scores: ANN cosines equal the exact ones
