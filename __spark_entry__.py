@@ -597,18 +597,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["fingerprint_stats"] = fingerprint_stats
 
     def near_dup_jaccard(spark, sf):
-        # blocked-pairs path (prefix_filter=False): at testdata scale the
-        # (lang, source) blocks hold ~100 docs, where exhaustive in-block
-        # enumeration beats the PPJoin prefix path's extra df shuffles; the
-        # prefix-filtered default is the web-scale choice and is asserted
-        # pair-identical in tests/test_dedup.py.
         return ngram_jaccard_pairs(
             _t(spark, sf, "documents"),
             block_cols=["lang", "source"],
             n=1,
             threshold=0.8,
-            salt=4,
-            prefix_filter=False,
         )
 
     q["near_dup_jaccard"] = near_dup_jaccard
@@ -995,18 +988,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def extraction_docs_synthetic(spark, sf):
         """Reference-shaped per-page extraction documents (flattened scalar
         projection so the driver gets a stable schema)."""
-        from ontology_pipeline_spark.operators.relations import score_relations
         from ontology_pipeline_spark.plans.documents import assemble_docs
         from ontology_pipeline_spark.synth import generate_corpus, pages_df
 
         corpus = generate_corpus(n_pages=200, seed=13)
         pages = pages_df(spark, corpus)
         lex = lexicon_rows()
-        # one mention scan pinned and reused by both consumers; triples via
-        # the join path (multiset-equal to the fused path, tested) instead
-        # of a second full-page Python stage
-        ments = detect_mentions(pages, lex).localCheckpoint(eager=False)
-        docs = assemble_docs(ments, score_relations(ments), pages, pin_mentions=False)
+        docs = assemble_docs(
+            detect_mentions(pages, lex), extract_triples_fused(pages, lex), pages
+        )
         return docs.select(
             "url",
             "text_length",

@@ -8,7 +8,9 @@ batched, vectorized stages over DataFrames:
     pages (url, warc_ts, html, text, lang)
       -> extract_text     (Arrow-batched pandas UDF; byte-identical text/url)
       -> detect_mentions  (mapInPandas over a broadcast ontology lexicon)
-      -> score_relations  (pure DataFrame self-join on sentence co-occurrence)
+      -> extract_triples_fused
+                          (mention scan + sentence co-occurrence pair rules in
+                           one shuffle-free mapInPandas pass)
       -> link_entities    (broadcast exact-alias join + banded char-gram
                            MinHash fallback with exact Jaccard verification)
       -> canonicalize     (connected components over co-reference graph)

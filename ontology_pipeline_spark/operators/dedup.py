@@ -129,11 +129,6 @@ def _shingles_of_tokens(toks, n: int):
     )
 
 
-def _word_shingles(text_col, n: int = 3):
-    """Word n-gram shingle array (distinct) straight from a text column."""
-    return _shingles_of_tokens(tokens(F.lower(text_col)), n)
-
-
 def ngram_jaccard_pairs(
     documents: DataFrame,
     block_cols: list[str],
@@ -141,43 +136,28 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 1,
     threshold: float = 0.8,
-    salt: int = 1,
-    prefix_filter: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by token/shingle-set Jaccard within blocks:
     (id_a, id_b, jaccard) with id_a < id_b, jaccard rounded(6), >= threshold.
 
-    Scale design (the two candidate-generation strategies, both exact):
+    Scale design: PPJoin-style prefix filtering (exact).  Shingle arrays
+    are sorted by ascending global document frequency (rarest first); a
+    pair with Jaccard >= t MUST share a shingle within each side's first
+    ``|S| - ceil(t*|S|) + 1`` elements under ANY global total order, so
+    exploding only that prefix and equi-joining on (block, shingle) yields
+    a candidate superset.  df-ascending order puts the rarest shingles in
+    the prefix, so stop-word-like shingles never fan out into n^2
+    candidate pairs; a length filter (|A| >= t*|B|) prunes further before
+    verification.  Candidates are verified exactly against the staged
+    shingle arrays.  No quadratic block enumeration ever materializes.
 
-    * ``prefix_filter=True`` (default) — PPJoin-style prefix filtering.
-      Shingle arrays are sorted by ascending global document frequency
-      (rarest first); a pair with Jaccard >= t MUST share a shingle within
-      each side's first ``|S| - ceil(t*|S|) + 1`` elements under ANY global
-      total order, so exploding only that prefix and equi-joining on
-      (block, shingle) yields a candidate superset.  df-ascending order puts
-      the rarest shingles in the prefix, so stop-word-like shingles never
-      fan out into n^2 candidate pairs; a length filter (|A| >= t*|B|)
-      prunes further before verification.  Candidates are verified exactly
-      against the staged shingle arrays.  No quadratic block enumeration
-      ever materializes.
-
-    * ``prefix_filter=False`` — plain blocked self-join (every in-block
-      pair), with optional ``salt > 1`` splitting each block across `salt`
-      reducers (left side keyed by hash(id) % salt, right side replicated)
-      for bounded task size when one block dominates.
-
-    Either way the tokenize->shingle stage is computed ONCE and pinned with
+    The tokenize->shingle stage is computed ONCE and pinned with
     `localCheckpoint` — referencing the raw expression from both sides of a
     self-join re-evaluates the whole tokenization tree per *pair* per
     consumer (filter pushdown duplicates it again): measured 149 s vs 9 s on
     5k docs at sf0.1.  On a cluster the staging table would be a parquet/
     Iceberg temp table instead.
     """
-    if prefix_filter and salt > 1:
-        raise ValueError(
-            "salt applies only to the blocked-pairs path; pass "
-            "prefix_filter=False to use salted block splitting"
-        )
     sh = documents.select(
         F.col(id_col).alias("_id"),
         *[F.col(c) for c in block_cols],
@@ -191,89 +171,68 @@ def ngram_jaccard_pairs(
     # and is then reused by every consumer of the self-join
     sh = spread_over_slots(sh).localCheckpoint(eager=False)
 
-    inter = F.size(F.array_intersect(F.col("a._sh"), F.col("b._sh")))
-
-    if prefix_filter:
-        # global shingle document frequencies (shingles are distinct per doc,
-        # so a plain count is the df); rarest-first rank via the df itself
-        toks = sh.select("_id", *block_cols, F.explode("_sh").alias("_tok"))
-        dfreq = toks.groupBy("_tok").agg(F.count(F.lit(1)).alias("_df"))
-        # re-assemble each doc's shingle array sorted by (df asc, token asc):
-        # deterministic, rarest shingles first
-        ranked = (
-            toks.join(dfreq, "_tok")
-            .groupBy("_id", *block_cols)
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("_df", "_tok"))),
-                    lambda s: s["_tok"],
-                ).alias("_sh"),
-            )
+    # global shingle document frequencies (shingles are distinct per doc,
+    # so a plain count is the df); rarest-first rank via the df itself
+    toks = sh.select("_id", *block_cols, F.explode("_sh").alias("_tok"))
+    dfreq = toks.groupBy("_tok").agg(F.count(F.lit(1)).alias("_df"))
+    # re-assemble each doc's shingle array sorted by (df asc, token asc):
+    # deterministic, rarest shingles first
+    ranked = (
+        toks.join(dfreq, "_tok")
+        .groupBy("_id", *block_cols)
+        .agg(
+            F.transform(
+                F.sort_array(F.collect_list(F.struct("_df", "_tok"))),
+                lambda s: s["_tok"],
+            ).alias("_sh"),
         )
-        # epsilon guards the float product: when t*|S| is mathematically an
-        # integer but rounds UP in floating point (e.g. t=39/76, |S|=228 ->
-        # 117.00000000000001), a bare ceil would shorten the prefix by one
-        # and silently drop qualifying pairs; erring longer keeps the filter
-        # lossless
-        npfx = (
-            F.size("_sh")
-            - F.ceil(F.size("_sh") * F.lit(float(threshold)) - F.lit(1e-9))
-            + 1
+    )
+    # epsilon guards the float product: when t*|S| is mathematically an
+    # integer but rounds UP in floating point (e.g. t=39/76, |S|=228 ->
+    # 117.00000000000001), a bare ceil would shorten the prefix by one
+    # and silently drop qualifying pairs; erring longer keeps the filter
+    # lossless
+    npfx = (
+        F.size("_sh")
+        - F.ceil(F.size("_sh") * F.lit(float(threshold)) - F.lit(1e-9))
+        + 1
+    )
+    pfx = ranked.select(
+        "_id",
+        *block_cols,
+        F.size("_sh").alias("_n"),
+        F.explode(F.slice("_sh", 1, npfx)).alias("_tok"),
+    )
+    a, b = pfx.alias("a"), pfx.alias("b")
+    cand = (
+        a.join(
+            b,
+            [F.col(f"a.{c}") == F.col(f"b.{c}") for c in block_cols]
+            + [
+                F.col("a._tok") == F.col("b._tok"),
+                F.col("a._id") < F.col("b._id"),
+                # length filter: Jaccard >= t forces t <= |A|/|B| <= 1/t
+                # (same 1e-9 guard as npfx: t*|S| can round UP past an
+                # exact integer bound and wrongly exclude the pair)
+                F.col("a._n") * F.lit(float(threshold)) - F.lit(1e-9)
+                <= F.col("b._n"),
+                F.col("b._n") * F.lit(float(threshold)) - F.lit(1e-9)
+                <= F.col("a._n"),
+            ],
         )
-        pfx = ranked.select(
-            "_id",
-            *block_cols,
-            F.size("_sh").alias("_n"),
-            F.explode(F.slice("_sh", 1, npfx)).alias("_tok"),
-        )
-        a, b = pfx.alias("a"), pfx.alias("b")
-        cand = (
-            a.join(
-                b,
-                [F.col(f"a.{c}") == F.col(f"b.{c}") for c in block_cols]
-                + [
-                    F.col("a._tok") == F.col("b._tok"),
-                    F.col("a._id") < F.col("b._id"),
-                    # length filter: Jaccard >= t forces t <= |A|/|B| <= 1/t
-                    # (same 1e-9 guard as npfx: t*|S| can round UP past an
-                    # exact integer bound and wrongly exclude the pair)
-                    F.col("a._n") * F.lit(float(threshold)) - F.lit(1e-9)
-                    <= F.col("b._n"),
-                    F.col("b._n") * F.lit(float(threshold)) - F.lit(1e-9)
-                    <= F.col("a._n"),
-                ],
-            )
-            .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        pairs = cand.join(
-            sh.select(F.col("_id").alias("id_a"), F.col("_sh")).alias("a"), "id_a"
-        ).join(sh.select(F.col("_id").alias("id_b"), F.col("_sh")).alias("b"), "id_b")
-    else:
-        a = sh
-        b = sh
-        cond = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in block_cols] + [
-            F.col("a._id") < F.col("b._id")
-        ]
-        if salt > 1:
-            a = a.withColumn("_salt", F.pmod(F.xxhash64("_id"), F.lit(salt)))
-            b = b.withColumn(
-                "_salt",
-                F.explode(F.array(*[F.lit(i).cast("long") for i in range(salt)])),
-            )
-            cond.append(F.col("a._salt") == F.col("b._salt"))
-        pairs = (
-            a.alias("a")
-            .join(b.alias("b"), cond)
-            .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"), "a._sh", "b._sh")
-        )
+        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    pairs = cand.join(
+        sh.select(F.col("_id").alias("id_a"), F.col("_sh")).alias("a"), "id_a"
+    ).join(sh.select(F.col("_id").alias("id_b"), F.col("_sh")).alias("b"), "id_b")
 
     # verify exactly; stage (inter, sizes) through a projection so the
     # intersect runs once per pair, then filter on the cheap derived column
     scored = pairs.select(
         "id_a",
         "id_b",
-        inter.alias("_i"),
+        F.size(F.array_intersect(F.col("a._sh"), F.col("b._sh"))).alias("_i"),
         (F.size(F.col("a._sh")) + F.size(F.col("b._sh"))).alias("_s"),
     )
     jac = F.when(

@@ -11,16 +11,16 @@ streamlit_app.py:744-760):
     assessment   + intervention  -> (assessment,  "informs",     intervention)
     construct    + construct     -> (earlier,     "association", later)
 
-Two physical strategies, same logical result (tested equal):
+The rules live once, in `_pair_triples`, and run inside ONE mapInPandas
+pass that also detects the mentions: co-occurrence is sentence-local, so
+the whole triple extraction is shuffle-free.  This is the 100 TB hot path:
+one narrow stage from page scan to triple rows; the only shuffles left in
+the pipeline are the final aggregations.  Two entry points share that
+stage:
 
-* `score_relations(mentions)` — a pure DataFrame self-join on
-  (url, sent_id) with `pos_a < pos_b`.  Catalyst plans it; AQE skew-join
-  splits the head-entity partitions.  Use when mentions arrive as a table.
-* `extract_triples_fused(pages, lexicon)` — mention detection + pairing in a
-  SINGLE mapInPandas pass: co-occurrence is sentence-local, so the whole
-  triple extraction is shuffle-free.  This is the 100 TB hot path: one narrow
-  stage from page scan to triple rows; the only shuffles left in the
-  pipeline are the final aggregations.
+* `extract_triples_fused(pages, lexicon)` — pages carrying extracted text;
+* `extract_triples_from_html(pages, lexicon)` — pages carrying raw HTML,
+  with HTML->text done in the same Python pass.
 """
 
 from __future__ import annotations
@@ -73,72 +73,6 @@ def _pair_triples(ments: list[tuple]) -> list[tuple]:
     # page-local dedup (order-preserving): the triple sink holds distinct
     # (subj, pred, obj, url) rows without needing a corpus-wide shuffle
     return list(dict.fromkeys(out))
-
-
-def score_relations(mentions: DataFrame) -> DataFrame:
-    """Mentions table -> triples via self-join on (url, sent_id).
-
-    Logically identical to the fused path (tested as equal multisets): the
-    pair ordering is the lexicographic struct (pos, canonical, entity_class)
-    — strictly `pos_a < pos_b` would DROP distinct mentions sharing a
-    position (one alias in two classes) that the fused i<j loop pairs — and
-    the output is page-local-deduped (`distinct()`, url is a column, so
-    distinct == the fused path's per-page dict.fromkeys).
-
-    The join keys (url, sent_id) are high-cardinality, so the shuffle is well
-    spread; head-entity skew lives in the *values*, not the keys, and the
-    downstream distinct/groupBy is where AQE skew handling applies.
-    """
-    a = mentions.alias("a")
-    b = mentions.alias("b")
-    order = lambda side: F.struct(
-        F.col(f"{side}.pos"), F.col(f"{side}.canonical"), F.col(f"{side}.entity_class")
-    )
-    pairs = a.join(
-        b,
-        on=[
-            F.col("a.url") == F.col("b.url"),
-            F.col("a.sent_id") == F.col("b.sent_id"),
-            order("a") < order("b"),
-        ],
-    ).filter(
-        ~(
-            (F.col("a.canonical") == F.col("b.canonical"))
-            & (F.col("a.entity_class") == F.col("b.entity_class"))
-        )
-    )
-
-    ca, cb = F.col("a.entity_class"), F.col("b.entity_class")
-    na, nb = F.col("a.canonical"), F.col("b.canonical")
-
-    both_constructs = (ca == "construct") & (cb == "construct")
-
-    def rule(cls1: str, cls2: str) -> F.Column:
-        return ((ca == cls1) & (cb == cls2)) | ((ca == cls2) & (cb == cls1))
-
-    a_is_subj = F.when(both_constructs, F.lit(True)).otherwise(
-        F.when(rule("assessment", "construct"), ca == "assessment")
-        .when(rule("intervention", "construct"), ca == "intervention")
-        .when(rule("assessment", "intervention"), ca == "assessment")
-    )
-    pred = (
-        F.when(both_constructs, F.lit("association"))
-        .when(rule("assessment", "construct"), F.lit("measures"))
-        .when(rule("intervention", "construct"), F.lit("targets"))
-        .when(rule("assessment", "intervention"), F.lit("informs"))
-    )
-    return (
-        pairs.select(
-            F.when(a_is_subj, na).otherwise(nb).alias("subj"),
-            F.when(a_is_subj, ca).otherwise(cb).alias("subj_class"),
-            pred.alias("pred"),
-            F.when(a_is_subj, nb).otherwise(na).alias("obj"),
-            F.when(a_is_subj, cb).otherwise(ca).alias("obj_class"),
-            F.col("a.url").alias("url"),
-        )
-        .filter(F.col("pred").isNotNull())
-        .distinct()
-    )
 
 
 def _fused_triples_stage(

@@ -33,7 +33,6 @@ def assemble_docs(
     mentions: DataFrame,
     triples: DataFrame,
     pages: DataFrame,
-    pin_mentions: bool = True,
 ) -> DataFrame:
     """(mentions, triples, pages) -> reference-shaped document rows.
 
@@ -41,9 +40,7 @@ def assemble_docs(
     feeds the sentence-level technology->assessment co-occurrence join.
     Shuffles: one groupBy(url) each for entities and triples, plus the
     (url, sent_id) co-occurrence join + its groupBy(url) — then per-url
-    joins (co-partitioned).  Pass ``pin_mentions=False`` if the caller
-    already localCheckpoint-ed the frame (a second checkpoint would
-    materialize a redundant copy)."""
+    joins (co-partitioned)."""
     parent_map = F.create_map(
         *[
             x
@@ -95,8 +92,7 @@ def assemble_docs(
     # mentions feeds the entity rollup AND the sentence-level co-occurrence
     # self-join below — pin once (multi-consumer rule; Catalyst re-executes
     # the Python mention stage per consumer otherwise)
-    if pin_mentions:
-        mentions = mentions.localCheckpoint(eager=False)
+    mentions = mentions.localCheckpoint(eager=False)
 
     ents = mentions.groupBy("url").agg(
         F.sort_array(

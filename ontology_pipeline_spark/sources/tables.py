@@ -12,56 +12,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import PAGES
-
-TESTDATA_TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def register_testdata(spark: SparkSession, sf_dir: str) -> None:
-    """Register the driver's parquet tables as temp views (S1 scan analog)."""
-    for name in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(name)
-
-
-def read_pages(spark: SparkSession, path: str, enforce_schema: bool = True) -> DataFrame:
-    """Pages source with schema enforcement (input_hint shape)."""
-    df = spark.read.schema(PAGES).parquet(path) if enforce_schema else spark.read.parquet(path)
-    return df
-
-
-def read_text_files(spark: SparkSession, glob: str) -> DataFrame:
-    """Whole-file text source — the direct analog of the reference's
-    folder-of-transcripts scan (glob at src/extractor.py:255, whole-file read
-    at :206-207): one row per file, file name as the key."""
-    return (
-        spark.read.text(glob, wholetext=True)
-        .select(
-            F.input_file_name().alias("url"),
-            F.lit(None).cast("timestamp").alias("warc_ts"),
-            F.lit(None).cast("binary").alias("html"),
-            F.col("value").alias("text"),
-            F.lit(None).cast("string").alias("lang"),
-        )
-    )
-
-
-def write_triples(df: DataFrame, path: str, n_buckets: int = 32, mode: str = "append") -> None:
-    """Triples sink bucketed by subject hash (S4; Iceberg analog:
-    `bucket(N, subj)` partitioning)."""
-    df.withColumn("bucket", F.pmod(F.xxhash64("subj"), F.lit(n_buckets))).write.mode(
-        mode
-    ).partitionBy("bucket").parquet(path)
-
-
-def export_json_documents(df: DataFrame, path: str) -> None:
-    """Document-shaped JSON export (reference save_results pretty-print sink,
-    src/extractor.py:157-167) — one JSON object per line."""
-    df.write.mode("overwrite").json(path)
-
 
 # ---------------------------------------------------------------------------
 # Triple-sink seam (VERDICT r1 #7): the pipeline's commit protocol talks to

@@ -1,20 +1,16 @@
-"""Skew probe (VERDICT r1 #8): the two relation-extraction strategies at
-1M pages under head-entity skew, with AQE plan evidence.
+"""Skew probe (VERDICT r1 #8): the fused relation-extraction path at 1M
+pages under head-entity skew, with AQE plan evidence.
 
-Paths compared on the SAME text corpus (isolates the relation-scoring
-strategy; HTML parsing excluded from both):
-
-* fused  — one shuffle-free mapInPandas (text -> mentions -> pairs), then
-  the distinct-triple aggregation (the skewed shuffle);
-* joined — detect_mentions (mapInPandas) -> score_relations self-join on
-  (url, sent_id) -> the same distinct-triple aggregation.
+The path is one shuffle-free mapInPandas (text -> mentions -> pairs) over a
+text corpus (HTML parsing excluded), then the distinct-triple aggregation
+(the skewed shuffle).
 
 Head-entity skew ("Sleep Quality", "Heart Rate Variability" in ~50% of
-construct slots — synth.py:65,129-131) lives in the aggregation VALUES, not
-the (url, sent_id) join keys, so the probe reports (a) wall time of both
-paths, (b) the joined path's final AQE plan lines (AQEShuffleRead
-coalescing, skew-join markers if any fired, partial aggregates below the
-exchange), (c) the top-key share, quantifying the skew actually present.
+construct slots — synth.py:65,129-131) lives in the aggregation VALUES, so
+the probe reports (a) wall time of the path, (b) the distinct-triple
+aggregation's final AQE plan lines (AQEShuffleRead coalescing, skew
+markers if any fired, partial aggregates below the exchange), (c) the
+top-key share, quantifying the skew actually present.
 
 Usage: python scripts/skew_probe.py        # writes BENCH/skew_1m.md
 Env: SPARK_GRAFT_SKEW_PAGES (default 1_000_000), SPARK_GRAFT_CPUS.
@@ -36,11 +32,9 @@ RUNS = 3
 
 def main() -> None:
     from ontology_pipeline_spark.lexicon import lexicon_rows
-    from ontology_pipeline_spark.operators.mentions import detect_mentions
     from ontology_pipeline_spark.operators.relations import (
         distinct_triples,
         extract_triples_fused,
-        score_relations,
     )
     from ontology_pipeline_spark.session import get_spark
     from ontology_pipeline_spark.synth import corpus_cache_path, distributed_pages
@@ -57,33 +51,24 @@ def main() -> None:
     lex = lexicon_rows()
 
     def fused_df():
-        return distinct_triples(extract_triples_fused(pages, lex)).groupBy().count()
+        return distinct_triples(extract_triples_fused(pages, lex))
 
-    def joined_df():
-        m = detect_mentions(pages, lex)
-        return distinct_triples(score_relations(m)).groupBy().count()
+    fused_df().groupBy().count().collect()  # warm-up (python workers, code paths)
+    times = []
+    for _ in range(RUNS):
+        t0 = time.perf_counter()
+        fused_df().groupBy().count().collect()
+        times.append(time.perf_counter() - t0)
 
-    def bench(make):
-        make().collect()  # warm-up (python workers, code paths)
-        times = []
-        for _ in range(RUNS):
-            t0 = time.perf_counter()
-            make().collect()
-            times.append(time.perf_counter() - t0)
-        return times
-
-    t_fused = bench(fused_df)
-    t_joined = bench(joined_df)
-
-    # final adaptive plan of the joined path (execute, then read the SAME
-    # QueryExecution — AQE has finalized by then)
-    jd = joined_df()
-    jd.collect()
-    plan = jd._jdf.queryExecution().executedPlan().toString()
+    # final adaptive plan of the distinct-triple aggregation (execute, then
+    # read the SAME QueryExecution — AQE has finalized by then)
+    fd = fused_df()
+    fd.collect()
+    plan = fd._jdf.queryExecution().executedPlan().toString()
     keep = [
         ln.strip()
         for ln in plan.splitlines()
-        if any(k in ln for k in ("AQEShuffleRead", "skew", "Skew", "HashAggregate", "SortMergeJoin", "Exchange"))
+        if any(k in ln for k in ("AQEShuffleRead", "skew", "Skew", "HashAggregate", "Exchange"))
     ][:20]
 
     # skew quantification: share of the hottest subject in the triple stream
@@ -97,37 +82,25 @@ def main() -> None:
     )
     total = tri.count()
 
-    best_f, best_j = min(t_fused), min(t_joined)
+    best = min(times)
     md = f"""# BENCH/skew_1m — relation-path skew probe ({N_PAGES} pages, local[{cpus}])
 
-VERDICT r1 #8: isolate `score_relations`' (url, sent_id) self-join against
-the fused single-stage path under head-entity skew at >=1M pages.
-
-Both paths share the text corpus and the final distinct-triple aggregation;
-best of {RUNS} (host is noisy — raw timings listed).
+VERDICT r1 #8: the fused single-stage relation path under head-entity skew
+at >=1M pages.
 
 | path | plan shape | wall (best of {RUNS}) | raw timings (s) |
 |---|---|---|---|
-| fused  | 1 mapInPandas -> skewed agg | {best_f:.2f} s | {[round(t,2) for t in t_fused]} |
-| joined | mapInPandas -> (url,sent_id) self-join -> skewed agg | {best_j:.2f} s | {[round(t,2) for t in t_joined]} |
+| fused | 1 mapInPandas -> skewed agg | {best:.2f} s | {[round(t, 2) for t in times]} |
 
-Fused / joined ratio: **{best_j / best_f:.2f}x** — the self-join pays an
-extra shuffle of the full mention stream both ways plus the pair filter;
-the fused path pairs inside the Python stage and ships only triples.  At
-100x scale the gap widens with mention volume, which is why `run_pipeline`
-uses the fused path and `score_relations` remains the composable variant
-(needed when mentions are materialized anyway, e.g. document assembly).
-
-## Skew actually present (aggregation values, not join keys)
+## Skew actually present (aggregation values)
 
 Top subjects of {total} emitted triples:
 {chr(10).join(f"- `{r['subj']}`: {r['count']} ({100.0 * r['count'] / total:.1f}%)" for r in top)}
 
-The (url, sent_id) join keys stay high-cardinality/uniform — skew lives in
-the aggregation, where partial (map-side) HashAggregates absorb it before
-the exchange; AQE coalescing evens the reduce side.
+Partial (map-side) HashAggregates absorb the skew before the exchange; AQE
+coalescing evens the reduce side.
 
-## Joined-path final adaptive plan (filtered lines)
+## Distinct-triple aggregation final adaptive plan (filtered lines)
 
 ```
 {chr(10).join(keep)}
@@ -137,7 +110,7 @@ the exchange; AQE coalescing evens the reduce side.
     out = os.path.join(REPO, "BENCH", "skew_1m.md")
     with open(out, "w") as f:
         f.write(md)
-    print(f"fused {best_f:.2f}s joined {best_j:.2f}s -> {out}")
+    print(f"fused {best:.2f}s -> {out}")
     spark.stop()
 
 

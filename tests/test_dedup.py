@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from ontology_pipeline_spark.operators.dedup import (
@@ -43,29 +42,54 @@ def test_ngram_jaccard_pairs(spark):
     assert all(p in {(0, 1), (0, 2), (1, 2)} for p in got)
 
 
+def _brute_jaccard(rows, block, threshold):
+    """Every in-block pair scored in pure Python: the reference for
+    `ngram_jaccard_pairs` at n=1.  Tokens split on Java's `\\s` class as
+    `text_analysis.tokens` does; scores rounded HALF_UP to 6 places on the
+    double's decimal string, as Spark's `round` does."""
+    import itertools
+    import re
+    from decimal import ROUND_HALF_UP, Decimal
+
+    sets = [
+        (
+            r["doc_id"],
+            tuple(r[c] for c in block),
+            {t for t in re.split(r"[ \t\n\x0b\f\r]+", r["text"].lower()) if t},
+        )
+        for r in rows
+    ]
+    out = set()
+    for (ia, ka, sa), (ib, kb, sb) in itertools.combinations(sets, 2):
+        if ka != kb or not (sa | sb):
+            continue
+        j = len(sa & sb) / len(sa | sb)
+        j = float(Decimal(repr(j)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+        if j >= threshold:
+            out.add((min(ia, ib), max(ia, ib), j))
+    return out
+
+
+def _pair_set(df):
+    return {(r["id_a"], r["id_b"], r["jaccard"]) for r in df.collect()}
+
+
 def test_ngram_jaccard_salt_invariance(spark):
-    """Salting splits a hot block across reducers without changing the pairs."""
-    base = ngram_jaccard_pairs(
-        _docs(spark), block_cols=["lang", "source"], n=1, threshold=0.7,
-        prefix_filter=False,
-    )
-    salted = ngram_jaccard_pairs(
-        _docs(spark), block_cols=["lang", "source"], n=1, threshold=0.7, salt=4,
-        prefix_filter=False,
-    )
-    as_set = lambda df: {(r["id_a"], r["id_b"], r["jaccard"]) for r in df.collect()}
-    assert as_set(base) == as_set(salted)
+    """Spreading the input over more partitions does not change the pairs."""
+    kw = dict(block_cols=["lang", "source"], n=1, threshold=0.7)
+    base = ngram_jaccard_pairs(_docs(spark), **kw)
+    spread = ngram_jaccard_pairs(_docs(spark).repartition(3), **kw)
+    assert _pair_set(base) == _pair_set(spread)
 
 
 def test_ngram_jaccard_prefix_filter_equivalence(spark):
-    """The PPJoin-style prefix-filtered candidate path (the web-scale
-    default) returns exactly the same pairs+scores as exhaustive in-block
-    enumeration — the filter is lossless for Jaccard >= t."""
-    kw = dict(block_cols=["lang", "source"], n=1, threshold=0.7)
-    pref = ngram_jaccard_pairs(_docs(spark), prefix_filter=True, **kw)
-    full = ngram_jaccard_pairs(_docs(spark), prefix_filter=False, **kw)
-    as_set = lambda df: {(r["id_a"], r["id_b"], r["jaccard"]) for r in df.collect()}
-    assert as_set(pref) == as_set(full)
+    """The PPJoin-style prefix-filtered candidate path returns exactly the
+    pairs+scores of exhaustive in-block enumeration — the filter is lossless
+    for Jaccard >= t."""
+    got = _pair_set(
+        ngram_jaccard_pairs(_docs(spark), block_cols=["lang", "source"], n=1, threshold=0.7)
+    )
+    assert got == _brute_jaccard(_docs(spark).collect(), ["lang", "source"], 0.7)
 
 
 def test_ngram_jaccard_prefix_float_boundary(spark):
@@ -81,32 +105,20 @@ def test_ngram_jaccard_prefix_float_boundary(spark):
         ],
         ["doc_id", "text", "lang", "source"],
     )
-    kw = dict(block_cols=["lang", "source"], n=1, threshold=39 / 76)
-    pref = ngram_jaccard_pairs(docs, prefix_filter=True, **kw).collect()
-    full = ngram_jaccard_pairs(docs, prefix_filter=False, **kw).collect()
-    assert len(full) == 1
-    assert {(r["id_a"], r["id_b"], r["jaccard"]) for r in pref} == {
-        (r["id_a"], r["id_b"], r["jaccard"]) for r in full
-    }
-
-
-def test_ngram_jaccard_salt_with_prefix_filter_rejected(spark):
-    with pytest.raises(ValueError, match="salt"):
-        ngram_jaccard_pairs(
-            _docs(spark), block_cols=["lang"], salt=4, prefix_filter=True
-        )
+    got = ngram_jaccard_pairs(
+        docs, block_cols=["lang", "source"], n=1, threshold=39 / 76
+    )
+    assert _pair_set(got) == {(0, 1, 0.513158)}
 
 
 def test_ngram_jaccard_prefix_filter_equivalence_corpus(spark):
     """Same losslessness on a realistic corpus (driver testdata, sf0.001:
     real vocabulary, shared templates, many borderline scores)."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    kw = dict(block_cols=["lang", "source"], n=1, threshold=0.8)
-    pref = ngram_jaccard_pairs(docs, prefix_filter=True, **kw)
-    full = ngram_jaccard_pairs(docs, prefix_filter=False, **kw)
-    as_set = lambda df: {(r["id_a"], r["id_b"], r["jaccard"]) for r in df.collect()}
-    got = as_set(pref)
-    assert got == as_set(full)
+    got = _pair_set(
+        ngram_jaccard_pairs(docs, block_cols=["lang", "source"], n=1, threshold=0.8)
+    )
+    assert got == _brute_jaccard(docs.collect(), ["lang", "source"], 0.8)
     assert len(got) > 0  # the fixture corpus must actually exercise the path
 
 

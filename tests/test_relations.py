@@ -1,13 +1,9 @@
-"""Relation scoring: fused hot path vs DataFrame-join path vs golden set."""
+"""Relation scoring: the fused path vs the golden set and explicit rows."""
 
 from __future__ import annotations
 
 from ontology_pipeline_spark.lexicon import lexicon_rows
-from ontology_pipeline_spark.operators.mentions import detect_mentions
-from ontology_pipeline_spark.operators.relations import (
-    extract_triples_fused,
-    score_relations,
-)
+from ontology_pipeline_spark.operators.relations import extract_triples_fused
 
 
 def _key_set(rows):
@@ -20,24 +16,11 @@ def test_fused_triples_match_golden(spark, pages, corpus):
     assert got == want
 
 
-def test_join_path_equals_fused_path(spark, pages):
-    """MULTISET equality, not set equality — both paths must agree on
-    page-local dedup, not just on which triples exist somewhere."""
-    lex = lexicon_rows()
-    rows = lambda df: sorted(
-        (r["subj"], r["subj_class"], r["pred"], r["obj"], r["obj_class"], r["url"])
-        for r in df.collect()
-    )
-    fused = rows(extract_triples_fused(pages, lex))
-    joined = rows(score_relations(detect_mentions(pages, lex)))
-    assert fused == joined
-
-
 def test_join_path_equals_fused_on_repeats_and_shared_positions(spark):
     """Regression for the two historical divergences: (a) a mention repeated
-    in one sentence must not double-emit in the join path (page-local dedup);
-    (b) one alias mapped to two classes (same position, two mentions) must
-    pair in BOTH paths, not only the fused one."""
+    in one sentence must not double-emit (page-local dedup); (b) one alias
+    mapped to two classes (same position, two mentions) must pair as both
+    classes."""
     from ontology_pipeline_spark.lexicon import simple_lexicon
 
     lex = simple_lexicon(
@@ -53,13 +36,17 @@ def test_join_path_equals_fused_on_repeats_and_shared_positions(spark):
         ],
         ["url", "text"],
     )
-    rows = lambda d: sorted(
+    fused = sorted(
         (r["subj"], r["subj_class"], r["pred"], r["obj"], r["obj_class"], r["url"])
-        for r in d.collect()
+        for r in extract_triples_fused(df, lex).collect()
     )
-    fused = rows(extract_triples_fused(df, lex))
-    joined = rows(score_relations(detect_mentions(df, lex)))
-    assert fused == joined
+    assert fused == [
+        ("cmj scan", "assessment", "measures", "cmj scan", "construct", "u1"),
+        ("cmj scan", "assessment", "measures", "leg power", "construct", "u1"),
+        ("cmj scan", "construct", "association", "leg power", "construct", "u1"),
+        ("leg power", "construct", "association", "cmj scan", "construct", "u1"),
+        ("plyo block", "intervention", "targets", "leg power", "construct", "u2"),
+    ]
     # repeated mention produced ONE row, not two
     assert len([t for t in fused if t[5] == "u1" and t[0] == "cmj scan"]) == len(
         {t for t in fused if t[5] == "u1" and t[0] == "cmj scan"}
