@@ -9,15 +9,17 @@ decoder (zlib inflate + per-scanline unfilter, all five PNG filter types,
 integer block-average pooling) and `image_channel_stats`; `wav_decode` walks
 RIFF chunks to exact-integer PCM `audio_stats`; `y4m_decode` parses raw
 YUV4MPEG2 streams into per-frame planes for `video_stats` and real
-`sample_decoded_frames`; `jpeg_decode` is a real JPEG entropy decoder
-covering baseline sequential (SOF0/1: DHT Huffman, DC prediction, AC
-run-length, dequantize, float IDCT, 4:4:4/4:2:2/4:2:0 chroma upsampling,
-JFIF YCbCr->RGB) AND, since round 5, Huffman progressive (SOF2: the full
-T.81 G.2 multi-scan path — spectral selection, successive approximation,
-EOB runs, DC/AC refinement).  Arithmetic-coded and lossless JPEG return
-None from `jpeg_decode` itself, but the featurize stage classifies them
-via `jpeg_unsupported_reason` and raises at the codec seam so
-valid-but-unsupported streams are never mistaken for corrupt bytes.
+`sample_decoded_frames`; `jpeg_decode` is a real Huffman JPEG decoder
+with one path for sequential (SOF0/1) and progressive (SOF2) frames: one
+marker walk (`_jpeg_segments`), every scan decoded as a T.81 G.2 band
+(DHT Huffman, DC prediction, AC run-length, EOB runs, spectral selection,
+successive approximation, DC/AC refinement; a sequential scan is the full
+band) into int32 coefficient planes, then dequantize, float IDCT,
+4:4:4/4:2:2/4:2:0 chroma upsampling and JFIF YCbCr->RGB.  Arithmetic-coded
+and lossless JPEG return None from `jpeg_decode` itself, but the featurize
+stage classifies them via `jpeg_unsupported_reason` and raises at the
+codec seam so valid-but-unsupported streams are never mistaken for
+corrupt bytes.
 Undecodable payloads yield NULLs, never raise, so a corrupt shard cannot
 kill a 100 TB scan.
 
@@ -29,7 +31,7 @@ pass, no shuffle), so a real deployment swaps `png_decode` for a C codec
 * `extract_media_features(stub=True)` (default) computes deterministic fake
   features (byte-histogram moments) for any payload kind;
 * `stub=False` computes REAL features dispatched on the container — PNG and
-  baseline-JPEG pixel stats, PCM WAV sample stats, Y4M plane stats — and
+  JPEG pixel stats, PCM WAV sample stats, Y4M plane stats — and
   raises NotImplementedError only at the codec seams: compressed video
   PIXELS (ISO-BMFF/H.26x) and valid arithmetic/lossless/12-bit JPEG,
   exactly where a full decoder plugs in.  ISO-BMFF METADATA is real since
@@ -232,7 +234,7 @@ def _split_entropy(b: bytes, pos: int) -> tuple[list[bytes], int]:
     restart-interval chunks, removing 0xFF00 byte stuffing and skipping
     spec-legal 0xFF fill bytes.  Returns (chunks, end) where `end` is the
     offset of the 0xFF of the marker that terminated the scan (or len(b))
-    — progressive streams continue parsing segments from there."""
+    — the marker walk resumes there."""
     chunks: list[bytes] = []
     cur = bytearray()
     j = pos
@@ -261,10 +263,179 @@ def _split_entropy(b: bytes, pos: int) -> tuple[list[bytes], int]:
     return chunks, j
 
 
+# frame headers SOF0-SOF15; DHT, JPG and DAC share the 0xC0-0xCF range
+_JPEG_SOF = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
+
+
+def _jpeg_segments(b: bytes) -> Iterator[tuple[int, bytes | tuple[bytes, list[bytes]]]]:
+    """The JPEG marker walk (T.81 B.1.1): yield (marker, segment) for every
+    marker segment after SOI, stopping at EOI.  0xFF fill bytes are skipped;
+    TEM, RSTn and a repeated SOI carry no segment and are passed over.  An
+    SOS yields (header, chunks), the scan's entropy-coded data split at its
+    restart markers by `_split_entropy`, and the walk resumes at the marker
+    that ended the scan.  Raises ValueError on a missing marker or a
+    truncated segment; fewer than 4 trailing bytes end the walk."""
+    if len(b) < 4 or b[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG stream")
+    i = 2
+    while i + 4 <= len(b):
+        if b[i] != 0xFF:
+            raise ValueError("missing marker")
+        while i + 2 < len(b) and b[i + 1] == 0xFF:  # fill bytes
+            i += 1
+        marker = b[i + 1]
+        if marker == 0xD9:  # EOI
+            return
+        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
+            i += 2
+            continue
+        end = i + 2 + ((b[i + 2] << 8) | b[i + 3]) if i + 4 <= len(b) else 0
+        if not i + 4 <= end <= len(b):
+            raise ValueError("truncated segment")
+        if marker == 0xDA:  # SOS: entropy-coded data follows the header
+            chunks, nxt = _split_entropy(b, end)
+            yield marker, (b[i + 4 : end], chunks)
+            i = nxt
+        else:
+            yield marker, b[i + 4 : end]
+            i = end
+
+
+def _jpeg_refine_ac(rdr: _JpegBits, blk, k: int, se: int, p1: int, ac_t, eobrun: int) -> int:
+    """AC successive-approximation refinement of one block over the band
+    k..se (T.81 G.1.2.3, the jdphuff shape): new coefficients of magnitude
+    `p1` land in zero-history slots, and every nonzero-history coefficient
+    passed over reads one correction bit.  Returns the EOB run left."""
+    m1 = -p1
+    if eobrun == 0:
+        while k <= se:
+            rs = rdr.huff(ac_t)
+            r, s = rs >> 4, rs & 0xF
+            val = 0
+            if s:
+                if s != 1:
+                    raise ValueError("bad refinement size")
+                val = p1 if rdr.bits(1) else m1
+            elif r != 15:
+                eobrun = 1 << r
+                if r:
+                    eobrun += rdr.bits(r)
+                break
+            # advance over r zero-history coefficients, reading correction
+            # bits for nonzero ones
+            while k <= se:
+                z = _ZIGZAG[k]
+                c = int(blk[z])
+                if c:
+                    if rdr.bits(1) and (c & p1) == 0:
+                        blk[z] = c + (p1 if c >= 0 else m1)
+                else:
+                    if r == 0:
+                        break
+                    r -= 1
+                k += 1
+            if val:
+                if k > se:
+                    raise ValueError("band overrun")
+                blk[_ZIGZAG[k]] = val
+            k += 1
+    if eobrun:
+        while k <= se:  # correction bits for the band's rest
+            z = _ZIGZAG[k]
+            c = int(blk[z])
+            if c and rdr.bits(1) and (c & p1) == 0:
+                blk[z] = c + (p1 if c >= 0 else m1)
+            k += 1
+        eobrun -= 1
+    return eobrun
+
+
+def _jpeg_scan(chunks, dri, units, blocks_of, tbls, ss, se, ah, al) -> None:
+    """Decode one scan into quantized coefficient blocks: `blocks_of(u)`
+    yields (component, int32[64] block) for unit u, an MCU of an
+    interleaved scan or one block of a single-component scan.  Every scan
+    is a band of T.81 G.1.2: the DC coefficient when Ss=0, then AC Ss..Se;
+    Ah=0 is a first pass at bit Al, Ah>0 a refinement.  A sequential scan
+    is the case Ss=0, Se=63, Ah=Al=0.  Restart intervals reset the DC
+    predictors and the EOB run.  Magnitude categories above the 8-bit
+    limits (DC 11, AC 10; T.81 F.1.2.1/F.1.2.2) raise ValueError."""
+    rdr, ci, pred, eobrun = _JpegBits(chunks[0]), 0, dict.fromkeys(tbls, 0), 0
+    p1, lo = 1 << al, max(ss, 1)
+    for u in range(units):
+        if dri and u and u % dri == 0:
+            ci += 1
+            if ci >= len(chunks):
+                raise ValueError("missing restart chunk")
+            rdr, pred, eobrun = _JpegBits(chunks[ci]), dict.fromkeys(tbls, 0), 0
+        for cs, blk in blocks_of(u):
+            dc_t, ac_t = tbls[cs]
+            if ss == 0:
+                if ah == 0:
+                    t = rdr.huff(dc_t)
+                    if t > 11:
+                        raise ValueError("DC category above 11")
+                    pred[cs] += _extend(rdr.bits(t), t)
+                    blk[0] = pred[cs] << al
+                elif rdr.bits(1):
+                    blk[0] = int(blk[0]) | p1
+            if se == 0:
+                continue
+            if ah:
+                eobrun = _jpeg_refine_ac(rdr, blk, lo, se, p1, ac_t, eobrun)
+                continue
+            if eobrun:
+                eobrun -= 1
+                continue
+            k = lo
+            while k <= se:
+                rs = rdr.huff(ac_t)
+                r, s = rs >> 4, rs & 0xF
+                if s == 0:
+                    if r == 15:  # ZRL
+                        k += 16
+                        continue
+                    eobrun = (1 << r) - 1  # EOB / EOBn
+                    if r:
+                        eobrun += rdr.bits(r)
+                    break
+                k += r
+                if k > se or s > 10:
+                    raise ValueError("band overrun or AC size above 10")
+                blk[_ZIGZAG[k]] = _extend(rdr.bits(s), s) << al
+                k += 1
+
+
+def _jpeg_idct(arr, q):
+    """One component's pixel plane (uint8) from its int32 quantized
+    coefficient blocks (blocks_y, blocks_x, 64) and quantization table `q`
+    (zigzag order): dequantize and run the T.81 A.3.3 inverse DCT one
+    block at a time, so no float copy larger than a block exists."""
+    import numpy as np
+
+    basis = _dct_basis()
+    qnat = np.empty(64, dtype=np.float64)
+    qnat[_ZIGZAG] = q
+    by, bx = arr.shape[:2]
+    pl = np.empty((by * 8, bx * 8), dtype=np.uint8)
+    for yb in range(by):
+        for xb in range(bx):
+            # cast, then scale in place: a mixed-type multiply would stage
+            # the cast through numpy's ufunc buffer
+            blk = arr[yb, xb].astype(np.float64)
+            blk *= qnat
+            # per-block 2D matmuls, NOT a broadcasted/einsum form: a stacked
+            # matmul picks a different BLAS kernel, whose float rounding at
+            # the .5 boundary gives ±1 pixel differences
+            pix = basis.T @ blk.reshape(8, 8) @ basis + 128.0
+            pl[yb * 8 : yb * 8 + 8, xb * 8 : xb * 8 + 8] = np.clip(
+                np.rint(pix), 0, 255
+            ).astype(np.uint8)
+    return pl
+
+
 def _jpeg_output(w, h, comps, planes, hmax, vmax):
-    """Shared decode tail: crop (grayscale) or nearest-neighbor chroma
-    upsample + JFIF YCbCr->RGB (color) — identical for the baseline and
-    progressive entropy paths."""
+    """Decode tail: crop (grayscale) or nearest-neighbor chroma upsample +
+    JFIF YCbCr->RGB (color)."""
     import numpy as np
 
     if len(comps) == 1:
@@ -276,60 +447,61 @@ def _jpeg_output(w, h, comps, planes, hmax, vmax):
         ys = (np.arange(h) * vi // vmax).clip(0, pl.shape[0] - 1)
         xs = (np.arange(w) * hi // hmax).clip(0, pl.shape[1] - 1)
         full.append(pl[np.ix_(ys, xs)].astype(np.float64))
-    yy, cb, cr = full[0], full[1] - 128.0, full[2] - 128.0
-    rgb = np.stack(
-        [yy + kr * cr, yy - kgb * cb - kgr * cr, yy + kb * cb], axis=-1
-    )
-    return (w, h, 3, np.clip(np.rint(rgb), 0, 255).astype(np.uint8).tobytes())
+    yy, cb, cr = full
+    cb -= 128.0
+    cr -= 128.0
+    # one channel at a time in place through two scratch planes, so the
+    # stage peaks at five float64 planes + the uint8 output and its bytes
+    # (46 B/px); the float operations and their order are those of
+    # R = Y + kr*Cr, G = Y - kgb*Cb - kgr*Cr, B = Y + kb*Cb
+    rgb = np.empty((h, w, 3), dtype=np.uint8)
+    t, t2 = np.empty_like(yy), np.empty_like(yy)
+    np.add(yy, np.multiply(cr, kr, out=t), out=t)
+    rgb[:, :, 0] = np.clip(np.rint(t, out=t), 0, 255, out=t)
+    np.subtract(yy, np.multiply(cb, kgb, out=t), out=t)
+    np.subtract(t, np.multiply(cr, kgr, out=t2), out=t)
+    rgb[:, :, 1] = np.clip(np.rint(t, out=t), 0, 255, out=t)
+    np.add(yy, np.multiply(cb, kb, out=t), out=t)
+    rgb[:, :, 2] = np.clip(np.rint(t, out=t), 0, 255, out=t)
+    return (w, h, 3, rgb.tobytes())
 
 
 def jpeg_decode(b: bytes, max_pixel_bytes: int = 1 << 27) -> tuple[int, int, int, bytes] | None:
     """Pure-Python JPEG decode: (width, height, channels, raw samples
-    row-major) for Huffman streams — baseline sequential (SOF0/SOF1) here,
-    progressive (SOF2) via `_jpeg_decode_progressive` — 8-bit precision,
-    1-component grayscale or 3-component YCbCr with sampling factors up to
-    2x2 (4:4:4, 4:2:2, 4:2:0), restart markers honored.  The full entropy
-    path is real: DHT canonical Huffman tables, DC prediction + EXTEND, AC
-    run-length/ZRL/EOB, dequantize, dezigzag, float IDCT (numpy, T.81
-    A.3.3 basis), nearest-neighbor chroma upsampling, JFIF YCbCr->RGB.
-    Returns None (never raises) for non-JPEG,
-    arithmetic/lossless streams, 12-bit precision, >2x sampling,
-    corrupt/truncated data, or frames whose PEAK decode memory (padded
-    planes + float upsampling/color stages, ~51 bytes/pixel for color)
-    would exceed `max_pixel_bytes` — a bad shard yields a NULL row, never
-    a dead scan or an executor OOM.
+    row-major) for Huffman streams, sequential (SOF0/SOF1) and progressive
+    (SOF2), 8-bit precision, 1-component grayscale or 3-component YCbCr
+    with sampling factors up to 2x2 (4:4:4, 4:2:2, 4:2:0), restart markers
+    honored.  One path serves both frame kinds, since a sequential scan is
+    the full-band case of a progressive one (T.81 G.2): every scan
+    accumulates quantized coefficients into per-component int32 block
+    planes (DHT canonical Huffman tables, DC prediction + EXTEND, AC
+    run-length/ZRL/EOB runs, spectral selection, successive approximation
+    with DC/AC refinement), then one pass dequantizes and runs a float IDCT
+    (numpy, T.81 A.3.3 basis) per block, and the tail upsamples chroma
+    (nearest neighbor) and converts JFIF YCbCr->RGB.  DHT/DQT/DRI segments
+    between scans are honored.
+    Returns None (never raises) for non-JPEG, arithmetic/lossless streams,
+    12-bit precision, >2x sampling, corrupt/truncated data, or frames whose
+    PEAK decode memory would exceed `max_pixel_bytes`: the larger of the
+    coefficient + pixel planes (5 bytes per padded sample) and the pixel
+    planes + float upsampling/color stages (~51 bytes/pixel for color, 2
+    for grayscale).  A bad shard yields a NULL row, never a dead scan or
+    an executor OOM.
 
     Parity anchor: mirrors what the reference treats as opaque inputs (its
     corpus is text-only; this is the engine-extension media path).  A real
     deployment swaps this for a C codec (libjpeg-turbo) without touching
     the Spark contract — see the module docstring."""
-    if len(b) < 4 or b[:2] != b"\xff\xd8":
-        return None
     try:
         import numpy as np
 
         qt: dict[int, list[int]] = {}
         huff_dc: dict[int, dict] = {}
         huff_ac: dict[int, dict] = {}
-        frame = None  # (w, h, comps) comps: (cid, hi, vi, tq)
+        coeffs = None  # cid -> int32 (blocks_y, blocks_x, 64), zigzag-natural
         dri = 0
-        i = 2
-        scan = None
-        while i + 4 <= len(b):
-            if b[i] != 0xFF:
-                return None
-            while i + 1 < len(b) and b[i + 1] == 0xFF:
-                i += 1
-            marker = b[i + 1]
-            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                i += 2
-                continue
-            if i + 4 > len(b):
-                return None
-            seg_len = (b[i + 2] << 8) | b[i + 3]
-            seg = b[i + 4 : i + 2 + seg_len]
-            if len(seg) != seg_len - 2:
-                return None
+        scanned = False
+        for marker, seg in _jpeg_segments(b):
             if marker == 0xDB:  # DQT
                 j = 0
                 while j < len(seg):
@@ -339,192 +511,6 @@ def jpeg_decode(b: bytes, max_pixel_bytes: int = 1 << 27) -> tuple[int, int, int
                         qt[tq] = list(seg[j : j + 64])
                         j += 64
                     else:  # 16-bit table
-                        qt[tq] = [
-                            (seg[j + 2 * k] << 8) | seg[j + 2 * k + 1] for k in range(64)
-                        ]
-                        j += 128
-                    if len(qt[tq]) != 64:
-                        return None
-            elif marker == 0xC4:  # DHT
-                j = 0
-                while j + 17 <= len(seg):
-                    tc, th = seg[j] >> 4, seg[j] & 0xF
-                    bits = list(seg[j + 1 : j + 17])
-                    n = sum(bits)
-                    vals = seg[j + 17 : j + 17 + n]
-                    if len(vals) != n:
-                        return None
-                    (huff_dc if tc == 0 else huff_ac)[th] = _huff_table(bits, vals)
-                    j += 17 + n
-            elif marker in (0xC0, 0xC1):  # SOF0/SOF1 baseline sequential
-                if seg[0] != 8:
-                    return None  # 12-bit precision out of scope
-                h = (seg[1] << 8) | seg[2]
-                w = (seg[3] << 8) | seg[4]
-                nc = seg[5]
-                if w == 0 or h == 0 or nc not in (1, 3):
-                    return None
-                comps = []
-                for k in range(nc):
-                    cid, hv, tq = seg[6 + 3 * k], seg[7 + 3 * k], seg[8 + 3 * k]
-                    comps.append((cid, hv >> 4, hv & 0xF, tq))
-                frame = (w, h, comps)
-            elif marker == 0xC2:  # SOF2: progressive — own multi-scan path
-                return _jpeg_decode_progressive(b, max_pixel_bytes)
-            elif 0xC3 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                return None  # arithmetic/lossless/differential frames
-            elif marker == 0xDD:  # DRI
-                dri = (seg[0] << 8) | seg[1]
-            elif marker == 0xDA:  # SOS
-                ns = seg[0]
-                sel = {}
-                for k in range(ns):
-                    cs, t = seg[1 + 2 * k], seg[2 + 2 * k]
-                    sel[cs] = (t >> 4, t & 0xF)
-                scan = (sel, i + 2 + seg_len)
-                break
-            i += 2 + seg_len
-        if frame is None or scan is None:
-            return None
-        w, h, comps = frame
-        if len(comps) == 1:
-            # T.81 A.2: a single-component scan is non-interleaved — one
-            # data unit per MCU regardless of the declared hi/vi, and the
-            # component samples the full grid.  Honoring declared 2x2
-            # factors here would garble valid grayscale streams (libjpeg
-            # normalizes the same way).
-            cid, _hi, _vi, tq = comps[0]
-            comps = [(cid, 1, 1, tq)]
-        sel, pos = scan
-        hmax = max(c[1] for c in comps)
-        vmax = max(c[2] for c in comps)
-        if not all(1 <= c[1] <= 2 and 1 <= c[2] <= 2 for c in comps):
-            return None
-        mcus_x = -(-w // (8 * hmax))
-        mcus_y = -(-h // (8 * vmax))
-        # bound PEAK decode memory, not just output size: uint8 MCU-padded
-        # planes, plus (color path) two float64 full-resolution stages of
-        # 3 planes each (~48 B/px) and the uint8 output — so a crafted
-        # huge-but-valid frame yields a NULL row instead of an executor OOM
-        padded = sum(
-            (mcus_y * 8 * vi) * (mcus_x * 8 * hi) for _c, hi, vi, _t in comps
-        )
-        transient = padded + (51 * w * h if len(comps) == 3 else 2 * w * h)
-        if transient > max_pixel_bytes:
-            return None
-        chunks, _end = _split_entropy(b, pos)
-        basis = _dct_basis()
-        planes = {}
-        for cid, hi, vi, _tq in comps:
-            planes[cid] = np.zeros((mcus_y * 8 * vi, mcus_x * 8 * hi), dtype=np.uint8)
-        rdr = _JpegBits(chunks[0])
-        chunk_i = 0
-        pred = {c[0]: 0 for c in comps}
-        n_mcu = 0
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                if dri and n_mcu and n_mcu % dri == 0:
-                    chunk_i += 1
-                    if chunk_i >= len(chunks):
-                        return None
-                    rdr = _JpegBits(chunks[chunk_i])
-                    pred = {c[0]: 0 for c in comps}
-                for cid, hi, vi, tq in comps:
-                    td, ta = sel[cid]
-                    dc_t, ac_t = huff_dc[td], huff_ac[ta]
-                    q = qt[tq]
-                    for by in range(vi):
-                        for bx in range(hi):
-                            coeffs = [0] * 64
-                            t = rdr.huff(dc_t)
-                            diff = _extend(rdr.bits(t), t)
-                            pred[cid] += diff
-                            coeffs[0] = pred[cid] * q[0]
-                            k = 1
-                            while k < 64:
-                                rs = rdr.huff(ac_t)
-                                r, s = rs >> 4, rs & 0xF
-                                if s == 0:
-                                    if r == 15:  # ZRL
-                                        k += 16
-                                        continue
-                                    break  # EOB
-                                k += r
-                                if k > 63:
-                                    return None
-                                coeffs[_ZIGZAG[k]] = _extend(rdr.bits(s), s) * q[k]
-                                k += 1
-                            block = np.array(coeffs, dtype=np.float64).reshape(8, 8)
-                            pix = basis.T @ block @ basis + 128.0
-                            out = np.clip(np.rint(pix), 0, 255).astype(np.uint8)
-                            y0 = (my * vi + by) * 8
-                            x0 = (mx * hi + bx) * 8
-                            planes[cid][y0 : y0 + 8, x0 : x0 + 8] = out
-                n_mcu += 1
-        return _jpeg_output(w, h, comps, planes, hmax, vmax)
-    except (ValueError, IndexError, KeyError, ZeroDivisionError):
-        return None
-
-
-# when set to a dict by a test, _jpeg_decode_progressive stores the raw
-# accumulated coefficient planes in it (coefficient-level ground-truth
-# comparison against an independent encoder)
-_JPEG_PROG_TRACE: dict | None = None
-
-
-def _jpeg_decode_progressive(
-    b: bytes, max_pixel_bytes: int = 1 << 27
-) -> tuple[int, int, int, bytes] | None:
-    """Progressive (SOF2) Huffman JPEG decode — the multi-scan entropy path
-    of ITU T.81 G.2: coefficients accumulate across scans in a per-block
-    int buffer (spectral selection picks the zigzag band, successive
-    approximation the bit position), then one dequantize + IDCT + output
-    pass shared with the baseline decoder.  All four scan kinds are
-    implemented: DC first (interleaved or single-component), DC refinement
-    (one bit per block), AC first (EOB runs, ZRL), and AC refinement
-    (correction bits, the jdphuff-shaped algorithm).  DHT/DQT/DRI segments
-    between scans are honored; restart markers reset DC predictors and the
-    EOB run.  Returns None (never raises) on corrupt/truncated/unsupported
-    input, same contract and memory bound as `jpeg_decode` (plus 4
-    bytes/sample for the int32 coefficient planes)."""
-    if len(b) < 4 or b[:2] != b"\xff\xd8":
-        return None
-    try:
-        import numpy as np
-
-        qt: dict[int, list[int]] = {}
-        huff_dc: dict[int, dict] = {}
-        huff_ac: dict[int, dict] = {}
-        frame = None
-        dri = 0
-        i = 2
-        scans = []
-        while i + 4 <= len(b):
-            if b[i] != 0xFF:
-                return None
-            while i + 1 < len(b) and b[i + 1] == 0xFF:
-                i += 1
-            marker = b[i + 1]
-            if marker == 0xD9:  # EOI
-                break
-            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                i += 2
-                continue
-            if i + 4 > len(b):
-                return None
-            seg_len = (b[i + 2] << 8) | b[i + 3]
-            seg = b[i + 4 : i + 2 + seg_len]
-            if len(seg) != seg_len - 2:
-                return None
-            if marker == 0xDB:  # DQT
-                j = 0
-                while j < len(seg):
-                    pq, tq = seg[j] >> 4, seg[j] & 0xF
-                    j += 1
-                    if pq == 0:
-                        qt[tq] = list(seg[j : j + 64])
-                        j += 64
-                    else:
                         qt[tq] = [
                             (seg[j + 2 * k] << 8) | seg[j + 2 * k + 1] for k in range(64)
                         ]
@@ -542,9 +528,9 @@ def _jpeg_decode_progressive(
                         return None
                     (huff_dc if tc == 0 else huff_ac)[th] = _huff_table(bits, vals)
                     j += 17 + n
-            elif marker == 0xC2:  # SOF2
-                if frame is not None or seg[0] != 8:
-                    return None
+            elif marker in (0xC0, 0xC1, 0xC2) and coeffs is None:  # SOF0/1/2
+                if seg[0] != 8:
+                    return None  # 12-bit precision out of scope
                 h = (seg[1] << 8) | seg[2]
                 w = (seg[3] << 8) | seg[4]
                 nc = seg[5]
@@ -554,228 +540,101 @@ def _jpeg_decode_progressive(
                 for k in range(nc):
                     cid, hv, tq = seg[6 + 3 * k], seg[7 + 3 * k], seg[8 + 3 * k]
                     comps.append((cid, hv >> 4, hv & 0xF, tq))
-                frame = (w, h, comps)
-            elif 0xC0 <= marker <= 0xCF and marker not in (0xC8, 0xCC):
-                return None  # a second/other frame type
-            elif marker == 0xDD:  # DRI (per-scan: may change between scans)
-                dri = (seg[0] << 8) | seg[1]
-            elif marker == 0xDA:  # SOS — snapshot tables, slice entropy data
-                if frame is None:
+                if nc == 1:
+                    # T.81 A.2: a single-component scan is non-interleaved —
+                    # one data unit per MCU regardless of the declared hi/vi,
+                    # and the component samples the full grid.  Honoring
+                    # declared 2x2 factors here would garble valid grayscale
+                    # streams (libjpeg normalizes the same way).
+                    comps = [(comps[0][0], 1, 1, comps[0][3])]
+                if not all(1 <= c[1] <= 2 and 1 <= c[2] <= 2 for c in comps):
                     return None
-                ns = seg[0]
-                if len(seg) != 1 + 2 * ns + 3:
+                hmax = max(c[1] for c in comps)
+                vmax = max(c[2] for c in comps)
+                mcus_x = -(-w // (8 * hmax))
+                mcus_y = -(-h // (8 * vmax))
+                # bound PEAK decode memory, not just output size: 4 B/sample
+                # int32 coefficient planes + 1 B/sample uint8 pixel planes
+                # while they coexist; then, once the coefficients are freed,
+                # the pixel planes + (color path) five float64 full-resolution
+                # planes, the uint8 output and its bytes (46 B/px, bounded at
+                # 51) — so a crafted huge-but-valid frame yields a NULL row
+                # instead of an executor OOM.  The entropy data copied out of
+                # the input is input-sized and not counted.
+                padded = sum(64 * mcus_y * vi * mcus_x * hi for _c, hi, vi, _t in comps)
+                color = 51 * w * h if nc == 3 else 2 * w * h
+                if max(5 * padded, padded + color) > max_pixel_bytes:
                     return None
-                order = []
-                sel = {}
-                for k in range(ns):
-                    cs, t = seg[1 + 2 * k], seg[2 + 2 * k]
-                    order.append(cs)
-                    sel[cs] = (t >> 4, t & 0xF)
-                ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-                ahal = seg[3 + 2 * ns]
-                tbls = {
-                    cs: (
-                        huff_dc.get(sel[cs][0]) if ss == 0 else None,
-                        huff_ac.get(sel[cs][1]) if se > 0 else None,
-                    )
-                    for cs in order
+                progressive = marker == 0xC2
+                bycid = {c[0]: c for c in comps}
+                coeffs = {
+                    cid: np.zeros((mcus_y * vi, mcus_x * hi, 64), dtype=np.int32)
+                    for cid, hi, vi, _tq in comps
                 }
-                chunks, end = _split_entropy(b, i + 2 + seg_len)
-                scans.append((order, ss, se, ahal >> 4, ahal & 0xF, chunks, dri, tbls))
-                i = end
-                continue
-            i += 2 + seg_len
-        if frame is None or not scans:
+            elif marker in _JPEG_SOF:
+                return None  # arithmetic/lossless/differential or a second frame
+            elif marker == 0xDD:  # DRI (may change between scans)
+                dri = (seg[0] << 8) | seg[1]
+            elif marker == 0xDA:  # SOS
+                hdr, chunks = seg
+                ns = hdr[0]
+                if coeffs is None or len(hdr) != 4 + 2 * ns:
+                    return None
+                order = hdr[1 : 1 + 2 * ns : 2]
+                if any(cs not in bycid for cs in order):
+                    return None
+                ss, se, ahal = hdr[1 + 2 * ns : 4 + 2 * ns]
+                ah, al = ahal >> 4, ahal & 0xF
+                if not progressive:  # a sequential scan is the full band
+                    ss, se, ah, al = 0, 63, 0, 0
+                elif (se != 0) if ss == 0 else (ns != 1 or ss > se or se > 63):
+                    # T.81 G.1.1.1: a DC scan ends at Se=0, AC scans are
+                    # single-component
+                    return None
+                tbls = {
+                    cs: (huff_dc.get(t >> 4), huff_ac.get(t & 0xF))
+                    for cs, t in zip(order, hdr[2 : 2 + 2 * ns : 2])
+                }
+                if any(
+                    (ss == 0 and ah == 0 and dc_t is None) or (se > 0 and ac_t is None)
+                    for dc_t, ac_t in tbls.values()
+                ):
+                    return None
+                if ns > 1:  # interleaved: one MCU of every scan component per unit
+                    units = mcus_y * mcus_x
+                    # the block iterators index `coeffs` per call and hold no
+                    # plane, so popping a plane below frees it
+                    mcu = [
+                        (cs, bycid[cs][1], bycid[cs][2], by, bx)
+                        for cs in order
+                        for by in range(bycid[cs][2])
+                        for bx in range(bycid[cs][1])
+                    ]
+
+                    def blocks_of(u, mcu=mcu):
+                        my, mx = divmod(u, mcus_x)
+                        return [
+                            (cs, coeffs[cs][my * vi + by, mx * hi + bx])
+                            for cs, hi, vi, by, bx in mcu
+                        ]
+                else:  # single component: its TRUE (ceil-dims) block grid
+                    cs, hi, vi = order[0], bycid[order[0]][1], bycid[order[0]][2]
+                    cw, chh = -(-w * hi // hmax), -(-h * vi // vmax)
+                    bw, units = -(-cw // 8), -(-cw // 8) * -(-chh // 8)
+
+                    def blocks_of(u, cs=cs, bw=bw):
+                        return ((cs, coeffs[cs][u // bw, u % bw]),)
+                _jpeg_scan(chunks, dri, units, blocks_of, tbls, ss, se, ah, al)
+                scanned = True
+        if not scanned:
             return None
-        w, h, comps = frame
-        if len(comps) == 1:
-            # T.81 A.2 single-component normalization, as in jpeg_decode
-            cid, _hi, _vi, tq = comps[0]
-            comps = [(cid, 1, 1, tq)]
-        if not all(1 <= c[1] <= 2 and 1 <= c[2] <= 2 for c in comps):
-            return None
-        hmax = max(c[1] for c in comps)
-        vmax = max(c[2] for c in comps)
-        mcus_x = -(-w // (8 * hmax))
-        mcus_y = -(-h // (8 * vmax))
-        padded = sum(
-            (mcus_y * 8 * vi) * (mcus_x * 8 * hi) for _c, hi, vi, _t in comps
-        )
-        # baseline bound + 4 B/sample for the int32 coefficient planes
-        transient = 5 * padded + (51 * w * h if len(comps) == 3 else 2 * w * h)
-        if transient > max_pixel_bytes:
-            return None
-        bycid = {c[0]: c for c in comps}
-        coeffs = {
-            cid: np.zeros((mcus_y * vi, mcus_x * hi, 64), dtype=np.int32)
-            for cid, hi, vi, _tq in comps
+        # each coefficient plane is freed as its pixel plane is made, so none
+        # is alive in the color stage
+        planes = {
+            cid: _jpeg_idct(coeffs.pop(cid), qt[tq]) for cid, _hi, _vi, tq in comps
         }
-
-        def comp_grid(cs):
-            """TRUE (ceil-dims) block grid of a non-interleaved scan."""
-            _cid, hi, vi, _tq = bycid[cs]
-            cw, chh = -(-(w * hi) // hmax), -(-(h * vi) // vmax)
-            return -(-cw // 8), -(-chh // 8)
-
-        def decode_dc(order, ah, al, chunks, sdri, tbls):
-            rdr = _JpegBits(chunks[0])
-            ci = 0
-            pred = {cs: 0 for cs in order}
-            if len(order) > 1:
-                units = mcus_y * mcus_x
-
-                def blocks_of(u):
-                    my, mx = divmod(u, mcus_x)
-                    for cs in order:
-                        _cid, hi, vi, _tq = bycid[cs]
-                        for by in range(vi):
-                            for bx in range(hi):
-                                yield cs, my * vi + by, mx * hi + bx
-            else:
-                cs0 = order[0]
-                bw, _bh = comp_grid(cs0)
-                units = bw * _bh
-
-                def blocks_of(u):
-                    yield cs0, u // bw, u % bw
-
-            for u in range(units):
-                if sdri and u and u % sdri == 0:
-                    ci += 1
-                    if ci >= len(chunks):
-                        raise ValueError("missing restart chunk")
-                    rdr = _JpegBits(chunks[ci])
-                    pred = {cs: 0 for cs in order}
-                for cs, by, bx in blocks_of(u):
-                    blk = coeffs[cs][by, bx]
-                    if ah == 0:
-                        dc_t = tbls[cs][0]
-                        t = rdr.huff(dc_t)
-                        pred[cs] += _extend(rdr.bits(t), t)
-                        blk[0] = pred[cs] << al
-                    elif rdr.bits(1):
-                        blk[0] = int(blk[0]) | (1 << al)
-
-        def decode_ac(cs, ss, se, ah, al, chunks, sdri, ac_t):
-            bw, bh = comp_grid(cs)
-            arr = coeffs[cs]
-            rdr = _JpegBits(chunks[0])
-            ci = 0
-            eobrun = 0
-            p1, m1 = 1 << al, -(1 << al)
-            for u in range(bw * bh):
-                if sdri and u and u % sdri == 0:
-                    ci += 1
-                    if ci >= len(chunks):
-                        raise ValueError("missing restart chunk")
-                    rdr = _JpegBits(chunks[ci])
-                    eobrun = 0
-                blk = arr[u // bw, u % bw]
-                if ah == 0:  # AC first
-                    if eobrun:
-                        eobrun -= 1
-                        continue
-                    k = ss
-                    while k <= se:
-                        rs = rdr.huff(ac_t)
-                        r, s = rs >> 4, rs & 0xF
-                        if s == 0:
-                            if r == 15:  # ZRL
-                                k += 16
-                                continue
-                            eobrun = (1 << r) - 1
-                            if r:
-                                eobrun += rdr.bits(r)
-                            break
-                        k += r
-                        if k > se:
-                            raise ValueError("band overrun")
-                        blk[_ZIGZAG[k]] = _extend(rdr.bits(s), s) << al
-                        k += 1
-                else:  # AC refinement (jdphuff-shaped)
-                    k = ss
-                    if eobrun == 0:
-                        while k <= se:
-                            rs = rdr.huff(ac_t)
-                            r, s = rs >> 4, rs & 0xF
-                            val = 0
-                            if s:
-                                if s != 1:
-                                    raise ValueError("bad refinement size")
-                                val = p1 if rdr.bits(1) else m1
-                            elif r != 15:
-                                eobrun = 1 << r
-                                if r:
-                                    eobrun += rdr.bits(r)
-                                break
-                            # advance over r zero-history coefficients,
-                            # reading correction bits for nonzero ones
-                            while k <= se:
-                                z = _ZIGZAG[k]
-                                c = int(blk[z])
-                                if c:
-                                    if rdr.bits(1) and (c & p1) == 0:
-                                        blk[z] = c + (p1 if c >= 0 else m1)
-                                else:
-                                    if r == 0:
-                                        break
-                                    r -= 1
-                                k += 1
-                            if val:
-                                if k > se:
-                                    raise ValueError("band overrun")
-                                blk[_ZIGZAG[k]] = val
-                            k += 1
-                    if eobrun:
-                        while k <= se:  # correction bits for the band's rest
-                            z = _ZIGZAG[k]
-                            c = int(blk[z])
-                            if c and rdr.bits(1) and (c & p1) == 0:
-                                blk[z] = c + (p1 if c >= 0 else m1)
-                            k += 1
-                        eobrun -= 1
-
-        for order, ss, se, ah, al, chunks, sdri, tbls in scans:
-            if any(cs not in bycid for cs in order):
-                return None
-            if ss == 0:
-                if se != 0 or (ah == 0 and any(tbls[cs][0] is None for cs in order)):
-                    return None  # DC scan must have Se=0 and (first) DC tables
-                decode_dc(order, ah, al, chunks, sdri, tbls)
-            else:
-                # T.81 G.1.1.1: AC scans are single-component
-                if len(order) != 1 or se > 63 or ss > se:
-                    return None
-                ac_t = tbls[order[0]][1]
-                if ac_t is None:
-                    return None
-                decode_ac(order[0], ss, se, ah, al, chunks, sdri, ac_t)
-
-        if _JPEG_PROG_TRACE is not None:  # test/debug hook: raw coefficients
-            _JPEG_PROG_TRACE["coeffs"] = {c: a.copy() for c, a in coeffs.items()}
-            _JPEG_PROG_TRACE["comps"] = list(comps)
-        basis = _dct_basis()
-        planes = {}
-        for cid, hi, vi, tq in comps:
-            qnat = np.empty(64, dtype=np.float64)
-            qnat[_ZIGZAG] = np.array(qt[tq], dtype=np.float64)
-            by, bx = mcus_y * vi, mcus_x * hi
-            sarr = (coeffs[cid].astype(np.float64) * qnat).reshape(by, bx, 8, 8)
-            # per-block 2D matmuls, NOT a broadcasted/einsum form: only the
-            # byte-identical operation sequence gives the same float
-            # rounding at the .5 boundary as the baseline path's
-            # `basis.T @ block @ basis` (a stacked matmul picks a different
-            # BLAS kernel and ±1 pixel differences appear)
-            pl = np.empty((by * 8, bx * 8), dtype=np.uint8)
-            for yb in range(by):
-                for xb in range(bx):
-                    pix = basis.T @ sarr[yb, xb] @ basis + 128.0
-                    pl[yb * 8 : yb * 8 + 8, xb * 8 : xb * 8 + 8] = np.clip(
-                        np.rint(pix), 0, 255
-                    ).astype(np.uint8)
-            planes[cid] = pl
         return _jpeg_output(w, h, comps, planes, hmax, vmax)
-    except (ValueError, IndexError, KeyError, ZeroDivisionError):
+    except (ValueError, IndexError, KeyError, ZeroDivisionError, OverflowError):
         return None
 
 
@@ -853,6 +712,24 @@ def wav_decode(b: bytes) -> tuple[int, int, int, list[int]] | None:
     return (sample_rate, channels, n // channels, samples)
 
 
+def _wav_stats(wav: tuple[int, int, int, list[int]]) -> tuple:
+    """(sample_rate, channels, n_frames, duration_ms, peak, rms) of a
+    decoded WAV: exact integer millisecond floor, max |sample|, and the sqrt
+    of the exact integer sum of squares over n, round 6."""
+    import math
+
+    rate, ch, n_frames, samples = wav
+    n = len(samples)
+    return (
+        rate,
+        ch,
+        n_frames,
+        n_frames * 1000 // rate,
+        max((abs(s) for s in samples), default=0),
+        round(math.sqrt(sum(s * s for s in samples) / n), 6) if n else 0.0,
+    )
+
+
 def audio_stats(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     """REAL audio featurize for decodable PCM WAVs, one narrow Arrow-batched
     stage: sample_rate / channels / n_frames / duration_ms (exact integer
@@ -861,8 +738,6 @@ def audio_stats(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     IEEE-754 engine).  Undecodable payloads yield NULL rows, never raise."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
         cols = ["media_id", "format", "sample_rate", "channels", "n_frames", "duration_ms", "peak", "rms"]
         for pdf in batches:
             rows = []
@@ -871,21 +746,7 @@ def audio_stats(media: DataFrame, payload_col: str = "payload") -> DataFrame:
                 if decoded is None:
                     rows.append((mid, None, None, None, None, None, None, None))
                     continue
-                rate, ch, n_frames, samples = decoded
-                n = len(samples)
-                ssq = sum(s * s for s in samples)
-                rows.append(
-                    (
-                        mid,
-                        "wav",
-                        rate,
-                        ch,
-                        n_frames,
-                        n_frames * 1000 // rate,
-                        max((abs(s) for s in samples), default=0),
-                        round(math.sqrt(ssq / n), 6) if n else 0.0,
-                    )
-                )
+                rows.append((mid, "wav", *_wav_stats(decoded)))
             yield pd.DataFrame(rows, columns=cols)
 
     return media.select("media_id", payload_col).mapInPandas(
@@ -898,44 +759,31 @@ def audio_stats(media: DataFrame, payload_col: str = "payload") -> DataFrame:
 
 
 def jpeg_unsupported_reason(b: bytes) -> str | None:
-    """Classify a VALID-but-unsupported JPEG: walks the marker list to the
-    first frame header and names what a fuller codec would be needed for —
-    "differential-progressive" (SOF6/14), "lossless" (SOF3/7/11/15),
+    """Classify a VALID-but-unsupported JPEG: walks the marker segments to
+    the first frame header and names what a fuller codec would be needed
+    for — "differential-progressive" (SOF6/14), "lossless" (SOF3/7/11/15),
     "arithmetic-coded" (SOF9/10/13), "12-bit precision", or ">2x2 sampling".
-    Huffman progressive (SOF2) is NOT a gap since `_jpeg_decode_progressive`
-    landed — it decodes like baseline.  Returns None for
-    streams `jpeg_decode` handles AND for corrupt/non-JPEG bytes:
-    the caller distinguishes needs-codec (raise at the seam) from corrupt
-    (NULL row) — the distinction ADVICE r3 asked for, so a corpus full of
-    (say) arithmetic-coded JPEGs fails loudly instead of silently yielding
-    NULLs.  (ADVICE r3's original example WAS progressive; round 5 closed
-    that gap outright by decoding it.)"""
-    if len(b) < 4 or b[:2] != b"\xff\xd8":
-        return None
-    i = 2
-    while i + 4 <= len(b):
-        if b[i] != 0xFF:
-            return None
-        while i + 1 < len(b) and b[i + 1] == 0xFF:
-            i += 1
-        if i + 4 > len(b):
-            return None
-        marker = b[i + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            i += 2
-            continue
-        seg_len = (b[i + 2] << 8) | b[i + 3]
-        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
+    Huffman sequential and progressive frames (SOF0/1/2) are not a gap:
+    `jpeg_decode` decodes both.  Returns None for streams `jpeg_decode`
+    handles AND for corrupt/non-JPEG bytes (a truncated frame header, or a
+    scan before any frame header, is corrupt): the caller distinguishes
+    needs-codec (raise at the seam) from corrupt (NULL row), so a corpus
+    full of (say) arithmetic-coded JPEGs fails loudly instead of silently
+    yielding NULLs."""
+    try:
+        for marker, seg in _jpeg_segments(b):
+            if marker == 0xDA:
+                return None
+            if marker not in _JPEG_SOF:
+                continue
             if marker in (0xC6, 0xCE):
                 return "differential-progressive"
             if marker in (0xC3, 0xC7, 0xCB, 0xCF):
                 return "lossless"
             if marker in (0xC9, 0xCA, 0xCD):
                 return "arithmetic-coded"
-            # SOF0/1/2 (baseline/extended/progressive Huffman) all decode;
-            # the shared precision/sampling limits below still apply
-            seg = b[i + 4 : i + 2 + seg_len]
-            if len(seg) != seg_len - 2 or len(seg) < 6:
+            # SOF0/1/2 all decode; the precision/sampling limits still apply
+            if len(seg) < 6:
                 return None  # corrupt frame header, not a codec gap
             if seg[0] != 8:
                 return "12-bit precision"
@@ -947,7 +795,8 @@ def jpeg_unsupported_reason(b: bytes) -> str | None:
                 if (hv >> 4) > 2 or (hv & 0xF) > 2:
                     return ">2x2 sampling factors"
             return None
-        i += 2 + seg_len
+    except ValueError:
+        pass
     return None
 
 
@@ -969,48 +818,28 @@ def _decode_and_featurize(payload: bytes | None, kind: str, stub: bool) -> list[
             wav = wav_decode(payload)
             if wav is None:  # corrupt RIFF -> NULL row, never a dead scan
                 return None
-            import math
-
-            rate, ch, n_frames, samples = wav
-            n = len(samples)
-            return [
-                float(rate),
-                float(ch),
-                float(n_frames),
-                float(n_frames * 1000 // rate),
-                float(max((abs(s) for s in samples), default=0)),
-                round(math.sqrt(sum(s * s for s in samples) / n), 6) if n else 0.0,
-            ]
+            return [float(v) for v in _wav_stats(wav)]
         if payload[:9] == b"YUV4MPEG2":
             vid = y4m_decode(payload)
             if vid is None:
                 return None
-            w, h, num, den, frames = vid
-            nf = len(frames)
-            ysum = sum(sum(f[: w * h]) for f in frames)
-            return [
-                float(w),
-                float(h),
-                float(nf),
-                float(nf * 1000 * den // num),
-                round(ysum / (nf * w * h), 6),
-            ]
+            w, h, _num, _den, nf, duration_ms, y_mean = _y4m_stats(vid)
+            return [float(w), float(h), float(nf), float(duration_ms), y_mean]
         # corrupt-vs-unsupported distinction (the never-raise contract): a
         # recognizable container that needs a real codec — ISO-BMFF video,
-        # or a VALID progressive/arithmetic/12-bit JPEG — raises at this
-        # documented seam; anything else (corrupt stream, garbage bytes)
-        # yields a NULL feature so one bad shard cannot kill the scan
+        # or a VALID arithmetic/lossless/12-bit/>2x2-sampled JPEG — raises
+        # at this documented seam; anything else (corrupt stream, garbage
+        # bytes) yields a NULL feature so one bad shard cannot kill the scan
         jpeg_gap = jpeg_unsupported_reason(payload)
         if jpeg_gap is not None:
             raise NotImplementedError(
                 f"valid JPEG stream needs a fuller codec ({jpeg_gap}): "
-                "jpeg_decode covers baseline-sequential and progressive "
-                "Huffman 8-bit frames — plug libjpeg-turbo in here for "
-                "the rest"
+                "jpeg_decode covers sequential and progressive Huffman "
+                "8-bit frames — plug libjpeg-turbo in here for the rest"
             )
         if payload[4:8] == b"ftyp":
             raise NotImplementedError(
-                "real decode implemented for PNG and baseline JPEG pixels, "
+                "real decode implemented for PNG and JPEG pixels, "
                 "PCM WAV audio and Y4M video (dispatched above); compressed "
                 "video containers (ISO-BMFF/H.26x) need a codec library not "
                 "present in this environment — plug a decoder in here"
@@ -1069,33 +898,19 @@ def _png_dimensions(b: bytes) -> tuple[int, int] | None:
 
 
 def _jpeg_dimensions(b: bytes) -> tuple[int, int] | None:
-    """JPEG: walk the marker segments to the first SOF0-SOF15 frame header
-    (skipping the non-frame markers in that range: DHT/JPG/DAC), where
-    height/width are big-endian uint16 at offsets 3/5 into the segment."""
-    if len(b) < 4 or b[:2] != b"\xff\xd8":
-        return None
-    import struct
-
-    i = 2
-    while i + 4 <= len(b):
-        if b[i] != 0xFF:
-            return None
-        # spec-legal 0xFF fill bytes may pad the space before a marker
-        while i + 1 < len(b) and b[i + 1] == 0xFF:
-            i += 1
-        if i + 4 > len(b):
-            return None
-        marker = b[i + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:  # no payload
-            i += 2
-            continue
-        seg_len = struct.unpack(">H", b[i + 2 : i + 4])[0]
-        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            if i + 9 > len(b):
+    """JPEG: walk the marker segments to the first frame header (SOF0-SOF15),
+    where height/width are big-endian uint16 at offsets 1/3 into the
+    segment.  None for corrupt streams and for a scan before any frame."""
+    try:
+        for marker, seg in _jpeg_segments(b):
+            if marker == 0xDA:
                 return None
-            h, w = struct.unpack(">HH", b[i + 5 : i + 9])
-            return (w, h)
-        i += 2 + seg_len
+            if marker in _JPEG_SOF:
+                if len(seg) < 5:
+                    return None
+                return ((seg[3] << 8) | seg[4], (seg[1] << 8) | seg[2])
+    except ValueError:
+        pass
     return None
 
 
@@ -1135,7 +950,7 @@ def resize_images(
     height: int,
     payload_col: str = "payload",
 ) -> DataFrame:
-    """REAL image resize for decodable PNGs and baseline JPEGs: one narrow
+    """REAL image resize for decodable PNGs and JPEGs: one narrow
     Arrow-batched mapInPandas stage doing pure-Python decode + deterministic
     integer block-average pooling (`resize_pixels`).  Output rows carry the
     raw resized samples: (media_id, width, height, channels, pixels) — the
@@ -1170,7 +985,7 @@ def image_channel_stats(
     payload_col: str = "payload",
 ) -> DataFrame:
     """Decode + featurize in ONE narrow stage: per decodable image (PNG or
-    baseline JPEG; `format` carries which), the source
+    JPEG; `format` carries which), the source
     dimensions/channels, the mean over all samples, the mean of channel 0,
     and the mean of the block-average-resized thumbnail (all round(6) on
     exact integer sums, so the pure-Python golden replay reproduces every
@@ -1287,6 +1102,17 @@ def y4m_decode(
     if not frames:
         return None
     return (w, h, fps_num, fps_den, frames)
+
+
+def _y4m_stats(vid: tuple[int, int, int, int, list[bytes]]) -> tuple:
+    """(width, height, fps_num, fps_den, n_frames, duration_ms, y_mean) of a
+    decoded Y4M stream: exact integer floor of n_frames*1000*den/num, and
+    the mean of every Y-plane byte across all frames (round 6 on the exact
+    integer sum)."""
+    w, h, num, den, frames = vid
+    n = len(frames)
+    ysum = sum(sum(f[: w * h]) for f in frames)
+    return (w, h, num, den, n, n * 1000 * den // num, round(ysum / (n * w * h), 6))
 
 
 def _bmff_walk(b: bytes, start: int, end: int):
@@ -1465,22 +1291,7 @@ def video_stats(media: DataFrame, payload_col: str = "payload") -> DataFrame:
                         continue
                     rows.append((mid, None, None, None, None, None, None, None, None))
                     continue
-                w, h, num, den, frames = decoded
-                n = len(frames)
-                ysum = sum(sum(f[: w * h]) for f in frames)
-                rows.append(
-                    (
-                        mid,
-                        "y4m",
-                        w,
-                        h,
-                        num,
-                        den,
-                        n,
-                        n * 1000 * den // num,
-                        round(ysum / (n * w * h), 6),
-                    )
-                )
+                rows.append((mid, "y4m", *_y4m_stats(decoded)))
             yield pd.DataFrame(rows, columns=cols)
 
     return media.select("media_id", payload_col).mapInPandas(

@@ -9,7 +9,8 @@ changing their readers:
     mentions (url, sent_id, canonical, entity_class) -> entity rollup +
     sentence-level tech->assessment co-occurrence; triples (url, subj, pred,
     obj, classes) -> relationship rollup; then per-url joins
-    (co-partitioned) -> EXTRACTION_DOC rows -> to_json export.
+    (co-partitioned) -> EXTRACTION_DOC rows.  Serializing the rows to JSON
+    is left to the caller; no engine code writes them out.
 
 All arrays are sorted for determinism (SURVEY.md hard-part 3: never rely on
 collect order).

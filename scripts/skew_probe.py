@@ -19,6 +19,7 @@ Env: SPARK_GRAFT_SKEW_PAGES (default 1_000_000), SPARK_GRAFT_CPUS.
 from __future__ import annotations
 
 import os
+import re
 import sys
 import time
 
@@ -28,6 +29,26 @@ sys.path.insert(0, REPO)
 N_PAGES = int(os.environ.get("SPARK_GRAFT_SKEW_PAGES", "1000000"))
 SEED = 42
 RUNS = 3
+
+# a plan line: tree prefix, optional whole-stage codegen id "*(n) ", then the
+# operator name, which AQE suffixes with "(skew=true)" on a skew-split join
+_PLAN_NODE = re.compile(r"^[\s:+\-|]*(?:\*\(\d+\)\s*)?(\w+)(\(skew=true\))?")
+# the distinct-triple aggregation plans as SortAggregate (min over a string);
+# the earlier plan recorded in BENCH/skew_1m.md shows HashAggregate
+_EVIDENCE_OPS = ("AQEShuffleRead", "Exchange", "HashAggregate", "SortAggregate")
+
+
+def plan_evidence(plan: str) -> list[str]:
+    """The plan lines whose operator is a shuffle read, exchange or
+    aggregate, or that carry AQE's skew-join marker.  Matching the operator
+    name, not a substring, keeps scan lines out (a corpus path may itself
+    contain "skew")."""
+    keep = []
+    for ln in plan.splitlines():
+        m = _PLAN_NODE.match(ln)
+        if m and (m.group(1) in _EVIDENCE_OPS or m.group(2)):
+            keep.append(ln.strip())
+    return keep
 
 
 def main() -> None:
@@ -65,11 +86,7 @@ def main() -> None:
     fd = fused_df()
     fd.collect()
     plan = fd._jdf.queryExecution().executedPlan().toString()
-    keep = [
-        ln.strip()
-        for ln in plan.splitlines()
-        if any(k in ln for k in ("AQEShuffleRead", "skew", "Skew", "HashAggregate", "Exchange"))
-    ][:20]
+    keep = plan_evidence(plan)[:20]
 
     # skew quantification: share of the hottest subject in the triple stream
     from pyspark.sql import functions as F
@@ -97,7 +114,7 @@ at >=1M pages.
 Top subjects of {total} emitted triples:
 {chr(10).join(f"- `{r['subj']}`: {r['count']} ({100.0 * r['count'] / total:.1f}%)" for r in top)}
 
-Partial (map-side) HashAggregates absorb the skew before the exchange; AQE
+Partial (map-side) aggregates absorb the skew before the exchange; AQE
 coalescing evens the reduce side.
 
 ## Distinct-triple aggregation final adaptive plan (filtered lines)

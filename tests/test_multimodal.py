@@ -560,12 +560,14 @@ def test_jpeg_lossy_roundtrip_bounded():
 def test_jpeg_restart_markers_and_dims():
     """DRI/RSTn handling: a stream with restart_interval=2 decodes
     identically to the unrestarted stream (DC predictors reset per
-    interval), and header dims agree with the full decode."""
+    interval), and header dims agree with the full decode — also for the
+    progressive encode and for a stream with 0xFF fill bytes before a
+    marker (T.81 B.1.1.2)."""
     from ontology_pipeline_spark.operators.multimodal import (
         _jpeg_dimensions,
         jpeg_decode,
     )
-    from ontology_pipeline_spark.synth import jpeg_encode
+    from ontology_pipeline_spark.synth import jpeg_encode, jpeg_encode_progressive
 
     w, h = 37, 22  # 5x3 MCUs at 4:4:4 -> several restart intervals
     yp = bytes(((x // 8) * 31 + (y // 8) * 17) % 256 for y in range(h) for x in range(w))
@@ -576,6 +578,11 @@ def test_jpeg_restart_markers_and_dims():
     assert a is not None and b is not None
     assert a == b  # mosaic -> both exact -> equal
     assert _jpeg_dimensions(rst) == (w, h) == (a[0], a[1])
+    assert _jpeg_dimensions(jpeg_encode_progressive(w, h, [yp], restart_interval=2)) == (w, h)
+    i = plain.find(b"\xff\xc0")
+    filled = plain[:i] + b"\xff\xff\xff" + plain[i:]
+    assert _jpeg_dimensions(filled) == (w, h)
+    assert jpeg_decode(filled) == a
 
 
 def test_jpeg_decode_progressive_parity_and_mutations():
@@ -614,6 +621,64 @@ def test_jpeg_decode_progressive_parity_and_mutations():
                 at = rng.randrange(len(b))
                 b[at:at] = bytes(rng.randrange(256) for _ in range(rng.randint(1, 32)))
             jpeg_decode(bytes(b))  # any return is fine; raising is the failure
+
+
+def test_jpeg_decode_rejects_magnitude_categories_above_8bit_limits():
+    """A DC Huffman value of 0x40 asks for a 64-bit difference, past the
+    8-bit DC category limit of 11 (T.81 F.1.2.1): the stream is corrupt and
+    decodes to None instead of overflowing the int32 coefficient planes."""
+    from ontology_pipeline_spark.operators.multimodal import jpeg_decode
+    from ontology_pipeline_spark.synth import jpeg_encode_progressive
+
+    w, h = 19, 14
+    yp = bytes(((x // 8) * 50 + 40) % 256 for y in range(h) for x in range(w))
+    prog = bytearray(jpeg_encode_progressive(w, h, [yp]))
+    assert jpeg_decode(bytes(prog)) is not None
+    prog[132] = 0x40  # a DC Huffman value
+    assert jpeg_decode(bytes(prog)) is None
+
+
+def test_jpeg_decode_peak_memory_bound():
+    """`max_pixel_bytes` bounds the larger of the int32 coefficient + uint8
+    pixel planes (5 B per padded sample) and the pixel planes + float color
+    stages (51 B/px color, 2 B/px grayscale), for sequential and progressive
+    frames alike.  A 24x16 frame: 3x1152 padded color samples, 384 gray.
+    The bound holds for the memory the decode actually allocates (numpy
+    reports its buffers to tracemalloc): no coefficient plane may outlive
+    its IDCT into the color stage."""
+    import tracemalloc
+
+    from ontology_pipeline_spark.operators.multimodal import jpeg_decode
+    from ontology_pipeline_spark.synth import jpeg_encode, jpeg_encode_progressive
+
+    w, h = 24, 16
+    for ncomp, limit in ((3, 20736), (1, 1920)):
+        planes = [bytes((x * 3 + y * 5 + c * 17) % 256 for y in range(h) for x in range(w)) for c in range(ncomp)]
+        for enc in (jpeg_encode, jpeg_encode_progressive):
+            b = enc(w, h, planes)
+            assert jpeg_decode(b, limit) is not None, (ncomp, enc.__name__)
+            assert jpeg_decode(b, limit - 1) is None, (ncomp, enc.__name__)
+
+    # 128x96 (MCU-aligned): padded = w*h per full-resolution component.  A
+    # lingering int32 plane would add 4 B per padded sample (>= 48 KiB),
+    # more than the slack: fixed tables plus the stream's entropy data,
+    # which the decoder copies out of the input (un-stuffed, restart-split)
+    w, h = 128, 96
+    for ncomp, sub, padded in ((3, "444", 3 * w * h), (3, "420", w * h * 3 // 2), (1, "444", w * h)):
+        planes = [bytes((x * 3 + y * 5 + c * 17) % 256 for y in range(h) for x in range(w)) for c in range(ncomp)]
+        limit = max(5 * padded, padded + (51 if ncomp == 3 else 2) * w * h)
+        for enc in (jpeg_encode, jpeg_encode_progressive):
+            b = enc(w, h, planes, subsampling=sub)
+            want = jpeg_decode(b, limit)
+            assert want is not None, (ncomp, sub, enc.__name__)
+            tracemalloc.start()
+            try:
+                got = jpeg_decode(b, limit)
+                peak = tracemalloc.get_traced_memory()[1]
+            finally:
+                tracemalloc.stop()
+            assert got == want
+            assert peak <= limit + 2 * len(b) + (1 << 14), (ncomp, sub, enc.__name__, peak, limit, len(b))
 
 
 def test_jpeg_progressive_matrix_matches_baseline():
