@@ -16,12 +16,11 @@ Arrow-batched; at 100 TB it scales linearly with input partitions.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..schemas import MENTIONS
+from .stage import map_rows
 
 _SENT_SPLIT = re.compile(r"(?<=[.!?])\s+|\n")
 
@@ -88,13 +87,8 @@ def detect_mentions(
     """pages -> mentions via Arrow-batched mapInPandas (no shuffle)."""
     lex = tuple(tuple(r) for r in lexicon_rows)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row_fn():
         pattern, lookup = _compile(lex)
-        cols = ["url", "sent_id", "pos", "surface", "canonical", "entity_class"]
-        for pdf in batches:
-            rows: list[tuple] = []
-            for url, text in zip(pdf[id_col], pdf[text_col]):
-                rows.extend(scan_text(url, text, pattern, lookup))
-            yield pd.DataFrame(rows, columns=cols)
+        return lambda url, text: scan_text(url, text, pattern, lookup)
 
-    return pages.select(id_col, text_col).mapInPandas(run, schema=MENTIONS)
+    return map_rows(pages, [id_col, text_col], MENTIONS, make_row_fn)

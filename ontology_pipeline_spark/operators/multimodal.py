@@ -47,11 +47,11 @@ import struct
 import zlib
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import MEDIA_FEATURES
+from .stage import map_rows
 
 FEATURE_DIM = 8
 
@@ -737,24 +737,18 @@ def audio_stats(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     integer sum of squares over n, round 6 — bit-reproducible in any
     IEEE-754 engine).  Undecodable payloads yield NULL rows, never raise."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "format", "sample_rate", "channels", "n_frames", "duration_ms", "peak", "rms"]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                decoded = wav_decode(bytes(payload)) if payload is not None else None
-                if decoded is None:
-                    rows.append((mid, None, None, None, None, None, None, None))
-                    continue
-                rows.append((mid, "wav", *_wav_stats(decoded)))
-            yield pd.DataFrame(rows, columns=cols)
+    def row(mid, payload):
+        decoded = wav_decode(bytes(payload)) if payload is not None else None
+        if decoded is None:
+            return [(mid, None, None, None, None, None, None, None)]
+        return [(mid, "wav", *_wav_stats(decoded))]
 
-    return media.select("media_id", payload_col).mapInPandas(
-        run,
-        schema=(
-            "media_id string, format string, sample_rate long, channels long, "
-            "n_frames long, duration_ms long, peak long, rms double"
-        ),
+    return map_rows(
+        media,
+        ["media_id", payload_col],
+        "media_id string, format string, sample_rate long, channels long, "
+        "n_frames long, duration_ms long, peak long, rms double",
+        lambda: row,
     )
 
 
@@ -800,6 +794,15 @@ def jpeg_unsupported_reason(b: bytes) -> str | None:
     return None
 
 
+def _pixel_means(w: int, h: int, ch: int, pix: bytes) -> tuple[float, list[float]]:
+    """(mean over all samples, [mean of each channel]) of decoded pixels,
+    each round(6) on an exact integer sum — bit-reproducible by the
+    pure-Python golden replay."""
+    n = w * h
+    sums = [sum(pix[c::ch]) for c in range(ch)]
+    return round(sum(sums) / (n * ch), 6), [round(t / n, 6) for t in sums]
+
+
 def _decode_and_featurize(payload: bytes | None, kind: str, stub: bool) -> list[float] | None:
     if payload is None:
         return None
@@ -808,12 +811,8 @@ def _decode_and_featurize(payload: bytes | None, kind: str, stub: bool) -> list[
         decoded = image_decode(payload)
         if decoded is not None:
             _fmt, w, h, ch, pix = decoded
-            n = w * h
-            means = [0.0] * 4
-            for c in range(ch):
-                means[c] = round(sum(pix[c::ch]) / n, 6)
-            mean_all = round(sum(pix) / (n * ch), 6)
-            return [float(w), float(h), float(ch), mean_all, *means]
+            mean_all, means = _pixel_means(w, h, ch, pix)
+            return [float(w), float(h), float(ch), mean_all, *means, *([0.0] * (4 - ch))]
         if payload[:4] == b"RIFF":
             wav = wav_decode(payload)
             if wav is None:  # corrupt RIFF -> NULL row, never a dead scan
@@ -864,26 +863,19 @@ def extract_media_features(
     """media -> (media_id, kind, n_bytes, sha1, feature) via one Arrow-batched
     mapInPandas stage (narrow; binary bytes never leave the executor)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "kind", "n_bytes", "sha1", "feature"]
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else None
-                rows.append(
-                    (
-                        mid,
-                        kind,
-                        len(b) if b is not None else 0,
-                        hashlib.sha1(b).hexdigest() if b is not None else "",
-                        _decode_and_featurize(b, kind, stub),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def row(mid, kind, payload):
+        b = bytes(payload) if payload is not None else None
+        return [
+            (
+                mid,
+                kind,
+                len(b) if b is not None else 0,
+                hashlib.sha1(b).hexdigest() if b is not None else "",
+                _decode_and_featurize(b, kind, stub),
+            )
+        ]
 
-    return media.select("media_id", "kind", payload_col).mapInPandas(
-        run, schema=MEDIA_FEATURES
-    )
+    return map_rows(media, ["media_id", "kind", payload_col], MEDIA_FEATURES, lambda: row)
 
 
 def _png_dimensions(b: bytes) -> tuple[int, int] | None:
@@ -920,27 +912,23 @@ def image_dimensions(media: DataFrame, payload_col: str = "payload") -> DataFram
     imaging library needed, so this path runs for real in any environment.
     Unrecognized/truncated payloads yield NULL dimensions (never raise)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "format", "width", "height"]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                fmt, dims = None, None
-                png = _png_dimensions(b)
-                if png is not None:
-                    fmt, dims = "png", png
-                else:
-                    jpg = _jpeg_dimensions(b)
-                    if jpg is not None:
-                        fmt, dims = "jpeg", jpg
-                rows.append(
-                    (mid, fmt, dims[0] if dims else None, dims[1] if dims else None)
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def row(mid, payload):
+        b = bytes(payload) if payload is not None else b""
+        fmt, dims = None, None
+        png = _png_dimensions(b)
+        if png is not None:
+            fmt, dims = "png", png
+        else:
+            jpg = _jpeg_dimensions(b)
+            if jpg is not None:
+                fmt, dims = "jpeg", jpg
+        return [(mid, fmt, dims[0] if dims else None, dims[1] if dims else None)]
 
-    return media.select("media_id", payload_col).mapInPandas(
-        run, schema="media_id string, format string, width long, height long"
+    return map_rows(
+        media,
+        ["media_id", payload_col],
+        "media_id string, format string, width long, height long",
+        lambda: row,
     )
 
 
@@ -958,24 +946,18 @@ def resize_images(
     payloads (corrupt, unsupported codec) yield NULL
     width/height/channels/pixels; the scan never dies on a bad shard."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "width", "height", "channels", "pixels"]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                decoded = image_decode(bytes(payload)) if payload is not None else None
-                if decoded is None:
-                    rows.append((mid, None, None, None, None))
-                else:
-                    _fmt, w, h, ch, pix = decoded
-                    rows.append(
-                        (mid, width, height, ch, resize_pixels(pix, w, h, ch, width, height))
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def row(mid, payload):
+        decoded = image_decode(bytes(payload)) if payload is not None else None
+        if decoded is None:
+            return [(mid, None, None, None, None)]
+        _fmt, w, h, ch, pix = decoded
+        return [(mid, width, height, ch, resize_pixels(pix, w, h, ch, width, height))]
 
-    return media.select("media_id", payload_col).mapInPandas(
-        run,
-        schema="media_id string, width long, height long, channels long, pixels binary",
+    return map_rows(
+        media,
+        ["media_id", payload_col],
+        "media_id string, width long, height long, channels long, pixels binary",
+        lambda: row,
     )
 
 
@@ -993,37 +975,23 @@ def image_channel_stats(
     payloads yield a NULL-stats row (filter on `format` to drop them)."""
     out_w, out_h = resize_to
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "format", "width", "height", "channels", "mean_all", "mean_c0", "resized_mean"]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                decoded = image_decode(bytes(payload)) if payload is not None else None
-                if decoded is None:
-                    rows.append((mid, None, None, None, None, None, None, None))
-                    continue
-                fmt, w, h, ch, pix = decoded
-                rp = resize_pixels(pix, w, h, ch, out_w, out_h)
-                rows.append(
-                    (
-                        mid,
-                        fmt,
-                        w,
-                        h,
-                        ch,
-                        round(sum(pix) / (w * h * ch), 6),
-                        round(sum(pix[0::ch]) / (w * h), 6),
-                        round(sum(rp) / (out_w * out_h * ch), 6),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def row(mid, payload):
+        decoded = image_decode(bytes(payload)) if payload is not None else None
+        if decoded is None:
+            return [(mid, None, None, None, None, None, None, None)]
+        fmt, w, h, ch, pix = decoded
+        mean_all, means = _pixel_means(w, h, ch, pix)
+        rp = resize_pixels(pix, w, h, ch, out_w, out_h)
+        return [
+            (mid, fmt, w, h, ch, mean_all, means[0], round(sum(rp) / (out_w * out_h * ch), 6))
+        ]
 
-    return media.select("media_id", payload_col).mapInPandas(
-        run,
-        schema=(
-            "media_id string, format string, width long, height long, "
-            "channels long, mean_all double, mean_c0 double, resized_mean double"
-        ),
+    return map_rows(
+        media,
+        ["media_id", payload_col],
+        "media_id string, format string, width long, height long, "
+        "channels long, mean_all double, mean_c0 double, resized_mean double",
+        lambda: row,
     )
 
 
@@ -1229,29 +1197,23 @@ def bmff_tracks(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     (metadata analog of the corrupt-shard contract); one narrow
     Arrow-batched stage, bytes never leave the executor."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "media_id", "major_brand", "duration_ms", "track_idx",
-            "handler", "codec", "width", "height",
+    def row(mid, payload):
+        meta = bmff_metadata(bytes(payload)) if payload is not None else None
+        if meta is None:
+            return []
+        major, dur_ms, tracks = meta
+        return [
+            (mid, major, dur_ms, idx, handler, codec, w, h)
+            for idx, (handler, codec, w, h) in enumerate(tracks)
         ]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                meta = bmff_metadata(bytes(payload)) if payload is not None else None
-                if meta is None:
-                    continue
-                major, dur_ms, tracks = meta
-                for idx, (handler, codec, w, h) in enumerate(tracks):
-                    rows.append((mid, major, dur_ms, idx, handler, codec, w, h))
-            yield pd.DataFrame(rows, columns=cols)
 
-    return media.select("media_id", payload_col).mapInPandas(
-        run,
-        schema=(
-            "media_id string, major_brand string, duration_ms long, "
-            "track_idx long, handler string, codec string, "
-            "width long, height long"
-        ),
+    return map_rows(
+        media,
+        ["media_id", payload_col],
+        "media_id string, major_brand string, duration_ms long, "
+        "track_idx long, handler string, codec string, "
+        "width long, height long",
+        lambda: row,
     )
 
 
@@ -1267,40 +1229,28 @@ def video_stats(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     the featurize seam).  Undecodable payloads yield NULL rows, never
     raise — the corrupt-shard contract shared by every decoder here."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "media_id", "format", "width", "height", "fps_num", "fps_den",
-            "n_frames", "duration_ms", "y_mean",
-        ]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else None
-                decoded = y4m_decode(b) if b is not None else None
-                if decoded is None:
-                    meta = bmff_metadata(b) if b is not None else None
-                    if meta is not None:
-                        _major, dur_ms, tracks = meta
-                        vid = next(
-                            (t for t in tracks if t[0] == "vide"),
-                            tracks[0] if tracks else (None, None, None, None),
-                        )
-                        rows.append(
-                            (mid, "isobmff", vid[2], vid[3], None, None, None, dur_ms, None)
-                        )
-                        continue
-                    rows.append((mid, None, None, None, None, None, None, None, None))
-                    continue
-                rows.append((mid, "y4m", *_y4m_stats(decoded)))
-            yield pd.DataFrame(rows, columns=cols)
+    def row(mid, payload):
+        b = bytes(payload) if payload is not None else None
+        decoded = y4m_decode(b) if b is not None else None
+        if decoded is not None:
+            return [(mid, "y4m", *_y4m_stats(decoded))]
+        meta = bmff_metadata(b) if b is not None else None
+        if meta is None:
+            return [(mid, None, None, None, None, None, None, None, None)]
+        _major, dur_ms, tracks = meta
+        vid = next(
+            (t for t in tracks if t[0] == "vide"),
+            tracks[0] if tracks else (None, None, None, None),
+        )
+        return [(mid, "isobmff", vid[2], vid[3], None, None, None, dur_ms, None)]
 
-    return media.select("media_id", payload_col).mapInPandas(
-        run,
-        schema=(
-            "media_id string, format string, width long, height long, "
-            "fps_num long, fps_den long, n_frames long, duration_ms long, "
-            "y_mean double"
-        ),
+    return map_rows(
+        media,
+        ["media_id", payload_col],
+        "media_id string, format string, width long, height long, "
+        "fps_num long, fps_den long, n_frames long, duration_ms long, "
+        "y_mean double",
+        lambda: row,
     )
 
 
@@ -1321,39 +1271,32 @@ def sample_decoded_frames(
     seam `sample_video_frames` remains for payloads with no real decoder."""
     out_w, out_h = thumb
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "frame_idx", "frame_ts_ms", "y_mean", "thumb_mean"]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                decoded = y4m_decode(bytes(payload)) if payload is not None else None
-                if decoded is None:
-                    continue
-                w, h, num, den, frames = decoded
-                duration_ms = len(frames) * 1000 * den // num
-                for ts in range(0, duration_ms, every_ms):
-                    idx = ts * num // (1000 * den)
-                    if idx >= len(frames):
-                        break
-                    y = frames[idx][: w * h]
-                    rp = resize_pixels(y, w, h, 1, out_w, out_h)
-                    rows.append(
-                        (
-                            mid,
-                            idx,
-                            ts,
-                            round(sum(y) / (w * h), 6),
-                            round(sum(rp) / (out_w * out_h), 6),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def row(mid, payload):
+        decoded = y4m_decode(bytes(payload)) if payload is not None else None
+        if decoded is None:
+            return
+        w, h, num, den, frames = decoded
+        duration_ms = len(frames) * 1000 * den // num
+        for ts in range(0, duration_ms, every_ms):
+            idx = ts * num // (1000 * den)
+            if idx >= len(frames):
+                break
+            y = frames[idx][: w * h]
+            rp = resize_pixels(y, w, h, 1, out_w, out_h)
+            yield (
+                mid,
+                idx,
+                ts,
+                round(sum(y) / (w * h), 6),
+                round(sum(rp) / (out_w * out_h), 6),
+            )
 
-    return media.select("media_id", payload_col).mapInPandas(
-        run,
-        schema=(
-            "media_id string, frame_idx long, frame_ts_ms long, "
-            "y_mean double, thumb_mean double"
-        ),
+    return map_rows(
+        media,
+        ["media_id", payload_col],
+        "media_id string, frame_idx long, frame_ts_ms long, "
+        "y_mean double, thumb_mean double",
+        lambda: row,
     )
 
 

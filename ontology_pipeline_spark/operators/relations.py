@@ -25,14 +25,12 @@ stage:
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import TRIPLES
 from .mentions import _compile, scan_text
+from .stage import map_rows
 
 # unordered class-pair -> (subject_class, predicate)
 PAIR_RULES: dict[frozenset, tuple[str, str]] = {
@@ -82,23 +80,18 @@ def _fused_triples_stage(
     id_col: str,
     to_text,
 ) -> DataFrame:
-    """Shared mapInPandas body for both fused variants: one implementation,
-    parameterized by a per-row text accessor, so pairing/schema/batching can
+    """Shared row function for both fused variants: one implementation,
+    parameterized by a per-row text accessor, so pairing and schema can
     never drift between the text and html entry points."""
     lex = tuple(tuple(r) for r in lexicon_rows)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row_fn():
         pattern, lookup = _compile(lex)
-        cols = ["subj", "subj_class", "pred", "obj", "obj_class", "url"]
-        for pdf in batches:
-            rows: list[tuple] = []
-            for url, val in zip(pdf[id_col], pdf[value_col]):
-                rows.extend(
-                    _pair_triples(scan_text(url, to_text(val), pattern, lookup))
-                )
-            yield pd.DataFrame(rows, columns=cols)
+        return lambda url, val: _pair_triples(
+            scan_text(url, to_text(val), pattern, lookup)
+        )
 
-    return pages.select(id_col, value_col).mapInPandas(run, schema=TRIPLES)
+    return map_rows(pages, [id_col, value_col], TRIPLES, make_row_fn)
 
 
 def extract_triples_fused(

@@ -117,10 +117,13 @@ def run_pipeline(
     # per-url lineage: every new page commits a row even if it emitted no
     # triples (negative pages must not be reprocessed forever).  Reads back
     # ONLY this run's partition (pruned scan — O(new pages), not O(corpus)).
+    # Pinned: the lineage join and the run total below both consume it, and
+    # each would otherwise re-read the landed triples.
     per_url = (
         sink.read_run_triples(spark, run_id)
         .groupBy("url")
         .agg(F.count(F.lit(1)).alias("n_triples"))
+        .localCheckpoint(eager=False)
     )
     lineage = (
         pages.select("url")

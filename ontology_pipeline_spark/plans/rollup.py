@@ -31,9 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _exists(path: str) -> bool:
-    return os.path.exists(path)
+from ..sources.tables import _hadoop_exists
 
 
 def chunked(events: DataFrame, ts_col: str, chunk: str) -> DataFrame:
@@ -96,7 +94,7 @@ def refresh_rollup(
     }
 
     old_state: dict = {}
-    if _exists(manifest_path):
+    if _hadoop_exists(spark, manifest_path):
         old_state = {
             r["chunk"]: (r["n_rows"], r["fingerprint"])
             for r in spark.read.parquet(manifest_path).collect()

@@ -100,39 +100,39 @@ def windowed_mention_counts(
     watermark bounding state for late pages (streaming analog of A4 group
     counts).  The mention stage here carries warc_ts through the scan so no
     stream-stream join is needed."""
-    from typing import Iterator
-
-    import pandas as pd
-
     from ..operators.extract_text import extract_text_bytes
     from ..operators.mentions import _compile, scan_text
+    from ..operators.stage import map_rows
 
     lex = tuple(
         tuple(r) for r in (default_lexicon_rows() if lexicon_rows is None else lexicon_rows)
     )
 
     # html is optional: a text-only stream (no raw HTML column) stays valid
-    has_html = "html" in pages_stream.columns
-    in_cols = ["url", "warc_ts", "text"] + (["html"] if has_html else [])
+    html_col = ["html"] if "html" in pages_stream.columns else []
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row_fn():
         pattern, lookup = _compile(lex)
-        for pdf in batches:
-            rows = []
-            htmls = pdf["html"] if has_html else [None] * len(pdf)
-            for url, ts, text, html in zip(pdf["url"], pdf["warc_ts"], pdf["text"], htmls):
-                # html-only pages (the WARC-dump source this module documents)
-                # must still count: fall back to the same pure extractor the
-                # triples stream uses, so the rollup never silently reads 0
-                # while the triple stream is busy
-                if (text is None or text == "") and html is not None:
-                    text = extract_text_bytes(html)
-                for _u, _sid, _pos, _surf, _canon, cls in scan_text(url, text, pattern, lookup):
-                    rows.append((ts, cls))
-            yield pd.DataFrame(rows, columns=["warc_ts", "entity_class"])
 
-    stamped = pages_stream.select(*in_cols).mapInPandas(
-        run, schema="warc_ts timestamp, entity_class string"
+        def fn(url, ts, text, html=None):
+            # html-only pages (the WARC-dump source this module documents)
+            # must still count: fall back to the same pure extractor the
+            # triples stream uses, so the rollup never silently reads 0
+            # while the triple stream is busy
+            if (text is None or text == "") and html is not None:
+                text = extract_text_bytes(html)
+            return [
+                (ts, cls)
+                for _u, _sid, _pos, _surf, _canon, cls in scan_text(url, text, pattern, lookup)
+            ]
+
+        return fn
+
+    stamped = map_rows(
+        pages_stream,
+        ["url", "warc_ts", "text", *html_col],
+        "warc_ts timestamp, entity_class string",
+        make_row_fn,
     )
     return (
         stamped.withWatermark("warc_ts", watermark)

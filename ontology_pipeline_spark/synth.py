@@ -238,27 +238,20 @@ def distributed_pages(spark, n_pages: int, seed: int = 7, partitions: int | None
     _gen_page); the RNG stream differs (per-page seed vs one sequential
     stream), so goldens-by-construction apply per run, not across the two
     generators."""
-    from typing import Iterator
-
-    import pandas as pd
-
+    from .operators.stage import map_rows
     from .schemas import PAGES
 
     vocab = _vocab()
     if partitions is None:
         partitions = spark.sparkContext.defaultParallelism * 4
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["url", "warc_ts", "html", "text", "lang"]
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                rng = random.Random(seed * 1_000_003 + int(i))
-                page, _m, _t, _tl = _gen_page(int(i), rng, vocab)
-                rows.append(page)
-            yield pd.DataFrame(rows, columns=cols)
+    def row(i):
+        page, _m, _t, _tl = _gen_page(i, random.Random(seed * 1_000_003 + i), vocab)
+        return [page]
 
-    return spark.range(n_pages, numPartitions=partitions).mapInPandas(gen, schema=PAGES)
+    return map_rows(
+        spark.range(n_pages, numPartitions=partitions), ["id"], PAGES, lambda: row
+    )
 
 
 def pages_df(spark, corpus: Corpus):
@@ -996,7 +989,57 @@ def generate_audio_samples(i: int, rng: random.Random) -> tuple[int, int, list[i
     return rate, ch, samples
 
 
+def _audio_row(mid: str, j: int, rng: random.Random) -> tuple[tuple, tuple[int, int, list[int]]]:
+    """(media row, (rate, channels, samples)) of synthetic audio ordinal j."""
+    rate, ch, samples = generate_audio_samples(j, rng)
+    row = (
+        mid,
+        "audio",
+        wav_encode(rate, ch, samples),
+        "audio/wav",
+        None,
+        None,
+        len(samples) // ch * 1000 // rate,
+        AUDIO_WAVEFORMS[j % len(AUDIO_WAVEFORMS)],
+    )
+    return row, (rate, ch, samples)
+
+
+def _video_row(mid: str, j: int, rng: random.Random) -> tuple[tuple, tuple]:
+    """(media row, (width, height, fps_num, fps_den, frames)) of synthetic
+    video ordinal j."""
+    w, h, num, den, frames = generate_video_frames(j, rng)
+    row = (
+        mid,
+        "video",
+        y4m_encode(w, h, num, den, frames),
+        "video/x-yuv4mpeg",
+        w,
+        h,
+        len(frames) * 1000 * den // num,
+        VIDEO_MOTIONS[j % len(VIDEO_MOTIONS)],
+    )
+    return row, (w, h, num, den, frames)
+
+
 MEDIA_LABELS = ["gradient", "checker", "noise"]
+
+
+def _png_pixels(label: str, ch: int, w: int, h: int, rng: random.Random) -> bytes:
+    """Row-major interleaved samples of one synthetic image: a gradient, a
+    2x2 checker, or noise drawn from `rng` (one draw per sample)."""
+    pix = bytearray()
+    for y in range(h):
+        for x in range(w):
+            for c in range(ch):
+                if label == "gradient":
+                    v = (x * 255 // max(w - 1, 1) + 37 * c + 3 * y) % 256
+                elif label == "checker":
+                    v = 255 if (x // 2 + y // 2 + c) % 2 == 0 else 13
+                else:
+                    v = rng.randrange(256)
+                pix.append(v)
+    return bytes(pix)
 
 
 @dataclass
@@ -1029,57 +1072,23 @@ def generate_media_corpus(
         label = MEDIA_LABELS[i % len(MEDIA_LABELS)]
         ch = [1, 3, 4, 2][i % 4]
         w, h = rng.randint(5, 24), rng.randint(5, 24)
-        pix = bytearray()
-        for y in range(h):
-            for x in range(w):
-                for c in range(ch):
-                    if label == "gradient":
-                        v = (x * 255 // max(w - 1, 1) + 37 * c + 3 * y) % 256
-                    elif label == "checker":
-                        v = 255 if (x // 2 + y // 2 + c) % 2 == 0 else 13
-                    else:
-                        v = rng.randrange(256)
-                    pix.append(v)
+        pix = _png_pixels(label, ch, w, h, rng)
         mid = f"img{i:03d}"
-        payload = png_encode(w, h, ch, bytes(pix), filters=[(i + k) % 5 for k in range(5)])
+        payload = png_encode(w, h, ch, pix, filters=[(i + k) % 5 for k in range(5)])
         rows.append((mid, "image", payload, "image/png", w, h, None, label))
-        pixels[mid] = (w, h, ch, bytes(pix))
+        pixels[mid] = (w, h, ch, pix)
     waveforms: dict[str, tuple[int, int, list[int]]] = {}
     for i in range(n_audio):
-        rate, ch, samples = generate_audio_samples(i, rng)
         mid = f"wav{i:03d}"
-        rows.append(
-            (
-                mid,
-                "audio",
-                wav_encode(rate, ch, samples),
-                "audio/wav",
-                None,
-                None,
-                len(samples) // ch * 1000 // rate,
-                AUDIO_WAVEFORMS[i % len(AUDIO_WAVEFORMS)],
-            )
-        )
-        waveforms[mid] = (rate, ch, samples)
+        row, waveforms[mid] = _audio_row(mid, i, rng)
+        rows.append(row)
     # videos draw from `rng` AFTER images and audio: appending a media kind
     # at the end of the stream keeps the pixel/waveform goldens bit-identical
     videos: dict[str, tuple[int, int, int, int, list[bytes]]] = {}
     for i in range(n_video):
-        w, h, num, den, frames = generate_video_frames(i, rng)
         mid = f"y4m{i:03d}"
-        rows.append(
-            (
-                mid,
-                "video",
-                y4m_encode(w, h, num, den, frames),
-                "video/x-yuv4mpeg",
-                w,
-                h,
-                len(frames) * 1000 * den // num,
-                VIDEO_MOTIONS[i % len(VIDEO_MOTIONS)],
-            )
-        )
-        videos[mid] = (w, h, num, den, frames)
+        row, videos[mid] = _video_row(mid, i, rng)
+        rows.append(row)
     # JPEG mosaic rows draw from `rng` AFTER images/audio/video (same
     # append-only discipline: earlier goldens stay bit-identical).  Each
     # mosaic cell spans exactly one MCU (8x8 for 4:4:4 and grayscale, 16x16
@@ -1173,82 +1182,37 @@ def distributed_media(
     sequential stream), so per-corpus goldens apply per generator, same
     caveat as pages.  `kinds` cycles by row id — default image-only
     preserves the original corpus byte-for-byte."""
-    from typing import Iterator
-
-    import pandas as pd
+    from .operators.stage import map_rows
 
     if partitions is None:
         partitions = spark.sparkContext.defaultParallelism * 4
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "kind", "payload", "mime", "width", "height", "duration_ms", "label"]
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                rng = random.Random(seed * 1_000_003 + i)
-                # j = dense per-kind ordinal: kinds cycle by row id, so
-                # content selectors must NOT reuse i (every selector table
-                # has length 3/4 and would alias with a 3-kind cycle,
-                # collapsing each kind to one label/waveform/motion).
-                # With the default single-kind tuple j == i, preserving the
-                # original corpus byte-for-byte.
-                kind = kinds[i % len(kinds)]
-                j = i // len(kinds)
-                if kind == "audio":
-                    rate, ch, samples = generate_audio_samples(j, rng)
-                    rows.append(
-                        (
-                            f"wav{i:09d}",
-                            "audio",
-                            wav_encode(rate, ch, samples),
-                            "audio/wav",
-                            None,
-                            None,
-                            (len(samples) // ch) * 1000 // rate,
-                            AUDIO_WAVEFORMS[j % len(AUDIO_WAVEFORMS)],
-                        )
-                    )
-                    continue
-                if kind == "video":
-                    w, h, num, den, frames = generate_video_frames(j, rng)
-                    rows.append(
-                        (
-                            f"y4m{i:09d}",
-                            "video",
-                            y4m_encode(w, h, num, den, frames),
-                            "video/x-yuv4mpeg",
-                            w,
-                            h,
-                            len(frames) * 1000 * den // num,
-                            VIDEO_MOTIONS[j % len(VIDEO_MOTIONS)],
-                        )
-                    )
-                    continue
-                label = MEDIA_LABELS[j % len(MEDIA_LABELS)]
-                ch = [1, 3, 4, 2][j % 4]
-                w, h = rng.randint(5, 24), rng.randint(5, 24)
-                pix = bytearray()
-                for y in range(h):
-                    for x in range(w):
-                        for c in range(ch):
-                            if label == "gradient":
-                                v = (x * 255 // max(w - 1, 1) + 37 * c + 3 * y) % 256
-                            elif label == "checker":
-                                v = 255 if (x // 2 + y // 2 + c) % 2 == 0 else 13
-                            else:
-                                v = rng.randrange(256)
-                            pix.append(v)
-                payload = png_encode(w, h, ch, bytes(pix), filters=[(i + k) % 5 for k in range(5)])
-                rows.append((f"img{i:09d}", "image", payload, "image/png", w, h, None, label))
-            yield pd.DataFrame(rows, columns=cols)
+    def row(i):
+        rng = random.Random(seed * 1_000_003 + i)
+        # j = dense per-kind ordinal: kinds cycle by row id, so content
+        # selectors must NOT reuse i (every selector table has length 3/4
+        # and would alias with a 3-kind cycle, collapsing each kind to one
+        # label/waveform/motion).  With the default single-kind tuple
+        # j == i, preserving the original corpus byte-for-byte.
+        kind = kinds[i % len(kinds)]
+        j = i // len(kinds)
+        if kind == "audio":
+            return [_audio_row(f"wav{i:09d}", j, rng)[0]]
+        if kind == "video":
+            return [_video_row(f"y4m{i:09d}", j, rng)[0]]
+        label = MEDIA_LABELS[j % len(MEDIA_LABELS)]
+        ch = [1, 3, 4, 2][j % 4]
+        w, h = rng.randint(5, 24), rng.randint(5, 24)
+        pix = _png_pixels(label, ch, w, h, rng)
+        payload = png_encode(w, h, ch, pix, filters=[(i + k) % 5 for k in range(5)])
+        return [(f"img{i:09d}", "image", payload, "image/png", w, h, None, label)]
 
-    return spark.range(n_media, numPartitions=partitions).mapInPandas(
-        gen,
-        schema=(
-            "media_id string, kind string, payload binary, mime string, "
-            "width long, height long, duration_ms long, label string"
-        ),
+    return map_rows(
+        spark.range(n_media, numPartitions=partitions),
+        ["id"],
+        "media_id string, kind string, payload binary, mime string, "
+        "width long, height long, duration_ms long, label string",
+        lambda: row,
     )
 
 

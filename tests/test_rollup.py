@@ -88,3 +88,13 @@ def test_rollup_on_testdata_matches_direct_aggregate(spark, tmp_path):
     s = refresh_rollup(spark, events, out)
     assert s["chunks_refreshed"] == s["chunks_total"] > 0
     assert _sorted(read_rollup(spark, out)) == _sorted(rollup_events(events, "ts", "day"))
+
+
+def test_refresh_finds_its_manifest_at_a_uri_path(spark, tmp_path):
+    """The manifest probe goes through the Hadoop filesystem, so a sink
+    addressed by URI is found on the second refresh (nothing dirty)."""
+    out = "file://" + str(tmp_path / "agg")
+    e = _events(spark, _rows([(1, 5), (2, 5), (3, 5)]))
+    assert refresh_rollup(spark, e, out) == {"chunks_total": 3, "chunks_refreshed": 3}
+    assert refresh_rollup(spark, e, out) == {"chunks_total": 3, "chunks_refreshed": 0}
+    assert _sorted(read_rollup(spark, out)) == _sorted(rollup_events(e, "ts", "day"))
