@@ -19,8 +19,7 @@ Scale design (100 TB corpus, small benchmark side):
   contaminated subset;
 * the final drop is a left_anti join of the corpus against the hit id set.
   Contamination rates are sub-percent in practice, so the hit set is
-  broadcast too; pass ``broadcast_hits=False`` if a pathological benchmark
-  contaminates a large corpus fraction (falls back to a shuffle anti-join);
+  always broadcast too;
 * tokenize -> shingle is staged through its own projection before the
   explode (lambda bodies defeat Catalyst subexpression elimination — see
   dedup._shingles_of_tokens).
@@ -89,15 +88,13 @@ def decontaminate(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 13,
-    broadcast_hits: bool = True,
     pin: bool = True,
 ) -> DataFrame:
     """Corpus minus every document sharing an n-gram with the benchmark.
 
     Returns ``docs`` rows (all columns) whose id is NOT in
-    :func:`contamination_hits`.  ``broadcast_hits`` assumes the usual
-    sub-percent contamination rate; disable it to let the anti-join shuffle
-    when the hit set is genuinely large.
+    :func:`contamination_hits`.  The hit id set is broadcast: it assumes
+    the usual sub-percent contamination rate.
 
     ``docs`` is consumed TWICE (the gram scan and the final anti-join), so
     by default it is pinned here via ``localCheckpoint(eager=False)`` —
@@ -112,6 +109,4 @@ def decontaminate(
     hit_ids = contamination_hits(
         docs, grams, id_col=id_col, text_col=text_col, n=n
     ).select(id_col)
-    if broadcast_hits:
-        hit_ids = F.broadcast(hit_ids)
-    return docs.join(hit_ids, id_col, "left_anti")
+    return docs.join(F.broadcast(hit_ids), id_col, "left_anti")

@@ -932,6 +932,29 @@ def _gram_positions(
     return grams.localCheckpoint(eager=False)
 
 
+def _merge_spans(positions: DataFrame, id_col: str, n: int) -> DataFrame:
+    """(id_col, span_start, span_end, n_dup_grams): the n-gram start
+    positions of each document merged into maximal token spans (span_end
+    exclusive).  One shuffle on the doc id, then the running-max-end /
+    cumulative-new-span window pair, linear in the document's positions."""
+    w = Window.partitionBy(id_col).orderBy("pos")
+    prev_max_end = F.max(F.col("pos") + n).over(
+        w.rowsBetween(Window.unboundedPreceding, -1)
+    )
+    marked = positions.withColumn(
+        "_new", (F.col("pos") > F.coalesce(prev_max_end, F.lit(-1))).cast("long")
+    ).withColumn("_grp", F.sum("_new").over(w))
+    return (
+        marked.groupBy(id_col, "_grp")
+        .agg(
+            F.min("pos").alias("span_start"),
+            (F.max("pos") + n).alias("span_end"),
+            F.count(F.lit(1)).alias("n_dup_grams"),
+        )
+        .drop("_grp")
+    )
+
+
 def duplicated_spans(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -961,9 +984,9 @@ def duplicated_spans(
       count, not a window, so no reducer buffers a hot gram's occurrence
       list; the count table joins back on the hash (AQE skew-join splits
       the hot keys);
-    * span merging is per-document: one shuffle on the doc id, then the
-      classic running-max-end / cumulative-new-span window pair, linear in
-      that document's flagged positions.
+    * span merging is per-document (`_merge_spans`): one shuffle on the
+      doc id, then a window pair linear in that document's flagged
+      positions.
 
     A random 64-bit hash collision could bridge two unrelated grams
     (flagging ~n spurious tokens); at corpus scales where that matters the
@@ -975,23 +998,7 @@ def duplicated_spans(
         .filter(F.col("_nd") >= min_docs)
         .select("gh")
     )
-    flagged = grams.join(hot, "gh", "left_semi")
-    w = Window.partitionBy(id_col).orderBy("pos")
-    prev_max_end = F.max(F.col("pos") + n).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    marked = flagged.withColumn(
-        "_new", (F.col("pos") > F.coalesce(prev_max_end, F.lit(-1))).cast("long")
-    ).withColumn("_grp", F.sum("_new").over(w))
-    return (
-        marked.groupBy(id_col, "_grp")
-        .agg(
-            F.min("pos").alias("span_start"),
-            (F.max("pos") + n).alias("span_end"),
-            F.count(F.lit(1)).alias("n_dup_grams"),
-        )
-        .drop("_grp")
-    )
+    return _merge_spans(grams.join(hot, "gh", "left_semi"), id_col, n)
 
 
 def drop_duplicated_spans(
@@ -1013,7 +1020,7 @@ def drop_duplicated_spans(
     documents, the occurrence with the least (id, pos) — a total order — is
     canonical and stays; all other occurrences are dropped.  Per document,
     the non-canonical gram positions merge into maximal spans (the same
-    running-max-end windows as detection) and the text is rebuilt from the
+    `_merge_spans` as detection) and the text is rebuilt from the
     tokens outside those spans.  A document whose canonical occurrence
     overlaps a non-canonical one of a DIFFERENT gram can still lose tokens
     (the occurrence-level rule, same as Lee et al.'s character ranges).
@@ -1055,20 +1062,15 @@ def drop_duplicated_spans(
         )
         .select(id_col, "pos")
     )
-    w = Window.partitionBy(id_col).orderBy("pos")
-    prev_max_end = F.max(F.col("pos") + n).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
-    )
     spans = (
-        doomed.withColumn(
-            "_new", (F.col("pos") > F.coalesce(prev_max_end, F.lit(-1))).cast("long")
-        )
-        .withColumn("_grp", F.sum("_new").over(w))
-        .groupBy(id_col, "_grp")
-        .agg(F.min("pos").alias("s"), (F.max("pos") + n).alias("e"))
+        _merge_spans(doomed, id_col, n)
         .groupBy(id_col)
         .agg(
-            F.sort_array(F.collect_list(F.struct("s", "e"))).alias("_spans")
+            F.sort_array(
+                F.collect_list(
+                    F.struct(F.col("span_start").alias("s"), F.col("span_end").alias("e"))
+                )
+            ).alias("_spans")
         )
     )
     out = docs.join(spans, id_col, "left")

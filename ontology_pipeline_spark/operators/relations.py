@@ -125,20 +125,17 @@ def extract_triples_from_html(
     )
 
 
-def distinct_triples(triples: DataFrame, with_url_list: bool = False) -> DataFrame:
+def distinct_triples(triples: DataFrame) -> DataFrame:
     """Corpus-level distinct (subj, pred, obj) with provenance counts.
 
     Skew note: head entities ("Sleep Quality"-class nodes) concentrate a huge
     fraction of rows on a few group keys.  countDistinct partial-aggregates
-    map-side, so the skewed key ships pre-combined counts, not url strings;
-    the full provenance list (`with_url_list=True`, reference `files` lists at
-    streamlit_app.py:103) is only materialized for small corpora — at web
-    scale provenance stays as rows in the triple table.
+    map-side, so the skewed key ships pre-combined counts, not url strings.
+    The full provenance list (the reference's `files` lists at
+    streamlit_app.py:103) is never materialized: provenance stays as rows in
+    the triple table.
     """
-    aggs = [
+    return triples.groupBy("subj", "subj_class", "pred", "obj", "obj_class").agg(
         F.countDistinct("url").alias("n_pages"),
         F.min("url").alias("first_url"),
-    ]
-    if with_url_list:
-        aggs.append(F.sort_array(F.collect_set("url")).alias("urls"))
-    return triples.groupBy("subj", "subj_class", "pred", "obj", "obj_class").agg(*aggs)
+    )

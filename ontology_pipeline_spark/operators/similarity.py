@@ -31,6 +31,35 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
+def _unit(v: Column) -> Column:
+    """`v` L2-normalized; a zero vector stays as it is."""
+    nrm = _norm(v)
+    return F.when(nrm > 0, F.transform(v, lambda x: x / nrm)).otherwise(v)
+
+
+def _center_scores(v: Column, centers: list[list[float]]) -> Column:
+    """array<struct<cos, negi>>: `v`'s cosine to each literal center (0 for
+    a zero vector) with `negi = -index`.  Structs compare field by field, so
+    the largest struct is the max-cosine center, ties -> lowest index."""
+    nrm = _norm(v)
+    cnorms = [math.sqrt(sum(x * x for x in c)) or 1.0 for c in centers]
+    return F.array(
+        *[
+            F.struct(
+                F.when(
+                    nrm > 0,
+                    _dot(v, F.array(*[F.lit(float(x)) for x in c]))
+                    / (nrm * F.lit(cnorms[i])),
+                )
+                .otherwise(F.lit(0.0))
+                .alias("cos"),
+                F.lit(-i).alias("negi"),
+            )
+            for i, c in enumerate(centers)
+        ]
+    )
+
+
 def cosine_scores(
     embeddings: DataFrame,
     query_vec: list[float],
@@ -164,9 +193,7 @@ def ivf_index(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    v = F.col(vec_col).cast("array<double>")
-    nrm = _norm(v)
-    unit = F.when(nrm > 0, F.transform(v, lambda x: x / nrm)).otherwise(v)
+    unit = _unit(F.col(vec_col).cast("array<double>"))
     feat = embeddings.withColumn("_fv", array_to_vector(unit))
     model = KMeans(
         k=n_centroids,
@@ -194,9 +221,7 @@ def sampled_centers(
 
     The top-n is a tree-aggregated orderBy+limit: no full shuffle, and only
     n_centroids rows reach the driver — centroids are tiny by definition."""
-    v = F.col(vec_col).cast("array<double>")
-    nrm = _norm(v)
-    unit = F.when(nrm > 0, F.transform(v, lambda x: x / nrm)).otherwise(v)
+    unit = _unit(F.col(vec_col).cast("array<double>"))
     rows = (
         embeddings.select(
             F.pmod(
@@ -222,26 +247,7 @@ def ivf_assign(
     center (ties -> lowest center index), as pure JVM expressions against
     literal centers.  Write the result partitioned by `cell_col` so probes
     become partition pruning; computed once per corpus, never per query."""
-    v = F.col(vec_col).cast("array<double>")
-    nrm = _norm(v)
-    cnorms = [math.sqrt(sum(x * x for x in c)) or 1.0 for c in centers]
-    scored = F.array(
-        *[
-            F.struct(
-                F.when(
-                    nrm > 0,
-                    _dot(v, F.array(*[F.lit(float(x)) for x in c]))
-                    / (nrm * F.lit(cnorms[i])),
-                )
-                .otherwise(F.lit(0.0))
-                .alias("cos"),
-                # struct comparison is field-ordered: max cos first, then max
-                # negi == LOWEST center index on cosine ties (deterministic)
-                F.lit(-i).alias("negi"),
-            )
-            for i, c in enumerate(centers)
-        ]
-    )
+    scored = _center_scores(F.col(vec_col).cast("array<double>"), centers)
     return embeddings.withColumn(cell_col, -F.array_max(scored)["negi"])
 
 
@@ -262,24 +268,7 @@ def ivf_assign_multi(
     Pure JVM expressions against literal centers: score array -> descending
     sort -> slice(n_assign) -> explode.  Row fan-out is exactly n_assign x,
     a constant; no shuffle (the explode is narrow)."""
-    v = F.col(vec_col).cast("array<double>")
-    nrm = _norm(v)
-    cnorms = [math.sqrt(sum(x * x for x in c)) or 1.0 for c in centers]
-    scored = F.array(
-        *[
-            F.struct(
-                F.when(
-                    nrm > 0,
-                    _dot(v, F.array(*[F.lit(float(x)) for x in c]))
-                    / (nrm * F.lit(cnorms[i])),
-                )
-                .otherwise(F.lit(0.0))
-                .alias("cos"),
-                F.lit(-i).alias("negi"),
-            )
-            for i, c in enumerate(centers)
-        ]
-    )
+    scored = _center_scores(F.col(vec_col).cast("array<double>"), centers)
     top = F.slice(F.sort_array(scored, asc=False), 1, n_assign)
     return embeddings.withColumn(
         cell_col, F.explode(F.transform(top, lambda s: -s["negi"]))

@@ -220,6 +220,8 @@ MEDIA = StructType(
         StructField("width", LongType(), True),
         StructField("height", LongType(), True),
         StructField("duration_ms", LongType(), True),
+        # content label (synth.MEDIA_LABELS), or the kind of negative row
+        StructField("label", StringType(), True),
     ]
 )
 

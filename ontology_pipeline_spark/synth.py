@@ -24,6 +24,7 @@ import random
 from dataclasses import dataclass, field
 
 from .lexicon import ONTOLOGY_VOCAB
+from .schemas import MEDIA
 
 # Sentence templates.  Each template lists the entity classes it consumes and
 # the triples it contributes, per the engine's relation rules (see
@@ -428,19 +429,16 @@ class _JpegBitWriter:
         self.out += bytes([0xFF, 0xD0 + (idx & 7)])
 
 
-def jpeg_encode(
-    w: int, h: int, planes: list[bytes], subsampling: str = "444",
-    restart_interval: int = 0,
-) -> bytes:
-    """Pure-Python baseline JPEG writer, independent of the operator-side
-    decoder (same discipline as `png_encode`/`wav_encode`/`y4m_encode`).
-    `planes` is [Y] for grayscale or [Y, Cb, Cr] at FULL resolution (each
-    w*h bytes); chroma is box-averaged down for "420"/"422".  Quantization
-    tables are all-ones, so an image whose 8x8 blocks (16x16 / 16x8 for
-    420/422) are each solid-color round-trips BIT-EXACTLY through any
-    conforming decoder: a solid block has only a DC coefficient, which
-    quant=1 stores exactly.  Huffman tables are fixed-length canonical
-    (declared in DHT, so any table-driven decoder reads them)."""
+def _jpeg_frame(w: int, h: int, planes: list[bytes], subsampling: str):
+    """Frame setup and forward DCT shared by both JPEG writers.  `planes` is
+    [Y] for grayscale or [Y, Cb, Cr] at FULL resolution (each w*h bytes);
+    chroma is box-averaged down for "420"/"422", then each component is
+    edge-padded to whole MCUs.  Returns (factors, mcus_x, mcus_y, coefs,
+    grids): the per-component (h, v) sampling factors; the MCU grid; per
+    component a (blocks_y, blocks_x, 64) int array over the padded grid in
+    ZIGZAG order (quant=1, ACs clamped to the baseline 10-bit categories);
+    and per component its TRUE (blocks_x, blocks_y) grid (T.81 A.2.2: ceil
+    dims, not the MCU-padded grid)."""
     import math
 
     import numpy as np
@@ -460,6 +458,8 @@ def jpeg_encode(
         factors = [(2, 1), (1, 1), (1, 1)]
     hmax = max(f[0] for f in factors)
     vmax = max(f[1] for f in factors)
+    mcus_x = -(-w // (8 * hmax))
+    mcus_y = -(-h // (8 * vmax))
 
     basis = np.empty((8, 8))
     for u in range(8):
@@ -467,13 +467,7 @@ def jpeg_encode(
         for x in range(8):
             basis[u, x] = 0.5 * cu * math.cos((2 * x + 1) * u * math.pi / 16.0)
 
-    dc_codes = _jpeg_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-
-    # subsample + pad each component plane to whole-MCU multiples
-    comp_arrays = []
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
+    coefs, grids = [], []
     for (hi, vi), plane in zip(factors, planes):
         a = np.frombuffer(plane, dtype=np.uint8).reshape(h, w).astype(np.int64)
         if hi < hmax or vi < vmax:
@@ -486,86 +480,132 @@ def jpeg_encode(
             ) // (fx * fy)
         cw, ch_ = mcus_x * 8 * hi, mcus_y * 8 * vi
         a = a[np.minimum(np.arange(ch_), a.shape[0] - 1)][:, np.minimum(np.arange(cw), a.shape[1] - 1)]
-        comp_arrays.append(a)
+        # two 2D matmuls per contiguous 8x8 block copy: a stacked einsum
+        # picks a different BLAS kernel whose float rounding can land on the
+        # other side of an np.rint .5 boundary (coefficients off by ±1)
+        zz = np.empty((ch_ // 8, cw // 8, 64), dtype=np.int64)
+        for by in range(ch_ // 8):
+            for bx in range(cw // 8):
+                block = a[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8].astype(np.float64) - 128.0
+                zz[by, bx] = np.rint(basis @ block @ basis.T).astype(np.int64).reshape(64)[_JPEG_ZIGZAG]
+        zz[:, :, 1:] = np.clip(zz[:, :, 1:], -1023, 1023)
+        coefs.append(zz)
+        true_w, true_h = -(-w * hi // hmax), -(-h * vi // vmax)
+        grids.append((-(-true_w // 8), -(-true_h // 8)))
+    return factors, mcus_x, mcus_y, coefs, grids
 
-    wtr = _JpegBitWriter()
-    pred = [0] * ncomp
+
+def _interleaved_blocks(wtr, factors, mcus_x, mcus_y, restart_interval, pred):
+    """(ci, block_y, block_x) of every data unit of an interleaved scan, in
+    MCU order.  Before each `restart_interval`-th MCU it writes RSTn and
+    zeroes the DC predictors `pred` in place."""
     n_mcu = rst_idx = 0
     for my in range(mcus_y):
         for mx in range(mcus_x):
             if restart_interval and n_mcu and n_mcu % restart_interval == 0:
                 wtr.restart(rst_idx)
                 rst_idx += 1
-                pred = [0] * ncomp
+                pred[:] = [0] * len(pred)
             n_mcu += 1
             for ci, (hi, vi) in enumerate(factors):
-                arr = comp_arrays[ci]
                 for by in range(vi):
                     for bx in range(hi):
-                        y0 = (my * vi + by) * 8
-                        x0 = (mx * hi + bx) * 8
-                        block = arr[y0 : y0 + 8, x0 : x0 + 8].astype(np.float64) - 128.0
-                        coef = basis @ block @ basis.T
-                        q = np.rint(coef).astype(np.int64)
-                        # keep ACs inside the baseline 10-bit categories
-                        flat = q.reshape(64)
-                        diff = int(flat[0]) - pred[ci]
-                        pred[ci] = int(flat[0])
-                        size = diff.bit_length() if diff else 0
-                        wtr.put(*dc_codes[size])
-                        if size:
-                            wtr.put(diff if diff > 0 else diff + (1 << size) - 1, size)
-                        run = 0
-                        for k in range(1, 64):
-                            v = int(flat[_JPEG_ZIGZAG[k]])
-                            v = max(-1023, min(1023, v))
-                            if v == 0:
-                                run += 1
-                                continue
-                            while run > 15:
-                                wtr.put(*ac_codes[0xF0])
-                                run -= 16
-                            s = v.bit_length() if v > 0 else (-v).bit_length()
-                            wtr.put(*ac_codes[(run << 4) | s])
-                            wtr.put(v if v > 0 else v + (1 << s) - 1, s)
-                            run = 0
-                        if run:
-                            wtr.put(*ac_codes[0x00])  # EOB
-    scan = wtr.flush()
+                        yield ci, my * vi + by, mx * hi + bx
 
-    import struct as _struct
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + _struct.pack(">H", len(body) + 2) + body
+def _put_dc(wtr, dc_codes, diff: int) -> None:
+    """One DC difference: its size category, then its magnitude bits."""
+    size = diff.bit_length() if diff else 0
+    wtr.put(*dc_codes[size])
+    if size:
+        wtr.put(diff if diff > 0 else diff + (1 << size) - 1, size)
 
+
+def _put_ac(wtr, ac_codes, vals: list[int]) -> int:
+    """Run-length code the ACs `vals` through their last nonzero: ZRL per 16
+    zeros, then (run, size) and the magnitude bits.  Returns the number of
+    trailing zeros, which the caller codes as an EOB (or an EOB run)."""
+    run = 0
+    for v in vals:
+        if v == 0:
+            run += 1
+            continue
+        while run > 15:
+            wtr.put(*ac_codes[0xF0])
+            run -= 16
+        s = abs(v).bit_length()
+        wtr.put(*ac_codes[(run << 4) | s])
+        wtr.put(v if v > 0 else v + (1 << s) - 1, s)
+        run = 0
+    return run
+
+
+def _jpeg_seg(marker: int, body: bytes) -> bytes:
+    return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
+
+
+def _jpeg_header(
+    w: int, h: int, factors, restart_interval: int, sof: int,
+    ac_bits: list[int], ac_vals: list[int],
+) -> bytearray:
+    """SOI, APP0, the all-ones DQT tables, SOF `sof`, the DC + given AC DHT
+    tables (one pair for luma, one for chroma) and, if any, DRI."""
+    ncomp = len(factors)
     out = bytearray(b"\xff\xd8")  # SOI
-    out += seg(0xE0, b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00")  # APP0
+    out += _jpeg_seg(0xE0, b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00")  # APP0
     n_qt = 1 if ncomp == 1 else 2
     for tq in range(n_qt):
-        out += seg(0xDB, bytes([tq]) + bytes([1] * 64))  # Pq=0, all-ones
-    sof = bytes([8]) + _struct.pack(">HH", h, w) + bytes([ncomp])
+        out += _jpeg_seg(0xDB, bytes([tq]) + bytes([1] * 64))  # Pq=0, all-ones
+    body = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") + bytes([ncomp])
     for ci, (hi, vi) in enumerate(factors):
-        tq = 0 if ci == 0 else 1
-        sof += bytes([ci + 1, (hi << 4) | vi, tq])
-    out += seg(0xC0, sof)
+        body += bytes([ci + 1, (hi << 4) | vi, 0 if ci == 0 else 1])
+    out += _jpeg_seg(sof, body)
     for th in range(n_qt):
-        out += seg(
-            0xC4,
-            bytes([th]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS),
-        )
-        out += seg(
-            0xC4,
-            bytes([0x10 | th]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS),
-        )
+        out += _jpeg_seg(0xC4, bytes([th]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS))
+        out += _jpeg_seg(0xC4, bytes([0x10 | th]) + bytes(ac_bits) + bytes(ac_vals))
     if restart_interval:
-        out += seg(0xDD, _struct.pack(">H", restart_interval))  # DRI
-    sos = bytes([ncomp])
-    for ci in range(ncomp):
+        out += _jpeg_seg(0xDD, restart_interval.to_bytes(2, "big"))  # DRI
+    return out
+
+
+def _jpeg_sos(comps: list[int], ss: int, se: int, ah: int, al: int) -> bytes:
+    """SOS header: component ids with their table pair, Ss/Se, Ah/Al."""
+    hdr = bytes([len(comps)])
+    for ci in comps:
         t = 0 if ci == 0 else 1
-        sos += bytes([ci + 1, (t << 4) | t])
-    sos += bytes([0, 63, 0])  # Ss/Se/Ah-Al for baseline
-    out += seg(0xDA, sos)
-    out += scan
+        hdr += bytes([ci + 1, (t << 4) | t])
+    return _jpeg_seg(0xDA, hdr + bytes([ss, se, (ah << 4) | al]))
+
+
+def jpeg_encode(
+    w: int, h: int, planes: list[bytes], subsampling: str = "444",
+    restart_interval: int = 0,
+) -> bytes:
+    """Pure-Python baseline JPEG writer, independent of the operator-side
+    decoder (same discipline as `png_encode`/`wav_encode`/`y4m_encode`).
+    `planes` is [Y] for grayscale or [Y, Cb, Cr] at FULL resolution (each
+    w*h bytes); chroma is box-averaged down for "420"/"422".  Quantization
+    tables are all-ones, so an image whose 8x8 blocks (16x16 / 16x8 for
+    420/422) are each solid-color round-trips BIT-EXACTLY through any
+    conforming decoder: a solid block has only a DC coefficient, which
+    quant=1 stores exactly.  Huffman tables are fixed-length canonical
+    (declared in DHT, so any table-driven decoder reads them).  One
+    interleaved scan over the `_jpeg_frame` coefficient grids."""
+    factors, mcus_x, mcus_y, coefs, _ = _jpeg_frame(w, h, planes, subsampling)
+    dc_codes = _jpeg_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
+    ac_codes = _jpeg_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
+    wtr = _JpegBitWriter()
+    pred = [0] * len(factors)
+    for ci, by, bx in _interleaved_blocks(wtr, factors, mcus_x, mcus_y, restart_interval, pred):
+        blk = coefs[ci][by, bx]
+        dc = int(blk[0])
+        _put_dc(wtr, dc_codes, dc - pred[ci])
+        pred[ci] = dc
+        if _put_ac(wtr, ac_codes, blk[1:].tolist()):
+            wtr.put(*ac_codes[0x00])  # EOB
+    out = _jpeg_header(w, h, factors, restart_interval, 0xC0, _JPEG_AC_BITS, _JPEG_AC_VALS)
+    out += _jpeg_sos(list(range(len(factors))), 0, 63, 0, 0)
+    out += wtr.flush()
     out += b"\xff\xd9"  # EOI
     return bytes(out)
 
@@ -584,10 +624,11 @@ def jpeg_encode_progressive(
 ) -> bytes:
     """Pure-Python PROGRESSIVE (SOF2) JPEG writer, independent of the
     operator-side decoder (same encoder-vs-decoder discipline as
-    `jpeg_encode`, whose quantization/DCT/clamping it reproduces exactly —
-    so a baseline and a progressive encode of the same planes carry
-    IDENTICAL coefficients and any conforming decoder yields bit-identical
-    pixels for both).  Scan script (exercises every T.81 G.2 scan kind):
+    `jpeg_encode`).  It codes the same `_jpeg_frame` coefficient grids as
+    `jpeg_encode` (one subsample/pad, DCT, quantization and clamp path), so
+    a baseline and a progressive encode of the same planes carry IDENTICAL
+    coefficients and any conforming decoder yields bit-identical pixels for
+    both.  Scan script (exercises every T.81 G.2 scan kind):
 
         1. DC first, all components interleaved, Al=1
         2. AC first   comp0  Ss=1  Se=5   Al=2
@@ -603,103 +644,26 @@ def jpeg_encode_progressive(
     i.e. spectral selection, successive approximation, EOB runs, ZRL and
     refinement correction bits all appear in the stream.  DHT declares the
     same fixed-length canonical tables plus the EOBn symbols."""
-    import math
-
-    import numpy as np
-
-    assert subsampling in ("444", "420", "422")
-    ncomp = len(planes)
-    assert ncomp in (1, 3)
-    for p in planes:
-        assert len(p) == w * h
-    if ncomp == 1:
-        factors = [(1, 1)]
-    elif subsampling == "444":
-        factors = [(1, 1), (1, 1), (1, 1)]
-    elif subsampling == "420":
-        factors = [(2, 2), (1, 1), (1, 1)]
-    else:
-        factors = [(2, 1), (1, 1), (1, 1)]
-    hmax = max(f[0] for f in factors)
-    vmax = max(f[1] for f in factors)
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
-
-    basis = np.empty((8, 8))
-    for u in range(8):
-        cu = (1.0 / math.sqrt(2.0)) if u == 0 else 1.0
-        for x in range(8):
-            basis[u, x] = 0.5 * cu * math.cos((2 * x + 1) * u * math.pi / 16.0)
-
-    # subsample + pad (identical math to jpeg_encode), then the full
-    # coefficient arrays: (blocks_y, blocks_x, 64) ints in ZIGZAG order,
-    # ACs clamped to the 10-bit categories exactly like the baseline writer
-    coefs = []
-    for (hi, vi), plane in zip(factors, planes):
-        a = np.frombuffer(plane, dtype=np.uint8).reshape(h, w).astype(np.int64)
-        if hi < hmax or vi < vmax:
-            fx, fy = hmax // hi, vmax // vi
-            ph, pw = -(-h // fy) * fy, -(-w // fx) * fx
-            padded = a[np.minimum(np.arange(ph), h - 1)][:, np.minimum(np.arange(pw), w - 1)]
-            a = (
-                padded.reshape(ph // fy, fy, pw // fx, fx).sum(axis=(1, 3))
-                + (fx * fy) // 2
-            ) // (fx * fy)
-        cw, ch_ = mcus_x * 8 * hi, mcus_y * 8 * vi
-        a = a[np.minimum(np.arange(ch_), a.shape[0] - 1)][:, np.minimum(np.arange(cw), a.shape[1] - 1)]
-        by, bx = ch_ // 8, cw // 8
-        blocks = a.reshape(by, 8, bx, 8).transpose(0, 2, 1, 3).astype(np.float64) - 128.0
-        # per-block 2D matmuls in the exact op order of jpeg_encode's
-        # `basis @ block @ basis.T`: a stacked einsum picks a different BLAS
-        # kernel whose float rounding can land on the other side of an
-        # np.rint .5 boundary, so baseline and progressive encodes of the
-        # same plane would carry coefficients differing by ±1
-        q = np.empty((by, bx, 8, 8), dtype=np.int64)
-        for yy in range(by):
-            for xx in range(bx):
-                q[yy, xx] = np.rint(basis @ blocks[yy, xx] @ basis.T).astype(np.int64)
-        zz = q.reshape(by, bx, 64)[:, :, _JPEG_ZIGZAG]
-        zz[:, :, 1:] = np.clip(zz[:, :, 1:], -1023, 1023)
-        coefs.append(zz)
-
+    factors, mcus_x, mcus_y, coefs, grids = _jpeg_frame(w, h, planes, subsampling)
+    ncomp = len(factors)
     dc_codes = _jpeg_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
     ac_codes = _jpeg_codes(_JPEG_ACP_BITS, _JPEG_ACP_VALS)
-
-    def true_grid(ci):
-        hi, vi = factors[ci]
-        cw, ch2 = -(-(w * hi) // hmax), -(-(h * vi) // vmax)
-        return -(-cw // 8), -(-ch2 // 8)
 
     def dc_scan(wtr, ah, al):
         """Interleaved DC scan over the full MCU grid."""
         pred = [0] * ncomp
-        rst_idx = n_mcu = 0
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                    wtr.restart(rst_idx)
-                    rst_idx += 1
-                    pred = [0] * ncomp
-                n_mcu += 1
-                for ci, (hi, vi) in enumerate(factors):
-                    for by in range(vi):
-                        for bx in range(hi):
-                            dc = int(coefs[ci][my * vi + by, mx * hi + bx, 0])
-                            if ah == 0:
-                                t = dc >> al  # T.81: DC point transform is >>
-                                diff = t - pred[ci]
-                                pred[ci] = t
-                                size = diff.bit_length() if diff else 0
-                                wtr.put(*dc_codes[size])
-                                if size:
-                                    wtr.put(diff if diff > 0 else diff + (1 << size) - 1, size)
-                            else:
-                                wtr.put((dc >> al) & 1, 1)
+        for ci, by, bx in _interleaved_blocks(wtr, factors, mcus_x, mcus_y, restart_interval, pred):
+            dc = int(coefs[ci][by, bx, 0])
+            if ah == 0:
+                t = dc >> al  # T.81: DC point transform is >>
+                _put_dc(wtr, dc_codes, t - pred[ci])
+                pred[ci] = t
+            else:
+                wtr.put((dc >> al) & 1, 1)
 
     def ac_scan(wtr, ci, ss, se, ah, al):
-        """Non-interleaved AC scan over component ci's TRUE block grid
-        (T.81 A.2.2: ceil dims, not the MCU-padded grid)."""
-        bw, bh = true_grid(ci)
+        """Non-interleaved AC scan over component ci's TRUE block grid."""
+        bw, bh = grids[ci]
         arr = coefs[ci]
         eobrun = 0
         # correction bits attached to the pending EOB run (emitted right
@@ -733,33 +697,13 @@ def jpeg_encode_progressive(
                     v = int(blk[k])
                     a = abs(v) >> al
                     vals.append(a if v >= 0 else -a)
-                last = -1
-                for idx, v in enumerate(vals):
-                    if v:
-                        last = idx
-                if last < 0:
-                    eobrun += 1
-                    if eobrun == 0x7FFF:
-                        flush_eob()
-                    continue
-                flush_eob()
-                run = 0
-                for idx in range(last + 1):
-                    v = vals[idx]
-                    if v == 0:
-                        run += 1
+                if any(vals):
+                    flush_eob()
+                    if not _put_ac(wtr, ac_codes, vals):
                         continue
-                    while run > 15:
-                        wtr.put(*ac_codes[0xF0])
-                        run -= 16
-                    s = abs(v).bit_length()
-                    wtr.put(*ac_codes[(run << 4) | s])
-                    wtr.put(v if v > 0 else v + (1 << s) - 1, s)
-                    run = 0
-                if last < len(vals) - 1:
-                    eobrun += 1
-                    if eobrun == 0x7FFF:
-                        flush_eob()
+                eobrun += 1
+                if eobrun == 0x7FFF:
+                    flush_eob()
             else:  # AC refinement (T.81 G.1.2.3 / the libjpeg jcphuff shape)
                 absv = [abs(int(blk[k])) >> al for k in range(ss, se + 1)]
                 eob = 0  # 1 + index of the last NEWLY-significant coefficient
@@ -796,50 +740,23 @@ def jpeg_encode_progressive(
                         flush_eob()
         flush_eob()
 
-    import struct as _struct
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + _struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00")
-    n_qt = 1 if ncomp == 1 else 2
-    for tq in range(n_qt):
-        out += seg(0xDB, bytes([tq]) + bytes([1] * 64))
-    sof = bytes([8]) + _struct.pack(">HH", h, w) + bytes([ncomp])
-    for ci, (hi, vi) in enumerate(factors):
-        sof += bytes([ci + 1, (hi << 4) | vi, 0 if ci == 0 else 1])
-    out += seg(0xC2, sof)  # SOF2: progressive
-    for th in range(n_qt):
-        out += seg(0xC4, bytes([th]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS))
-        out += seg(0xC4, bytes([0x10 | th]) + bytes(_JPEG_ACP_BITS) + bytes(_JPEG_ACP_VALS))
-    if restart_interval:
-        out += seg(0xDD, _struct.pack(">H", restart_interval))
-
-    def sos(comps: list[int], ss: int, se: int, ah: int, al: int, body_fn) -> None:
-        hdr = bytes([len(comps)])
-        for ci in comps:
-            t = 0 if ci == 0 else 1
-            hdr += bytes([ci + 1, (t << 4) | t])
-        hdr += bytes([ss, se, (ah << 4) | al])
-        out.extend(seg(0xDA, hdr))
+    # the scan script above as (components, Ss, Se, Ah, Al)
+    allc, chroma = list(range(ncomp)), range(1, ncomp)
+    script = (
+        [(allc, 0, 0, 0, 1), ([0], 1, 5, 0, 2), ([0], 6, 63, 0, 2)]
+        + [([c], 1, 63, 0, 1) for c in chroma]
+        + [(allc, 0, 0, 1, 0), ([0], 1, 63, 2, 1), ([0], 1, 63, 1, 0)]
+        + [([c], 1, 63, 1, 0) for c in chroma]
+    )
+    out = _jpeg_header(w, h, factors, restart_interval, 0xC2, _JPEG_ACP_BITS, _JPEG_ACP_VALS)
+    for comps, ss, se, ah, al in script:
+        out += _jpeg_sos(comps, ss, se, ah, al)
         wtr = _JpegBitWriter()
-        body_fn(wtr)
-        out.extend(wtr.flush())
-
-    allc = list(range(ncomp))
-    sos(allc, 0, 0, 0, 1, lambda wt: dc_scan(wt, 0, 1))
-    sos([0], 1, 5, 0, 2, lambda wt: ac_scan(wt, 0, 1, 5, 0, 2))
-    sos([0], 6, 63, 0, 2, lambda wt: ac_scan(wt, 0, 6, 63, 0, 2))
-    if ncomp == 3:
-        sos([1], 1, 63, 0, 1, lambda wt: ac_scan(wt, 1, 1, 63, 0, 1))
-        sos([2], 1, 63, 0, 1, lambda wt: ac_scan(wt, 2, 1, 63, 0, 1))
-    sos(allc, 0, 0, 1, 0, lambda wt: dc_scan(wt, 1, 0))
-    sos([0], 1, 63, 2, 1, lambda wt: ac_scan(wt, 0, 1, 63, 2, 1))
-    sos([0], 1, 63, 1, 0, lambda wt: ac_scan(wt, 0, 1, 63, 1, 0))
-    if ncomp == 3:
-        sos([1], 1, 63, 1, 0, lambda wt: ac_scan(wt, 1, 1, 63, 1, 0))
-        sos([2], 1, 63, 1, 0, lambda wt: ac_scan(wt, 2, 1, 63, 1, 0))
+        if ss == 0:
+            dc_scan(wtr, ah, al)
+        else:
+            ac_scan(wtr, comps[0], ss, se, ah, al)
+        out += wtr.flush()
     out += b"\xff\xd9"
     return bytes(out)
 
@@ -1207,23 +1124,11 @@ def distributed_media(
         payload = png_encode(w, h, ch, pix, filters=[(i + k) % 5 for k in range(5)])
         return [(f"img{i:09d}", "image", payload, "image/png", w, h, None, label)]
 
-    return map_rows(
-        spark.range(n_media, numPartitions=partitions),
-        ["id"],
-        "media_id string, kind string, payload binary, mime string, "
-        "width long, height long, duration_ms long, label string",
-        lambda: row,
-    )
+    return map_rows(spark.range(n_media, numPartitions=partitions), ["id"], MEDIA, lambda: row)
 
 
 def media_df(spark, corpus: MediaCorpus):
-    return spark.createDataFrame(
-        corpus.rows,
-        schema=(
-            "media_id string, kind string, payload binary, mime string, "
-            "width long, height long, duration_ms long, label string"
-        ),
-    )
+    return spark.createDataFrame(corpus.rows, schema=MEDIA)
 
 
 # Bump when generation changes (templates, vocabulary, skew profile): the

@@ -22,10 +22,10 @@ from ontology_pipeline_spark.synth import generate_media_corpus, media_df, png_e
 
 def _media(spark):
     rows = [
-        ("m1", "image", b"\x89PNG fake bytes", "image/png", 64, 64, None),
-        ("m2", "audio", b"RIFF fake wave", "audio/wav", None, None, 2500),
-        ("m3", "video", b"\x00\x00ftyp fake", "video/mp4", 640, 480, 3500),
-        ("m4", "image", None, "image/png", None, None, None),
+        ("m1", "image", b"\x89PNG fake bytes", "image/png", 64, 64, None, "garbage"),
+        ("m2", "audio", b"RIFF fake wave", "audio/wav", None, None, 2500, "audio"),
+        ("m3", "video", b"\x00\x00ftyp fake", "video/mp4", 640, 480, 3500, "video"),
+        ("m4", "image", None, "image/png", None, None, None, "null"),
     ]
     return spark.createDataFrame(rows, schema=MEDIA)
 
@@ -679,6 +679,72 @@ def test_jpeg_decode_peak_memory_bound():
                 tracemalloc.stop()
             assert got == want
             assert peak <= limit + 2 * len(b) + (1 << 14), (ncomp, sub, enc.__name__, peak, limit, len(b))
+
+
+def test_jpeg_encoders_bytes_pinned():
+    """Both JPEG writers are byte-stable: SHA-256 of every (writer x
+    {gray, 444, 420, 422} x restart {0, 2}) encode of fixed planes (a noisy
+    left half for ZRLs and large ACs, a flat right half for EOB runs) is
+    pinned.  Decoder tests patch and size streams by exact byte offsets.
+    The writers stay the spec-side oracle for the decoder, so `synth` and
+    `operators.multimodal` import nothing from each other."""
+    import ast
+    import inspect
+
+    from ontology_pipeline_spark import synth
+    from ontology_pipeline_spark.operators import multimodal
+
+    pinned = {
+        ("jpeg_encode", "gray", 0): "ea88ef8b2621ad0579a498f3a42e75a2d718b5db70e76f61b991747d3ee9af71",
+        ("jpeg_encode", "gray", 2): "bc23eb9d221a908f87d35a94b3bf65ff2f65698dd111e2feb2f03b7380bdeb76",
+        ("jpeg_encode", "444", 0): "33d7094342202d9cc839cc9869865fe40e8aaa663e6f529c8e22683376e2c8cd",
+        ("jpeg_encode", "444", 2): "41ac2ced3c7d913a03e6ad133e006b529a605b0c0d208668a77539d7861eb66a",
+        ("jpeg_encode", "420", 0): "fa392a9697c491e6085b978114b9939fa47e145d6de2f003d95aa93bc7fc18ba",
+        ("jpeg_encode", "420", 2): "5ad5ac9305d857827a8e27f4c699e743145a80a69c3da99426299127215b47b5",
+        ("jpeg_encode", "422", 0): "576fedca74d96d76f6472320b581ac2b374b345d1554c74f6a7e1611b144c932",
+        ("jpeg_encode", "422", 2): "b232781b2ff1cdaf4e68753342790381c655cac8e93321b5f68fdedfe919f9cf",
+        ("jpeg_encode_progressive", "gray", 0): "36c0bfec821cdeada8ee8f1ebff8299b20a2e0e2e2e9c53456591818d0c08044",
+        ("jpeg_encode_progressive", "gray", 2): "16218955ab8d242d7ec7704e373502f2e0d20ce858f1b8839ee7d9f9d92f94ba",
+        ("jpeg_encode_progressive", "444", 0): "9a18e44d6140b92f68c01eff49d70202872f8f004c6b82a8c3102356a512177e",
+        ("jpeg_encode_progressive", "444", 2): "2aaad36d64665d3e89d93ebace4144cb27c0272991475c1aef9246d4a501de38",
+        ("jpeg_encode_progressive", "420", 0): "a04be70f6f9b38e3d3a6f9449f307b928faea91fba279d576d2175dba53f281b",
+        ("jpeg_encode_progressive", "420", 2): "2a487b1cd157c400f848c68364b6639bb912db5d3c9956f3b1a4be3dffe8370a",
+        ("jpeg_encode_progressive", "422", 0): "6a9ca04920ccdce8aeed4d2bdd9223761fb5ae057fdf6e62b41d2a8cc9886954",
+        ("jpeg_encode_progressive", "422", 2): "36dae1b5152c3df85744c54e5a1426975121a52a687d8e19d186d7e0809a3f02",
+    }
+    w, h = 37, 22
+    got = {}
+    for enc in (synth.jpeg_encode, synth.jpeg_encode_progressive):
+        for layout in ("gray", "444", "420", "422"):
+            ncomp = 1 if layout == "gray" else 3
+            planes = [
+                bytes(
+                    (
+                        (x * 37 + y * 91 + c * 53) * (x ^ y) % 251
+                        if x < w // 2
+                        else 40 + 30 * c + (y // 8) * 20
+                    )
+                    % 256
+                    for y in range(h)
+                    for x in range(w)
+                )
+                for c in range(ncomp)
+            ]
+            sub = "444" if layout == "gray" else layout
+            for ri in (0, 2):
+                b = enc(w, h, planes, subsampling=sub, restart_interval=ri)
+                got[(enc.__name__, layout, ri)] = hashlib.sha256(b).hexdigest()
+    assert got == pinned
+
+    for module, other in ((synth, "multimodal"), (multimodal, "synth")):
+        for node in ast.walk(ast.parse(inspect.getsource(module))):
+            if isinstance(node, ast.ImportFrom):
+                names = [node.module or ""] + [a.name for a in node.names]
+            elif isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            else:
+                continue
+            assert not any(other in n.split(".") for n in names), (module.__name__, names)
 
 
 def test_jpeg_progressive_matrix_matches_baseline():
