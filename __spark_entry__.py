@@ -268,15 +268,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         end-to-end: split the documents table deterministically by
         xxhash64(doc_id) pmod 2 into two shards, ingest them in order
         against a fresh on-disk state store (gates -> exact vs persisted
-        fingerprints -> intra-shard MinHash clusters -> cross-shard probe
-        vs the persisted band index -> commit state + lineage), then read
+        fingerprints -> one near-dup graph of intra-shard MinHash pairs and
+        cross-shard probe pairs vs the persisted band index, one keep rule
+        -> commit state + lineage), then read
         back the COMMITTED state: one row per surviving (shard_id, doc_id)
         plus one lineage row per shard with the stage counters.  Exercises
         the full commit protocol (dynamic partition overwrite + lineage
         gate) through the same store the crash/resume tests use.  Oracle:
         pure-Python sequential replay of both ingests
         (scripts/golden_replay.py:replay_ingest — shared minhash_coeffs
-        schedule, Murmur3 band buckets, committed-state accumulation).
+        schedule, Murmur3 band buckets, one union-find per shard over the
+        intra pairs with cross pairs flagging its components, committed-state
+        accumulation).
         Reference semantic anchor: resume/merge at
         /root/reference/src/extractor.py:46-104, here at shard granularity."""
         import shutil

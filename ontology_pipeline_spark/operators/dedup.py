@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .canonicalize import connected_components
 from .text_analysis import fingerprint, simhash, tokens
 
 # Mersenne prime 2^31-1 for the MinHash universal-hash family: with
@@ -667,20 +668,6 @@ def minhash_dedup_clusters(
     sigs = _signature_table(
         spread_over_slots(documents), text_col, id_col, num_hashes, shingle_n, seed
     )
-    return clusters_from_signatures(sigs, num_hashes, bands, threshold, max_bucket_size)
-
-
-def clusters_from_signatures(
-    sigs: DataFrame,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.8,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """:func:`minhash_dedup_clusters` after the signatures: pinned (doc_id,
-    signature) rows in, (doc_id, cluster_id) out."""
-    from .canonicalize import connected_components
-
     pairs = lsh_pairs_from_signatures(
         sigs, num_hashes, bands, max_bucket_size
     ).filter(F.col("est_jaccard") >= threshold)

@@ -4,19 +4,18 @@ of plans/curate.py, against PERSISTED dedup state instead of the full corpus.
     new shard --staging pass: gates (clean/structural/lang/quality)
                 + fingerprint + MinHash signature, one pinned projection-->
       --exact_dedup_against (persisted fingerprint table)-->
-      --intra-shard minhash_dedup_clusters drop-->
-      --cross-shard minhash_probe_near_dups drop (persisted MinHash index)-->
+      --one near-dup graph: intra-shard LSH pairs + cross-shard probe pairs
+        (persisted MinHash index), one connected_components, one keep rule-->
       survivors -> append documents + fingerprints + index rows + lineage
 
 The staging pass runs once per shard, spread over every slot and pinned
 eagerly; every later phase reads only its slim `_fp` / `_sig` columns
 through the "after the signatures" halves of the dedup operators
-(`exact_dedup_against_fingerprinted`, `clusters_from_signatures`,
-`probe_from_signatures`, `index_from_signatures`).  The shard's text is
-therefore tokenized, fingerprinted and MinHash-signed exactly once, where
-composing the text-level operators would do each up to three times (exact
-anti-join + fingerprint write; intra-shard pairs + probe + index build).
-tests/test_ingest.py pins that the committed state equals that composition.
+(`exact_dedup_against_fingerprinted`, `lsh_pairs_from_signatures`,
+`probe_from_signatures`, `index_from_signatures`), so the shard's text is
+tokenized, fingerprinted and MinHash-signed exactly once.  Keep rule: a
+shard doc survives iff it is the smallest shard id of its component and no
+cross edge touches that component.
 
 Semantic anchor: the reference's resume/merge (`load_existing_results` +
 skip-processed at /root/reference/src/extractor.py:46-104) is exactly this
@@ -42,14 +41,18 @@ Scale notes (100 TB):
   template/boilerplate-family buckets on both sides before the join — the
   piece that keeps the probe O(shard) as the index grows; see
   operators/dedup.py:minhash_probe_near_dups).
-* Known, standard trade-off vs the batch chain: near-dup transitivity is
-  not re-closed across history (a shard doc connected to history only
-  THROUGH another same-shard doc that got dropped intra-shard can survive
-  where the batch chain would drop it).  Direct cross-shard duplicates —
-  exact or banded-LSH-visible — are always caught, with estimates identical
-  to a full-corpus run (shared `dedup.minhash_coeffs` schedule).  The
-  two-shard == one-batch equivalence test in tests/test_ingest.py holds on
-  corpora without such cross-shard chains.
+* Batch parity (tests/test_ingest.py: two shards == one batch, with and
+  without chains) assumes monotone ids: every history id is below every
+  shard id, so the batch chain's min-id keep of a component that reaches
+  history is a history doc, and dropping the whole shard side of that
+  component (including docs that reach history only through same-shard
+  near-dups) matches it.  Estimates equal a full-corpus run's (shared
+  `dedup.minhash_coeffs` schedule); parity is claimed uncapped
+  (``max_bucket_size=None``), the cap being a documented recall trade-off.
+* Remaining gap: a chain through a history doc dropped in an EARLIER shard
+  (D~H dropped on shard 1, then X~D arrives) is not closed, because the
+  index holds only survivors.  Closing it needs tombstone index rows for
+  dropped near-dups, which grow the persisted state per ingested shard.
 """
 
 from __future__ import annotations
@@ -59,10 +62,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.canonicalize import connected_components
 from ..operators.dedup import (
-    clusters_from_signatures,
     exact_dedup_against_fingerprinted,
     index_from_signatures,
+    lsh_pairs_from_signatures,
     probe_from_signatures,
     spread_over_slots,
     with_minhash_signature,
@@ -229,41 +233,42 @@ def ingest_shard(
         # first shard: exact_dedup_against with an empty fingerprint table
         # degenerates to intra-shard exact dedup
         seen_fps = spark.createDataFrame([], "doc_id long, fp string")
-    # pin: the exact-survivor frame feeds the intra-shard cluster computation,
-    # its own anti-join, AND the counter (multi-consumer rule)
+    # pin: the exact-survivor frame feeds the near-dup graph, its anti-join
+    # AND the counter (multi-consumer rule)
     d = exact_dedup_against_fingerprinted(staged, seen_fps, id_col).localCheckpoint(
         eager=False
     )
     n_exact = d.count()
 
-    clusters = clusters_from_signatures(
-        signatures(d),
-        num_hashes=num_hashes,
-        bands=bands,
-        threshold=dedup_threshold,
-        max_bucket_size=max_bucket_size,
+    # one near-dup graph over every exact survivor: the intra-shard pairs
+    # (hot buckets capped on shard occupancy) plus each cross-shard pair at
+    # its shard end (capped on combined occupancy), so every node is a shard
+    # doc and a component's label is its smallest shard id
+    edges = lsh_pairs_from_signatures(signatures(d), num_hashes, bands, max_bucket_size)
+    edges = edges.filter(F.col("est_jaccard") >= dedup_threshold).select(
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
-    intra_drop = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("doc_id").alias(id_col)
-    )
-    d = d.join(intra_drop, id_col, "left_anti").localCheckpoint(eager=False)
-    n_intra = d.count()
-
     index = store.read_index(spark)
     if index is not None:
-        cross = probe_from_signatures(
-            signatures(d),
-            index.drop("shard_id"),
-            num_hashes=num_hashes,
-            bands=bands,
-            threshold=dedup_threshold,
-            max_bucket_size=max_bucket_size,
-        ).select(F.col("new_id").alias(id_col)).distinct()
-        d = d.join(cross, id_col, "left_anti")
-
-    # pin the final survivors: they feed the document, fingerprint and index
+        # pinned: the hit shard ends feed the graph and flag its components
+        hits = probe_from_signatures(
+            signatures(d), index.drop("shard_id"), num_hashes, bands, dedup_threshold,
+            max_bucket_size,
+        ).select(F.col("new_id").alias("node")).localCheckpoint(eager=False)
+        edges = edges.union(hits.select("node", "node"))
+    labels = connected_components(edges)
+    # keep rule: a shard doc survives iff it is its component's label and no
+    # cross edge touches the component.  Touched components are found through
+    # the hit shard ends, never through node ids (a shard doc may reuse an
+    # indexed doc's id); `dups` already holds all their members but the label
+    dups = labels.filter(F.col("node") != F.col("component")).select("node")
+    drop = dups if index is None else dups.union(labels.join(hits, "node").select("component"))
+    # pin the survivors: they feed the document, fingerprint and index
     # writes, and the count
-    d = d.localCheckpoint(eager=True)
+    d = d.join(drop.withColumnRenamed("node", id_col), id_col, "left_anti").localCheckpoint(
+        eager=True
+    )
+    n_intra = n_exact - dups.count()
     n_survivors = d.count()
 
     stamp = F.lit(shard_id).alias("shard_id")

@@ -323,8 +323,10 @@ def replay_ingest(
     plans.ingest.ingest_shard — per shard: gates (lang-id + quality floor,
     same rules as replay_curation) -> exact_dedup_against the COMMITTED
     fingerprint set (intra-shard min-id dedup, then drop fps already seen)
-    -> intra-shard minhash cluster drop -> cross-shard probe vs the
-    COMMITTED band index -> commit survivors' fps + signatures.  Returns
+    -> one union-find over the intra-shard minhash pairs, each cross-shard
+    pair (probe vs the COMMITTED band index) flagging its shard end's
+    component -> keep a doc iff it is its component's min id and the
+    component is unflagged -> commit survivors' fps + signatures.  Returns
     ('survivor', shard_id, doc_id, None...) rows plus one
     ('lineage', shard_id, None, total, exact, intra, new) row per shard."""
     rng = random.Random(seed)
@@ -368,15 +370,13 @@ def replay_ingest(
         exact_docs = [(d, t) for d, t in gated if d in keep]
         n_exact = len(exact_docs)
 
-        clusters = replay_dedup_clusters(
-            exact_docs, num_hashes, bands, shingle_n, seed, threshold
+        comp = dict(
+            replay_dedup_clusters(exact_docs, num_hashes, bands, shingle_n, seed, threshold)
         )
-        drops = {d for d, rep in clusters if d != rep}
-        intra_docs = [(d, t) for d, t in exact_docs if d not in drops]
-        n_intra = len(intra_docs)
+        n_intra = sum(comp.get(d, d) == d for d, _t in exact_docs)
 
-        cross_drop = set()
-        for d, t in intra_docs:
+        flagged = set()
+        for d, t in exact_docs:
             sig = minhash_signature(t, num_hashes, shingle_n, coeffs)
             if sig is None:
                 continue
@@ -388,8 +388,10 @@ def replay_ingest(
                     seen_cand.add(hd)
                     agree = sum(1 for x, y in zip(sig, hsig) if x == y)
                     if spark_round(agree / float(num_hashes), 6) >= threshold:
-                        cross_drop.add(d)
-        survivors = [(d, t) for d, t in intra_docs if d not in cross_drop]
+                        flagged.add(comp.get(d, d))
+        survivors = [
+            (d, t) for d, t in exact_docs if comp.get(d, d) == d and d not in flagged
+        ]
 
         for d, t in survivors:
             hist_fps.add(norm(t))

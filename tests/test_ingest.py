@@ -10,6 +10,7 @@ extraction.
 
 from __future__ import annotations
 
+import hashlib
 import shutil
 
 import pytest
@@ -21,6 +22,7 @@ from ontology_pipeline_spark.operators.dedup import (
     minhash_dedup_clusters,
     minhash_hot_buckets,
     minhash_index,
+    minhash_lsh_pairs,
     minhash_probe_near_dups,
 )
 from ontology_pipeline_spark.plans.curate import curate_documents, gate_documents
@@ -29,6 +31,7 @@ from ontology_pipeline_spark.plans.ingest import (
     ingest_shard,
     read_curated,
 )
+from ontology_pipeline_spark.synth import generate_corpus
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -70,6 +73,80 @@ def test_two_shards_equal_one_batch(spark, docs, tmp_path):
     assert _ids(incr) == _ids(batch)
     # full-row equality, not just ids: gates columns ride along identically
     assert sorted(map(tuple, incr.collect())) == sorted(map(tuple, batch.collect()))
+
+
+def _salt(key):
+    h = hashlib.md5(str(key).encode()).hexdigest()
+    return [h[j : j + 4] for j in range(0, 32, 4)]
+
+
+def _chain(i, text):
+    """(H, X, Y) texts of one near-dup chain: H is the page plus a salt, X
+    is H with its last 8 tokens replaced, Y is X with its first 8 tokens
+    replaced.  H~X and X~Y share most shingles; H~Y shares fewer."""
+    h = text.split() + _salt(i)
+    x = h[:-8] + _salt(f"x{i}")
+    y = _salt(f"y{i}") + x[8:]
+    return " ".join(h), " ".join(x), " ".join(y)
+
+
+def _docs(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, source string, text string")
+
+
+def test_ingest_closes_chain_through_same_shard_doc(spark, tmp_path):
+    """History holds H (id 1), the shard holds Y (id 10) and X (id 20), with
+    H~X and X~Y near-dups and H~Y not.  Y reaches history only through X,
+    a same-shard doc that is not its component's smallest id; the batch
+    chain drops both (one component, kept by H) and so must ingest."""
+    page = generate_corpus(40, seed=7).pages[3]
+    h, x, y = _chain(3, page[3])
+    docs = _docs(spark, [(1, page[0], h), (10, page[0], y), (20, page[0], x)])
+    est = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in minhash_lsh_pairs(docs).collect()}
+    assert est[(1, 20)] >= 0.8 and est[(10, 20)] >= 0.8 and est.get((1, 10), 0.0) < 0.8, est
+
+    state = str(tmp_path / "state")
+    ingest_shard(spark, docs.filter(F.col("doc_id") < 10), state, "day_001", max_bucket_size=None)
+    r = ingest_shard(
+        spark, docs.filter(F.col("doc_id") >= 10), state, "day_002", max_bucket_size=None
+    )
+    assert _ids(read_curated(spark, state)) == _ids(curate_documents(docs)) == {1}
+    counters = ("total_docs", "exact_survivors", "intra_survivors", "new_docs")
+    assert tuple(r[k] for k in counters) == (2, 2, 1, 0)
+
+
+def test_two_shards_equal_one_batch_with_chains(spark, tmp_path):
+    """Two-shard == one-batch on a corpus seeded with near-dup chains:
+    shard 1 holds every chain's H, shard 2 its Y (the lower id) and X plus
+    fresh pages, so some Y reach history only through their X."""
+    rows = []
+    for i, p in enumerate(generate_corpus(40, seed=7).pages):
+        h, x, y = _chain(i, p[3])
+        rows += [(i, p[0], h), (1000 + i, p[0], y), (2000 + i, p[0], x)]
+    for i, p in enumerate(generate_corpus(20, seed=8).pages):
+        rows.append((3000 + i, p[0], " ".join(p[3].split() + _salt(3000 + i))))
+    docs = _docs(spark, rows)
+    state = str(tmp_path / "state")
+    ingest_shard(spark, docs.filter(F.col("doc_id") < 1000), state, "day_001")
+    r2 = ingest_shard(spark, docs.filter(F.col("doc_id") >= 1000), state, "day_002")
+    assert r2["new_docs"] > 0
+
+    batch = curate_documents(docs)
+    incr = read_curated(spark, state)
+    assert sorted(map(tuple, incr.collect())) == sorted(map(tuple, batch.collect()))
+
+
+def test_shard_doc_reusing_indexed_id_is_dropped(spark, tmp_path):
+    """A shard doc that reuses an indexed doc's id with near-dup text is
+    dropped: its component is flagged through the probe's cross edges, not
+    through which ids the index holds."""
+    page = generate_corpus(40, seed=7).pages[3]
+    h, x, _y = _chain(3, page[3])
+    state = str(tmp_path / "state")
+    ingest_shard(spark, _docs(spark, [(1, page[0], h)]), state, "day_001")
+    r = ingest_shard(spark, _docs(spark, [(1, page[0], x)]), state, "day_002")
+    assert r["new_docs"] == 0
+    assert [row["text"] for row in read_curated(spark, state).collect()] == [h]
 
 
 def test_crossshard_exact_and_near_dups_dropped(spark, docs, tmp_path):
@@ -178,7 +255,10 @@ def _rows(df):
 
 def _public_chain(spark, shard, store, cap):
     """The curation `ingest_shard` commits, composed from the public
-    operators against the committed state in `store`."""
+    operators against the committed state in `store`.  It drops intra-shard
+    and cross-shard near-dups in two steps, which equals ingest's one-graph
+    keep rule on shards (like `dup_shard`) with no chain that reaches
+    history only through a same-shard near-dup."""
     seen = store.read_fingerprints(spark)
     if seen is None:
         seen = spark.createDataFrame([], "doc_id long, fp string")
