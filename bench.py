@@ -44,12 +44,13 @@ def _burn(n: int) -> int:
 
 
 def _hw_ceiling_sec(procs: int = 32, best_of: int = 2) -> float:
-    """Same-window pure-CPU burn (the bench_scaling._hw_ceiling probe,
-    one level): wall seconds for 96 x 2M-iteration multiprocessing tasks at
-    `procs` workers, best of `best_of`.  On a quiet host this is a stable
-    constant; hypervisor throttling inflates it in lockstep with the query
-    timings, so BENCH_rN.json files are comparable across rounds WITHOUT
-    the prose rebuttal (VERDICT r3 what's-wrong #3): divide any wall by the
+    """Same-window pure-CPU burn (also the hardware ceiling in
+    scripts/bench_scaling.py, at 8 and 32 procs): wall seconds for 96 x
+    2M-iteration multiprocessing tasks at `procs` workers, best of
+    `best_of`.  On a quiet host this is a stable constant; hypervisor
+    throttling inflates it in lockstep with the query timings, so
+    BENCH_rN.json files are comparable across rounds WITHOUT the prose
+    rebuttal (VERDICT r3 what's-wrong #3): divide any wall by the
     same-window ceiling before calling it a regression."""
     from multiprocessing import Pool
 

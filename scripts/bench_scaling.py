@@ -93,30 +93,6 @@ def worker(cores: int) -> None:
     spark.stop()
 
 
-def _burn(n: int) -> int:
-    s = 0
-    for i in range(n):
-        s += i * i
-    return s
-
-
-def _hw_ceiling() -> tuple[float, float]:
-    """Raw CPU-bound multiprocessing scaling on this host (8 vs 32 procs),
-    best of 3 — the ceiling any Spark job can reach here."""
-    from multiprocessing import Pool
-
-    out = []
-    for procs in (8, 32):
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            with Pool(procs) as p:
-                p.map(_burn, [2_000_000] * 96)
-            best = min(best, time.perf_counter() - t0)
-        out.append(best)
-    return out[0], out[1]
-
-
 def ensure_corpus() -> None:
     # plain path probe first (no throwaway JVM); _SUCCESS gates reuse so a
     # partial directory from an interrupted write is regenerated
@@ -156,7 +132,9 @@ def main() -> None:
     eff_1_4 = tps4 / tps1 / 4
     eff_2_8 = tps8 / tps2 / 4
     eff_8_32 = tps32 / tps8 / 4
-    hw8, hw32 = _hw_ceiling()
+    from bench import _hw_ceiling_sec
+
+    hw8, hw32 = _hw_ceiling_sec(8, 3), _hw_ceiling_sec(32, 3)
     hw_speedup = hw8 / hw32
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     md = f"""# BENCH/scaling_latest — scaling run (hand-merge improvements into the curated BASELINE.md)
@@ -214,9 +192,9 @@ Raw timings (s):
 - local[32] {results[32]["times"]}
 """
     # always write scaling_latest.md: BENCH/BASELINE.md is CURATED evidence
-    # (best measurements observed on this noisy host, plus the hand-added
-    # capacity-probe section the template below cannot reproduce) — merge
-    # better numbers into it by hand, never overwrite it mechanically
+    # (best measurements observed on this noisy host, plus historical
+    # sections the template below does not produce) — merge better numbers
+    # into it by hand, never overwrite it mechanically
     target = "scaling_latest.md"
     with open(os.path.join(REPO, "BENCH", target), "w") as f:
         f.write(md)

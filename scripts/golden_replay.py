@@ -375,9 +375,9 @@ def replay_ingest(
         )
         n_intra = sum(comp.get(d, d) == d for d, _t in exact_docs)
 
+        sigs = {d: minhash_signature(t, num_hashes, shingle_n, coeffs) for d, t in exact_docs}
         flagged = set()
-        for d, t in exact_docs:
-            sig = minhash_signature(t, num_hashes, shingle_n, coeffs)
+        for d, sig in sigs.items():
             if sig is None:
                 continue
             seen_cand = set()
@@ -395,7 +395,7 @@ def replay_ingest(
 
         for d, t in survivors:
             hist_fps.add(norm(t))
-            sig = minhash_signature(t, num_hashes, shingle_n, coeffs)
+            sig = sigs[d]
             if sig is not None:
                 for key in band_keys(sig):
                     hist_index.setdefault(key, []).append((d, sig))
