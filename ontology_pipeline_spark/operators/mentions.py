@@ -7,10 +7,13 @@ forms become mentions, mirroring the reference's "use terminology from the
 examples when possible" constraint (src/prompts.py:82, :103).
 
 Execution: one `mapInPandas` over pages with a declared output schema.  The
-lexicon is compiled once per executor into a single alternation regex
-(longest-first, so "VO2 Max Test" wins over its substring "VO2 Max") — an
-Aho-Corasick-style multi-pattern scan.  The stage is narrow (no shuffle) and
-Arrow-batched; at 100 TB it scales linearly with input partitions.
+lexicon is compiled once per executor into one IGNORECASE regex whose
+alternation is a trie of the lower-cased surfaces.  A node that ends a
+surface makes its children a greedy optional group, so the longest surface
+is tried first ("VO2 Max Test" beats "VO2 Max") and a failed trailing guard
+backtracks to a shorter one: the matches of a flat longest-first
+alternation, with each shared prefix matched once.  The stage is narrow (no
+shuffle) and Arrow-batched; at 100 TB it scales linearly with partitions.
 """
 
 from __future__ import annotations
@@ -22,18 +25,31 @@ from pyspark.sql import DataFrame
 from ..schemas import MENTIONS
 from .stage import map_rows
 
-_SENT_SPLIT = re.compile(r"(?<=[.!?])\s+|\n")
+# r"(?<=[.!?])\s+|\n", led by a class so the engine scans for it in C
+_SENT_SPLIT = re.compile(r"\s(?:(?<=[.!?]\s)\s*|(?<=\n))")
 
-# per-executor compiled-matcher cache, keyed by the lexicon tuple ITSELF —
-# not hash(lexicon_rows): a 64-bit hash collision between two different
-# lexicons would silently return the wrong compiled matcher (wrong mentions,
-# no error).  Dict lookup on the tuple compares full contents on collision.
-# BOUNDED (LRU, insertion-ordered dict): long-lived executors see many
-# distinct lexicons (e.g. the per-run augmented lexicons the fuzzy
-# canonicalization loop builds) — an unbounded cache pins every lexicon
-# tuple + compiled regex for the process lifetime.
+# per-executor LRU of compiled matchers, keyed by the lexicon tuple itself
+# (a hash key could collide and silently return another lexicon's matcher);
+# bounded, as long-lived executors see many per-run augmented lexicons
 _MATCHER_CACHE: dict[tuple, tuple] = {}
 _MATCHER_CACHE_MAX = 4
+
+
+def _alternation(surfaces: list[str]) -> str:
+    """Trie-factored alternation: one branch per first letter (letters that
+    IGNORECASE equates share one, so at most one branch can match), made
+    optional where a surface ends."""
+    branches: dict[str, list[str]] = {}
+    for surface in filter(None, surfaces):
+        ch = surface[0]
+        if ch not in branches:
+            ch = next((k for k in branches if re.fullmatch(re.escape(k), ch, re.I)), ch)
+        branches.setdefault(ch, []).append(surface[1:])
+    alts = [re.escape(ch) + _alternation(rest) for ch, rest in branches.items()]
+    if not alts:
+        return ""
+    body = alts[0] if len(alts) == 1 else "(?:" + "|".join(alts) + ")"
+    return f"(?:{body})?" if "" in surfaces else body
 
 
 def _compile(lexicon_rows: tuple) -> tuple:
@@ -46,15 +62,13 @@ def _compile(lexicon_rows: tuple) -> tuple:
     lookup: dict[str, list[tuple[str, str]]] = {}
     for entity_class, canonical, alias, _parent, _unit in lexicon_rows:
         lookup.setdefault(alias.lower(), []).append((canonical, entity_class))
-    surfaces = sorted(lookup, key=len, reverse=True)  # longest-first alternation
-    if not surfaces:
+    if not lookup:
         # empty lexicon: no mentions (an empty alternation "()" would match
-        # the empty string at every position and KeyError in the lookup)
+        # the empty string at every position)
         compiled = (None, lookup)
     else:
         pattern = re.compile(
-            "(?<![A-Za-z0-9])(" + "|".join(re.escape(s) for s in surfaces) + ")(?![A-Za-z0-9])",
-            re.IGNORECASE,
+            "(?<![A-Za-z0-9])(" + _alternation(list(lookup)) + ")(?![A-Za-z0-9])", re.IGNORECASE
         )
         compiled = (pattern, lookup)
     _MATCHER_CACHE[key] = compiled
@@ -73,7 +87,12 @@ def scan_text(
     for sent_id, sent in enumerate(_SENT_SPLIT.split(text)):
         for m in pattern.finditer(sent):
             surface = m.group(1)
-            for canonical, entity_class in lookup[surface.lower()]:
+            hits = lookup.get(surface.lower())
+            if hits is None:  # IGNORECASE folds 'İ'/'ı' to 'i' and 'ſ' to 's'; lower() does not
+                same = (k for k in lookup
+                        if len(k) == len(surface) and re.fullmatch(re.escape(k), surface, re.I))
+                hits = lookup.get(next(same, None), [])
+            for canonical, entity_class in hits:
                 out.append((url, sent_id, m.start(1), surface, canonical, entity_class))
     return out
 

@@ -25,10 +25,13 @@ stage:
 
 from __future__ import annotations
 
+from collections import defaultdict
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import TRIPLES
+from .extract_text import extract_text_bytes
 from .mentions import _compile, scan_text
 from .stage import map_rows
 
@@ -43,8 +46,6 @@ PAIR_RULES: dict[frozenset, tuple[str, str]] = {
 def _pair_triples(ments: list[tuple]) -> list[tuple]:
     """Pure pairing over one page's mentions: [(url, sent_id, pos, surface,
     canonical, class)] -> [(subj, subj_class, pred, obj, obj_class, url)]."""
-    from collections import defaultdict
-
     by_sent: dict[int, list] = defaultdict(list)
     for url, sent_id, pos, _surface, canonical, cls in ments:
         by_sent[sent_id].append((pos, canonical, cls, url))
@@ -118,8 +119,6 @@ def extract_triples_from_html(
     by a second mapInPandas) — at 100 TB this halves the JVM<->Python worker
     transfer on the hot path and keeps the whole extraction narrow.
     """
-    from .extract_text import extract_text_bytes
-
     return _fused_triples_stage(
         pages, lexicon_rows, html_col, id_col, extract_text_bytes
     )

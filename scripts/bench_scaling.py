@@ -18,6 +18,7 @@ and reporting the best of RUNS timed runs of the full chain:
 Usage:
     python scripts/bench_scaling.py        # writes BENCH/scaling_latest.md
     python scripts/bench_scaling.py --worker 8 # one timed run (internal)
+    python scripts/bench_scaling.py --gen      # write the corpus (internal)
 """
 
 from __future__ import annotations
@@ -93,11 +94,7 @@ def worker(cores: int) -> None:
     spark.stop()
 
 
-def ensure_corpus() -> None:
-    # plain path probe first (no throwaway JVM); _SUCCESS gates reuse so a
-    # partial directory from an interrupted write is regenerated
-    if os.path.exists(os.path.join(corpus_path(), "_SUCCESS")):
-        return
+def generate() -> None:
     from ontology_pipeline_spark.session import get_spark
     from ontology_pipeline_spark.synth import write_corpus
 
@@ -108,9 +105,21 @@ def ensure_corpus() -> None:
     spark.stop()
 
 
+def ensure_corpus() -> None:
+    # plain path probe first (no throwaway JVM); _SUCCESS gates reuse so a
+    # partial directory from an interrupted write is regenerated
+    if os.path.exists(os.path.join(corpus_path(), "_SUCCESS")):
+        return
+    # a child process, like each level: a stopped session's JVM stays resident
+    subprocess.run([sys.executable, os.path.abspath(__file__), "--gen"], cwd=REPO, check=True)
+
+
 def main() -> None:
     if len(sys.argv) > 2 and sys.argv[1] == "--worker":
         worker(int(sys.argv[2]))
+        return
+    if sys.argv[1:] == ["--gen"]:
+        generate()
         return
 
     ensure_corpus()

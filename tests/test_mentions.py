@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 from ontology_pipeline_spark.lexicon import lexicon_rows
-from ontology_pipeline_spark.operators.mentions import detect_mentions
+from ontology_pipeline_spark.operators.mentions import _compile, detect_mentions, scan_text
 
 
 def test_mentions_match_golden(spark, pages, corpus):
@@ -56,3 +56,18 @@ def test_empty_lexicon_detects_nothing(spark):
 
     df = spark.createDataFrame([("u1", "some text here")], ["url", "text"])
     assert detect_mentions(df, []).count() == 0
+
+
+def test_scan_resolves_regex_only_case_folds():
+    """IGNORECASE matches 'ſ' (U+017F) as 's' and 'İ'/'ı' (U+0130/U+0131) as
+    'i', but str.lower() of such a match is not a lookup key: the match
+    resolves to the surface it matched instead of raising KeyError."""
+    pattern, lookup = _compile(tuple(tuple(r) for r in lexicon_rows()))
+    for text in (
+        "I track \u017fleep quality daily.",
+        "I track sleep QUAL\u0130TY daily.",
+        "I track Sleep Qual\u0131ty daily.",
+    ):
+        rows = scan_text("u", text, pattern, lookup)
+        assert [(r[1], r[2], r[4], r[5]) for r in rows] == [(0, 8, "Sleep Quality", "construct")]
+        assert rows[0][3] == text[8:21]

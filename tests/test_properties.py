@@ -54,6 +54,54 @@ def test_scan_counts_match_naive_matcher(words):
     assert got == sorted(want)
 
 
+@st.composite
+def _lexicon_and_text(draw):
+    """A random lexicon whose surfaces are prefixes of each other and hold
+    '.', '-', spaces, digits and non-ASCII letters, and a text of its
+    surfaces (case-flipped; some twinned by regex-only case folds such as
+    's'/'\u017f') glued by separators, some alphanumeric so a
+    trailing guard fails and the match backtracks to a shorter surface."""
+    chars = st.sampled_from(list("ab.- 1") + ["s", "\u017f", "i", "\u0131", "\u0130", "\xe9", "k"])
+    bases = draw(st.lists(st.text(chars, min_size=1, max_size=6), min_size=1, max_size=4))
+    twin = str.maketrans({"s": "\u017f", "\u017f": "s", "i": "\u0131", "\u0131": "i"})
+    aliases = []
+    for base in bases + [b.translate(twin) for b in bases if draw(st.booleans())]:
+        cuts = draw(st.lists(st.integers(1, len(base)), min_size=1, max_size=3))
+        aliases += [base[:c] for c in cuts]
+    rows = tuple(
+        (draw(st.sampled_from(["construct", "assessment"])), f"C{i}", a, None, None)
+        for i, a in enumerate(aliases)
+    )
+    pieces = draw(
+        st.lists(
+            st.one_of(
+                st.tuples(st.sampled_from(aliases), st.sampled_from([str, str.upper, str.title])).map(
+                    lambda alias_case: alias_case[1](alias_case[0])
+                ),
+                st.sampled_from([" ", ".", "-", "x", "1", "s", ". ", "\n"]),
+            ),
+            max_size=12,
+        )
+    )
+    return rows, "".join(pieces)
+
+
+@settings(max_examples=600, deadline=None)
+@given(_lexicon_and_text())
+def test_trie_pattern_equals_flat_longest_first(lex_text):
+    """The trie-factored pattern gives the same scan_text rows as the flat
+    longest-first alternation over the same lower-cased surfaces."""
+    rows, text = lex_text
+    pattern, lookup = _compile(rows)
+    flat = re.compile(
+        "(?<![A-Za-z0-9])("
+        + "|".join(re.escape(s) for s in sorted(lookup, key=len, reverse=True))
+        + ")(?![A-Za-z0-9])",
+        re.IGNORECASE,
+    )
+    assert scan_text("u", text, pattern, lookup) == scan_text("u", text, flat, lookup)
+
+
 @settings(max_examples=100, deadline=None)
 @given(st.lists(st.text(alphabet="abc &<>", min_size=0, max_size=20), min_size=0, max_size=6))
 def test_html_roundtrip_byte_identity(paragraphs):
