@@ -28,8 +28,9 @@ from .mentions import detect_mentions
 # flag makes Java's \s match Unicode whitespace like Python's does (Java \s
 # is ASCII-only by default) — without it a NBSP after a period splits on the
 # Python side but not the JVM side, shifting every later sent_id and
-# attaching constructs/protocol subjects to the wrong sentences.
-SENT_SPLIT_RE = r"(?U)(?<=[.!?])\s+|\n"
+# attaching constructs/protocol subjects to the wrong sentences.  \x1C-\x1F:
+# separators Python's \s matches and Java's White_Space does not.
+SENT_SPLIT_RE = r"(?U)(?<=[.!?])[\s\x1C-\x1F]+|\n"
 
 # (kind, RE2-safe pattern over the lowercased sentence)
 DEFAULT_CUES: list[tuple[str, str]] = [

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import literal_frame
+
 
 def nodes(triples: DataFrame) -> DataFrame:
     """Distinct typed nodes (reference node_types dict, streamlit_app.py:732)."""
@@ -126,7 +128,7 @@ def pagerank(
 def ego_edges(triples: DataFrame, node: str, hops: int = 1) -> DataFrame:
     """k-hop ego subgraph edges (reference 1-hop isolation,
     streamlit_app.py:771-777) via iterated self-joins."""
-    frontier = triples.sparkSession.createDataFrame([(node,)], ["name"])
+    frontier = literal_frame(triples.sparkSession, "name string", (node,))
     seen = frontier
     for _ in range(hops):
         nbrs = (

@@ -15,8 +15,12 @@ The rules live once, in `_pair_triples`, and run inside ONE mapInPandas
 pass that also detects the mentions: co-occurrence is sentence-local, so
 the whole triple extraction is shuffle-free.  This is the 100 TB hot path:
 one narrow stage from page scan to triple rows; the only shuffles left in
-the pipeline are the final aggregations.  Two entry points share that
-stage:
+the pipeline are the final aggregations.
+
+`fused_triples_stage` is that pass; after a page's triple rows it emits one
+page row `(url, n_triples)`, from which a commit writes lineage without
+reading its triples back.  `triple_rows`/`page_rows` split the two.  The
+public entry points return the triple rows only:
 
 * `extract_triples_fused(pages, lexicon)` — pages carrying extracted text;
 * `extract_triples_from_html(pages, lexicon)` — pages carrying raw HTML,
@@ -29,11 +33,17 @@ from collections import defaultdict
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
+from ..lexicon import lexicon_rows as default_lexicon_rows
 from ..schemas import TRIPLES
 from .extract_text import extract_text_bytes
 from .mentions import _compile, scan_text
 from .stage import map_rows
+
+# TRIPLES plus the page row's count; page rows carry "" in the triple columns
+# and triple rows -1 in n_triples, so every column stays non-null
+STAGED = StructType([*TRIPLES.fields, StructField("n_triples", LongType(), False)])
 
 # unordered class-pair -> (subject_class, predicate)
 PAIR_RULES: dict[frozenset, tuple[str, str]] = {
@@ -74,25 +84,44 @@ def _pair_triples(ments: list[tuple]) -> list[tuple]:
     return list(dict.fromkeys(out))
 
 
-def _fused_triples_stage(
+def fused_triples_stage(
     pages: DataFrame,
-    lexicon_rows: list[tuple],
-    value_col: str,
-    id_col: str,
-    to_text,
+    lexicon_rows: list[tuple] | None = None,
+    from_html: bool = True,
+    value_col: str | None = None,
+    id_col: str = "url",
 ) -> DataFrame:
-    """Shared row function for both fused variants: one implementation,
-    parameterized by a per-row text accessor, so pairing and schema can
-    never drift between the text and html entry points."""
-    lex = tuple(tuple(r) for r in lexicon_rows)
+    """pages -> `STAGED` rows in one shuffle-free mapInPandas stage: each
+    page's triple rows, then its page row.  One row function for both
+    inputs (`value_col` defaults to "html" or "text"), so pairing and schema
+    can never drift between the text and html entry points."""
+    # `is None`, not truthiness: an explicitly passed empty lexicon means
+    # "extract nothing", not "use the default vocabulary"
+    lex = default_lexicon_rows() if lexicon_rows is None else lexicon_rows
+    lex = tuple(tuple(r) for r in lex)
+    to_text = extract_text_bytes if from_html else (lambda t: t)
+    value_col = value_col or ("html" if from_html else "text")
 
     def make_row_fn():
         pattern, lookup = _compile(lex)
-        return lambda url, val: _pair_triples(
-            scan_text(url, to_text(val), pattern, lookup)
-        )
 
-    return map_rows(pages, [id_col, value_col], TRIPLES, make_row_fn)
+        def rows(url, val):
+            triples = _pair_triples(scan_text(url, to_text(val), pattern, lookup))
+            return [*(t + (-1,) for t in triples), ("", "", "", "", "", url, len(triples))]
+
+        return rows
+
+    return map_rows(pages, [id_col, value_col], STAGED, make_row_fn)
+
+
+def triple_rows(staged: DataFrame) -> DataFrame:
+    """The `TRIPLES` rows of a `fused_triples_stage` output."""
+    return staged.filter(F.col("n_triples") < 0).drop("n_triples")
+
+
+def page_rows(staged: DataFrame) -> DataFrame:
+    """One `(url, n_triples)` row per page of a `fused_triples_stage` output."""
+    return staged.filter(F.col("n_triples") >= 0).select("url", "n_triples")
 
 
 def extract_triples_fused(
@@ -102,7 +131,7 @@ def extract_triples_fused(
     id_col: str = "url",
 ) -> DataFrame:
     """pages -> triples in one shuffle-free mapInPandas stage (the hot path)."""
-    return _fused_triples_stage(pages, lexicon_rows, text_col, id_col, lambda t: t)
+    return triple_rows(fused_triples_stage(pages, lexicon_rows, False, text_col, id_col))
 
 
 def extract_triples_from_html(
@@ -119,9 +148,7 @@ def extract_triples_from_html(
     by a second mapInPandas) — at 100 TB this halves the JVM<->Python worker
     transfer on the hot path and keeps the whole extraction narrow.
     """
-    return _fused_triples_stage(
-        pages, lexicon_rows, html_col, id_col, extract_text_bytes
-    )
+    return triple_rows(fused_triples_stage(pages, lexicon_rows, True, html_col, id_col))
 
 
 def distinct_triples(triples: DataFrame) -> DataFrame:

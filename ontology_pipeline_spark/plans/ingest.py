@@ -72,6 +72,7 @@ from ..operators.dedup import (
     with_minhash_signature,
 )
 from ..operators.text_analysis import fingerprint
+from ..sources.tables import literal_frame
 from .curate import gate_documents
 
 
@@ -232,7 +233,7 @@ def ingest_shard(
     if seen_fps is None:
         # first shard: exact_dedup_against with an empty fingerprint table
         # degenerates to intra-shard exact dedup
-        seen_fps = spark.createDataFrame([], "doc_id long, fp string")
+        seen_fps = literal_frame(spark, "doc_id long, fp string", (None, None)).limit(0)
     # pin: the exact-survivor frame feeds the near-dup graph, its anti-join
     # AND the counter (multi-consumer rule)
     d = exact_dedup_against_fingerprinted(staged, seen_fps, id_col).localCheckpoint(
@@ -278,23 +279,13 @@ def ingest_shard(
         index_from_signatures(signatures(d), num_hashes, bands).select("*", stamp),
     )
     store.append_lineage(
-        spark.createDataFrame(
-            [
-                (
-                    shard_id,
-                    total,
-                    n_exact,
-                    n_intra,
-                    n_survivors,
-                    num_hashes,
-                    bands,
-                    shingle_n,
-                    float(dedup_threshold),
-                )
-            ],
+        literal_frame(
+            spark,
             "shard_id string, total_docs long, exact_survivors long, "
             "intra_survivors long, new_docs long, num_hashes int, bands int, "
             "shingle_n int, threshold double",
+            (shard_id, total, n_exact, n_intra, n_survivors, num_hashes, bands, shingle_n,
+             float(dedup_threshold)),
         ).withColumn("committed_ts", F.current_timestamp())
     )
     return {

@@ -1,9 +1,10 @@
 """End-to-end KG-construction plan (the engine's EP1 analog; reference
 lifecycle at main.py:282-292 -> src/extractor.py:918-977).
 
-    pages --anti-join lineage--> extract_text -> triples (fused mention+pair)
-      -> append to triples sink (bucketed by subject hash)
-      -> append per-url lineage rows (resume checkpoint)
+    pages --anti-join lineage--> fused stage (HTML->text, mentions, pairs;
+      each page's triple rows + one page row, pinned once)
+      -> triple rows: append to triples sink (bucketed by subject hash)
+      -> page rows: append per-url lineage rows (resume checkpoint)
 
 Resume semantics mirror the reference exactly: `load_existing_results` +
 "skip already-processed files" (src/extractor.py:46-74, :934-935) becomes a
@@ -27,12 +28,8 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.relations import (
-    distinct_triples,
-    extract_triples_from_html,
-    extract_triples_fused,
-)
-from ..lexicon import lexicon_rows as default_lexicon_rows
+from ..operators.relations import distinct_triples, fused_triples_stage, page_rows, triple_rows
+from ..sources.tables import ParquetTripleSink, literal_frame
 
 
 def build_triples(
@@ -41,12 +38,7 @@ def build_triples(
     from_html: bool = True,
 ) -> DataFrame:
     """pages -> per-page triples (one shuffle-free fused Python stage)."""
-    # `is None`, not truthiness: an explicitly passed empty lexicon means
-    # "extract nothing", not "use the default vocabulary"
-    lex = default_lexicon_rows() if lexicon_rows is None else lexicon_rows
-    if from_html:
-        return extract_triples_from_html(pages, lex)
-    return extract_triples_fused(pages, lex)
+    return triple_rows(fused_triples_stage(pages, lexicon_rows, from_html))
 
 
 def run_pipeline(
@@ -65,16 +57,16 @@ def run_pipeline(
     All storage goes through the triple-sink seam (`sources.tables`):
     the default is `ParquetTripleSink(out_dir)`; pass an `IcebergTripleSink`
     to land the same plan on Iceberg tables — no plan code changes."""
-    from ..sources.tables import ParquetTripleSink
-
     if sink is None:
         if out_dir is None:
             raise ValueError("run_pipeline needs out_dir or an explicit sink")
         sink = ParquetTripleSink(out_dir)
     run_id = run_id or dt.datetime.now(dt.timezone.utc).strftime("run_%Y%m%dT%H%M%S%f")
 
+    # pages has one consumer (the fused stage), so it is not pinned: a pin
+    # would hold every page's HTML in the block manager
     pages = spark.read.parquet(pages_path)
-    total_pages = pages.count()
+    total_pages = new_pages = pages.count()
 
     if resume:
         # The done-set excludes THIS run_id: a same-run_id retry after a
@@ -89,16 +81,15 @@ def run_pipeline(
         done = sink.read_done_urls(spark, exclude_run_id=run_id)
         if done is not None:
             pages = pages.join(done, "url", "left_anti")
-
-    pages = pages.localCheckpoint(eager=False)
-    new_pages = pages.count()
+            new_pages = pages.count()  # reads the url column only
+    summary = {
+        "run_id": run_id,
+        "total_pages": total_pages,
+        "new_pages": new_pages,
+        "new_triples": 0,
+    }
     if new_pages == 0:
-        return {
-            "run_id": run_id,
-            "total_pages": total_pages,
-            "new_pages": 0,
-            "new_triples": 0,
-        }
+        return summary
 
     # Commit protocol (atomicity): triples land under their run_id partition
     # FIRST, the lineage rows that reference the run_id land SECOND, and
@@ -111,48 +102,34 @@ def run_pipeline(
     # second copy of every triple under them.  Physical layout (the parquet
     # sink's explicit `bucket` column vs Iceberg's hidden bucket(N, subj)
     # transform) is the SINK's concern — plan code only stamps run_id.
-    triples = build_triples(pages, lexicon_rows, from_html=from_html)
-    sink.write_run_triples(triples.withColumn("run_id", F.lit(run_id)))
+    # Pinned once: the triples write materializes the pin, and the lineage
+    # write and the run total read its page rows from it.
+    staged = fused_triples_stage(pages, lexicon_rows, from_html).localCheckpoint(eager=False)
+    sink.write_run_triples(triple_rows(staged).withColumn("run_id", F.lit(run_id)))
 
-    # per-url lineage: every new page commits a row even if it emitted no
-    # triples (negative pages must not be reprocessed forever).  Reads back
-    # ONLY this run's partition (pruned scan — O(new pages), not O(corpus)).
-    # Pinned: the lineage join and the run total below both consume it, and
-    # each would otherwise re-read the landed triples.
-    per_url = (
-        sink.read_run_triples(spark, run_id)
-        .groupBy("url")
-        .agg(F.count(F.lit(1)).alias("n_triples"))
-        .localCheckpoint(eager=False)
-    )
-    lineage = (
-        pages.select("url")
-        .join(per_url, "url", "left")
-        .select(
+    # per-url lineage from the page rows: every new page commits a row even
+    # if it emitted no triples (negative pages must not be reprocessed forever)
+    per_url = page_rows(staged)
+    sink.append_lineage(
+        per_url.select(
             "url",
             F.lit(run_id).alias("run_id"),
             F.lit(None).cast("long").alias("n_mentions"),
-            F.coalesce("n_triples", F.lit(0)).alias("n_triples"),
+            "n_triples",
             F.lit("ok").alias("status"),
             F.lit(None).cast("string").alias("error"),
             F.current_timestamp().alias("committed_ts"),
         )
     )
-    sink.append_lineage(lineage)
 
-    new_triples = int(per_url.agg(F.sum("n_triples")).first()[0] or 0)
-    summary = {
-        "run_id": run_id,
-        "total_pages": total_pages,
-        "new_pages": new_pages,
-        "new_triples": new_triples,
-    }
+    summary["new_triples"] = int(per_url.agg(F.sum("n_triples")).first()[0] or 0)
     # run-level metrics row alongside the commit (reference corpus summary,
     # src/extractor.py:946-955; north rule: lineage + metrics per commit)
     sink.append_metrics(
-        spark.createDataFrame(
-            [(run_id, total_pages, new_pages, new_triples)],
+        literal_frame(
+            spark,
             "run_id string, total_pages long, new_pages long, new_triples long",
+            tuple(summary.values()),
         ).withColumn("committed_ts", F.current_timestamp())
     )
     return summary
@@ -167,8 +144,6 @@ def read_triples(spark: SparkSession, out_dir: str | None = None, sink=None) -> 
     urls are reprocessed by the next resume under a new run_id and only that
     run's copy is visible, never both.  (On Iceberg a single snapshot commit
     replaces this pair-join.)"""
-    from ..sources.tables import ParquetTripleSink
-
     if sink is None:
         if out_dir is None:
             raise ValueError("read_triples needs out_dir or an explicit sink")

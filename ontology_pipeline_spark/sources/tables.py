@@ -11,6 +11,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 # ---------------------------------------------------------------------------
@@ -23,7 +24,7 @@ from pyspark.sql import functions as F
 class ParquetTripleSink:
     """Parquet + hand-rolled two-phase commit (the sandbox/local impl; the
     exact protocol semantics are documented and crash-tested in
-    plans/pipeline.py).  Layout:
+    plans/pipeline.py); a commit never reads its run back.  Layout:
 
         <root>/triples/run_id=<r>/bucket=<b>/part-*.parquet
         <root>/lineage/run_id=<r>/part-*.parquet   (append)
@@ -68,10 +69,6 @@ class ParquetTripleSink:
             .partitionBy("run_id", "bucket")
             .parquet(self.triples_path)
         )
-
-    def read_run_triples(self, spark: SparkSession, run_id: str) -> DataFrame:
-        """This run's landed triples (partition-pruned scan)."""
-        return spark.read.parquet(self.triples_path).filter(F.col("run_id") == run_id)
 
     def append_lineage(self, df: DataFrame) -> None:
         df.write.mode("append").parquet(self.lineage_path)
@@ -151,9 +148,6 @@ class IcebergTripleSink:
     def write_run_triples(self, df: DataFrame) -> None:
         df.writeTo(self.triples_table).overwritePartitions()
 
-    def read_run_triples(self, spark: SparkSession, run_id: str) -> DataFrame:
-        return spark.read.table(self.triples_table).filter(F.col("run_id") == run_id)
-
     def append_lineage(self, df: DataFrame) -> None:
         df.writeTo(self.lineage_table).append()
 
@@ -166,6 +160,15 @@ class IcebergTripleSink:
             spark.read.table(self.lineage_table).select("run_id", "url").distinct()
         )
         return t.join(committed, ["run_id", "url"], "left_semi").drop("bucket", "run_id")
+
+
+def literal_frame(spark: SparkSession, ddl: str, row: tuple) -> DataFrame:
+    """The one-row frame `row` typed by `ddl`, built from JVM literals: a
+    `createDataFrame` row goes through Python and takes ~2x as long to write."""
+    fields = StructType.fromDDL(ddl).fields
+    return spark.range(1).select(
+        *[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(row, fields)]
+    )
 
 
 def _hadoop_exists(spark: SparkSession, path: str) -> bool:

@@ -25,7 +25,7 @@ AUDITED = [
 def main() -> None:
     import __spark_entry__ as entrymod
     from ontology_pipeline_spark.lexicon import lexicon_rows
-    from ontology_pipeline_spark.plans.pipeline import build_triples
+    from ontology_pipeline_spark.operators.relations import fused_triples_stage
     from ontology_pipeline_spark.session import get_spark
     from ontology_pipeline_spark.synth import generate_corpus, pages_df
 
@@ -38,9 +38,9 @@ def main() -> None:
         print(f"\n========== {name} ==========")
         qs[name](spark, sf_dir).explain("formatted")
 
-    print("\n========== kg build_triples (fused hot path) ==========")
+    print("\n========== kg fused_triples_stage (the rows run_pipeline pins) ==========")
     pages = pages_df(spark, generate_corpus(n_pages=100, seed=5))
-    build_triples(pages, lexicon_rows(), from_html=True).explain("formatted")
+    fused_triples_stage(pages, lexicon_rows(), from_html=True).explain("formatted")
 
     print("\n========== web-text cleaning projection (fused into the scan) ==========")
     # the round-3 cleaning stage must stay a pure-expression projection (no

@@ -67,3 +67,26 @@ def test_sent_id_alignment_unicode_whitespace(spark):
         i: s for i, s in enumerate(_SENT_SPLIT.split(text)) if s.strip()
     }
     assert jvm_sents == py_sents
+
+
+def test_sent_id_alignment_every_python_whitespace(spark):
+    """Every code point Python's \\s matches (29 of them) splits a sentence
+    after a period on both sides: `sentences()` and the mention rows of
+    `scan_text` agree on sent_id.  Java's (?U)\\s alone misses the
+    separators U+001C-U+001F, which `str.isspace` counts as whitespace."""
+    import re
+
+    from ontology_pipeline_spark.operators.mentions import _compile, scan_text
+
+    spaces = [c for c in map(chr, range(0x110000)) if re.match(r"\s", c)]
+    assert len(spaces) == 29
+    texts = {f"u{ord(c):04x}": f"Sleep quality.{c}VO2 Max Test here." for c in spaces}
+    df = spark.createDataFrame(list(texts.items()), ["url", "text"])
+    jvm = {(r["url"], r["sent_id"]): r["sentence"] for r in sentences(df).collect()}
+    pattern, lookup = _compile(tuple(tuple(r) for r in lexicon_rows()))
+    for url, text in texts.items():
+        ments = scan_text(url, text, pattern, lookup)
+        assert [m[1] for m in ments] == [0, 1], (url, ments)
+        for _u, sent_id, pos, surface, _c, _k in ments:
+            sent = jvm.get((url, sent_id), "")
+            assert sent[pos : pos + len(surface)] == surface, (url, sent_id, sent)

@@ -259,10 +259,6 @@ def test_commit_protocol_ordering_through_recording_sink(spark, tmp_path):
             self.calls.append(("write_run_triples", tuple(df.columns)))
             self.inner.write_run_triples(df)
 
-        def read_run_triples(self, spark, run_id):
-            self.calls.append(("read_run_triples", run_id))
-            return self.inner.read_run_triples(spark, run_id)
-
         def append_lineage(self, df):
             self.calls.append(("append_lineage", tuple(df.columns)))
             self.inner.append_lineage(df)
@@ -294,7 +290,6 @@ def test_commit_protocol_ordering_through_recording_sink(spark, tmp_path):
     assert names == [
         "read_done_urls",      # resume set first (excluding own run_id)
         "write_run_triples",   # phase 1: triples land under run_id
-        "read_run_triples",    # per-url counts from the landed partition
         "append_lineage",      # phase 2: lineage makes the run visible
         "append_metrics",      # run-level metrics alongside the commit
     ]
@@ -330,3 +325,85 @@ def test_distributed_pages_deterministic_and_extractable(spark):
     assert rows_a == rows_b and len(rows_a) == 300
     assert [f.name for f in a.schema.fields] == ["url", "warc_ts", "html", "text", "lang"]
     assert build_triples(a, lexicon_rows(), from_html=True).count() > 0
+
+
+def test_run_pipeline_job_count_pin(spark, tmp_path):
+    """Job-count pin for one commit: the fused stage's output is pinned once,
+    the triples write materializes the pin, the lineage write and the run
+    total read its page rows, and the metrics row is built from literals.
+    A warm run_pipeline into a fresh sink must not run more Spark jobs than
+    measured after that change (8; it ran 13 while lineage re-read the
+    written triples and joined them back to the pinned pages)."""
+    corpus = generate_corpus(n_pages=60, seed=5)
+    src = str(tmp_path / "pages")
+    pages_df(spark, corpus).write.parquet(src)
+    sc = spark.sparkContext
+    jobs = []
+    for attempt in ("warm-up", "measured"):
+        group = f"pipeline-job-pin-{attempt}"
+        sc.setJobGroup(group, group)
+        try:
+            assert run_pipeline(spark, src, str(tmp_path / attempt))["new_pages"] == 60
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[1] <= 8, jobs
+
+
+def test_lineage_counts_match_committed_triples(spark, tmp_path):
+    """Lineage n_triples is each url's count of committed triples (0 for a
+    page with none: empty, triple-free and non-English pages), on a first
+    run and on a resumed run; the summary's new_triples is their sum."""
+    from ontology_pipeline_spark.schemas import PAGES
+
+    corpus = generate_corpus(n_pages=80, seed=13)
+    blank = [
+        ("neg://none", None, None, None, None),
+        ("neg://plain", None, b"<p>Nothing to see here.</p>", "Nothing to see here.", "en"),
+    ]
+    half = [p for i, p in enumerate(corpus.pages) if i % 2 == 0] + blank[:1]
+    src_half = str(tmp_path / "pages_half")
+    src_full = str(tmp_path / "pages_full")
+    spark.createDataFrame(half, schema=PAGES).write.parquet(src_half)
+    spark.createDataFrame(corpus.pages + blank, schema=PAGES).write.parquet(src_full)
+    out = str(tmp_path / "kg")
+
+    committed_before = 0
+    for src, urls in ((src_half, half), (src_full, corpus.pages + blank)):
+        summary = run_pipeline(spark, src, out)
+        committed = {
+            r["url"]: r["count"] for r in read_triples(spark, out).groupBy("url").count().collect()
+        }
+        lineage = {
+            r["url"]: r["n_triples"] for r in spark.read.parquet(f"{out}/lineage").collect()
+        }
+        assert set(lineage) == {p[0] for p in urls}
+        assert lineage == {u: committed.get(u, 0) for u in lineage}
+        assert lineage["neg://none"] == 0 and 0 in [lineage[p[0]] for p in corpus.pages if p[0] in lineage]
+        assert summary["new_triples"] == sum(committed.values()) - committed_before
+        committed_before = sum(committed.values())
+
+
+def test_triples_files_keep_required_columns(spark, tmp_path):
+    """The written triples keep TRIPLES' non-null columns as parquet
+    `required` fields (a nullable projection costs definition levels), and
+    lineage n_triples stays required too."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from ontology_pipeline_spark.schemas import TRIPLES
+
+    src = str(tmp_path / "pages")
+    pages_df(spark, generate_corpus(n_pages=40, seed=9)).write.parquet(src)
+    out = tmp_path / "kg"
+    run_pipeline(spark, src, str(out))
+    files = glob.glob(str(out / "triples" / "**" / "*.parquet"), recursive=True)
+    assert files
+    for f in files:
+        schema = pq.read_schema(f)
+        assert schema.names == TRIPLES.fieldNames(), f
+        assert not any(field.nullable for field in schema), (f, schema)
+    for f in glob.glob(str(out / "lineage" / "**" / "*.parquet"), recursive=True):
+        assert not pq.read_schema(f).field("n_triples").nullable, f
