@@ -104,10 +104,12 @@ def fused_triples_stage(
 
     def make_row_fn():
         pattern, lookup = _compile(lex)
+        names = TRIPLES.fieldNames()
 
         def rows(url, val):
             triples = _pair_triples(scan_text(url, to_text(val), pattern, lookup))
-            return [*(t + (-1,) for t in triples), ("", "", "", "", "", url, len(triples))]
+            page = (*(url if n == "url" else "" for n in names), len(triples))
+            return [*(t + (-1,) for t in triples), page]
 
         return rows
 

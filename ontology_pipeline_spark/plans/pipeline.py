@@ -63,31 +63,31 @@ def run_pipeline(
         sink = ParquetTripleSink(out_dir)
     run_id = run_id or dt.datetime.now(dt.timezone.utc).strftime("run_%Y%m%dT%H%M%S%f")
 
-    # pages has one consumer (the fused stage), so it is not pinned: a pin
-    # would hold every page's HTML in the block manager
+    # not pinned (that would hold every page's HTML): its one consumer is the fused stage
     pages = spark.read.parquet(pages_path)
     total_pages = new_pages = pages.count()
 
-    if resume:
-        # The done-set excludes THIS run_id: a same-run_id retry after a
-        # crash mid-lineage-append would otherwise skip the urls whose
-        # lineage rows landed before the crash, and the dynamic (run_id,
-        # bucket) partition overwrite below would then REPLACE bucket
-        # partitions that also hold those urls' triples — permanently losing
-        # committed rows (their lineage would claim them committed with no
-        # rows behind it).  Reprocessing the whole run under its own run_id
-        # makes the overwrite complete and idempotent; urls committed under
-        # OTHER runs stay skipped.
-        done = sink.read_done_urls(spark, exclude_run_id=run_id)
-        if done is not None:
-            pages = pages.join(done, "url", "left_anti")
-            new_pages = pages.count()  # reads the url column only
-    summary = {
-        "run_id": run_id,
-        "total_pages": total_pages,
-        "new_pages": new_pages,
-        "new_triples": 0,
-    }
+    # The done-set excludes THIS run_id: a same-run_id retry after a crash
+    # mid-lineage-append would otherwise skip the urls whose lineage rows
+    # landed before the crash, and the dynamic (run_id, bucket) partition
+    # overwrite below would then REPLACE bucket partitions that also hold
+    # those urls' triples — permanently losing committed rows (their lineage
+    # would claim them committed with no rows behind it).  Reprocessing the
+    # whole run under its own run_id makes the overwrite complete and
+    # idempotent; urls committed under OTHER runs stay skipped.
+    done = sink.read_done_urls(spark, exclude_run_id=run_id) if resume else None
+    if done is not None:
+        pages = pages.join(done, "url", "left_anti")
+
+    # Pinned once, by its first action (a resume's count of the page rows,
+    # else the triples write): the stage and the anti-join (a lineage scan
+    # and a distinct over every committed url) run once, and new_pages is
+    # exactly the set this commit writes.
+    staged = fused_triples_stage(pages, lexicon_rows, from_html).localCheckpoint(eager=False)
+    per_url = page_rows(staged)
+    if done is not None:
+        new_pages = per_url.count()
+    summary = dict(run_id=run_id, total_pages=total_pages, new_pages=new_pages, new_triples=0)
     if new_pages == 0:
         return summary
 
@@ -102,14 +102,10 @@ def run_pipeline(
     # second copy of every triple under them.  Physical layout (the parquet
     # sink's explicit `bucket` column vs Iceberg's hidden bucket(N, subj)
     # transform) is the SINK's concern — plan code only stamps run_id.
-    # Pinned once: the triples write materializes the pin, and the lineage
-    # write and the run total read its page rows from it.
-    staged = fused_triples_stage(pages, lexicon_rows, from_html).localCheckpoint(eager=False)
     sink.write_run_triples(triple_rows(staged).withColumn("run_id", F.lit(run_id)))
 
     # per-url lineage from the page rows: every new page commits a row even
     # if it emitted no triples (negative pages must not be reprocessed forever)
-    per_url = page_rows(staged)
     sink.append_lineage(
         per_url.select(
             "url",
@@ -129,7 +125,7 @@ def run_pipeline(
         literal_frame(
             spark,
             "run_id string, total_pages long, new_pages long, new_triples long",
-            tuple(summary.values()),
+            (run_id, total_pages, new_pages, summary["new_triples"]),
         ).withColumn("committed_ts", F.current_timestamp())
     )
     return summary

@@ -167,7 +167,7 @@ def literal_frame(spark: SparkSession, ddl: str, row: tuple) -> DataFrame:
     `createDataFrame` row goes through Python and takes ~2x as long to write."""
     fields = StructType.fromDDL(ddl).fields
     return spark.range(1).select(
-        *[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(row, fields)]
+        *[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(row, fields, strict=True)]
     )
 
 

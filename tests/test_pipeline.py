@@ -351,6 +351,33 @@ def test_run_pipeline_job_count_pin(spark, tmp_path):
     assert jobs[1] <= 8, jobs
 
 
+def test_resume_commit_job_count_pin(spark, tmp_path):
+    """Job-count pin for a resume commit (a sink already holding lineage for
+    half the pages): new_pages is counted off the pinned stage output, so
+    the anti-join against the committed urls runs once.  Measured at 13
+    jobs; counting the anti-joined pages before the stage ran it twice (15),
+    and pinning the anti-joined pages themselves ran 16."""
+    corpus = generate_corpus(n_pages=60, seed=5)
+    src_half = str(tmp_path / "pages_half")
+    src_full = str(tmp_path / "pages_full")
+    pages_df(spark, corpus).write.parquet(src_full)
+    spark.read.parquet(src_full).orderBy("url").limit(30).write.parquet(src_half)
+    sc = spark.sparkContext
+    jobs = []
+    for attempt in ("warm-up", "measured"):
+        out = str(tmp_path / attempt)
+        run_pipeline(spark, src_half, out)
+        group = f"resume-job-pin-{attempt}"
+        sc.setJobGroup(group, group)
+        try:
+            assert run_pipeline(spark, src_full, out)["new_pages"] == 30
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[1] <= 13, jobs
+
+
 def test_lineage_counts_match_committed_triples(spark, tmp_path):
     """Lineage n_triples is each url's count of committed triples (0 for a
     page with none: empty, triple-free and non-English pages), on a first
